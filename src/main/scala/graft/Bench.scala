@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — runs the headline queries against
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with per-query and
@@ -31,161 +32,32 @@ package graft
   *     correctness gate;
   *   - a failed query records `-1` and its error under `"errors"`
   *     instead of masquerading as a fast run;
-  *   - each query is timed `SPARK_GRAFT_REPS` times (default 3) and the
-  *     MEDIAN is reported (per-query minima on a separate
-  *     `"total_min"` line), so a
+  *   - each query is timed [[Reps]] times and the MEDIAN is reported
+  *     (per-query minima on a separate `"total_min"` line), so a
   *     single contended run or stray full-GC pause can no longer
   *     masquerade as a 4× per-query regression — n=1 timings on a shared
   *     machine were observed swinging exactly that much with zero code
-  *     change.
+  *     change. The numbers are raw seconds on the host that ran them:
+  *     compare two trees by adjacent runs on one host.
   */
 object Bench {
+  val Reps = 3
+  val WarmDir = "/root/testdata/sf0.001"
+
+  /** Per slot: its timed seconds, or the error that stopped it. */
+  type Slot = (String, Either[String, Vector[Double]])
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.local(cpus)
-
+    val sfDir = Runner.sfDir
+    val spark = Runner.session()
     def materialize(name: String, dir: String): Unit =
-      org.apache.spark.sql.graft.PlanSurgery
-        .stripGlobalSort(SparkEntry.queries(name)(spark, dir))
-        .write.format("noop").mode("overwrite").save()
+      Runner.noop(Runner.query(spark, name, dir))
 
-    // optional comma-separated subset for local iteration on a few
-    // queries (the driver never sets this — full list by default)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val benched = SparkEntry.benchQueries
-      .filter(q => only.forall(_.contains(q)))
-
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
-      "/root/testdata/sf0.001")
-    if (warmDir != sfDir) benched.foreach { name =>
-      // NonFatal only: a warmup OOM must crash, not leave a poisoned JVM
-      // silently producing garbage timings.
-      try materialize(name, warmDir)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    // Drop caches the warmup queries persisted (shingle/posting frames):
-    // accumulated blocks would pressure executor memory and distort the
-    // timed runs at larger scale factors.
-    spark.catalog.clearCache()
-
-    // ---- calibration slot (not part of the query total) -------------
-    // A fixed-cost synthetic job — pure integer arithmetic over
-    // spark.range, no repo data, no shuffle — measuring the BOX (cpu
-    // speed + scheduler latency + contention), not the engine. The
-    // reported total divides out box speed via
-    //   total_norm = total * (CalibRef / calib)
-    // so gate comparisons across differently-loaded machines stop
-    // depending on idle-box luck (round-9/10 observed the same tree
-    // at 68 s idle vs 82 s straight after the test suite — ±20% —
-    // while per-slot ratios stayed flat). CalibRef is the idle-box (in-bench, truly quiesced)
-    // median on the build box, pinned once; bench_schema versions the
-    // methodology (v3 = r9's stripGlobalSort slot set + r10's calib)
-    // per the round-9 advice to re-baseline explicitly
-    // (v4 = v3 + run-spanning calibration, see below).
-    val CalibRef = 0.72
-    def calibOnce(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 4096L << 20, 1L, 64)
-        .selectExpr("sum(((id % 1048576) * 2654435761) % 1000003) AS s")
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    // Second, WORKLOAD-MATCHED probe (bench_schema 5): the integer
-    // probe above is pure register arithmetic, and the round-10
-    // host-variance investigation (SURVEY appendix) showed it moving
-    // +8% while allocation/memory-bandwidth-heavy text slots moved
-    // +15-25% — a CPU probe under-corrects for the degradation the
-    // slots actually feel. This one hashes per-row strings (allocation
-    // + md5 + UTF-8 traffic, the text-slot resource mix).
-    // CalibMemRef pinned from the round-10 close run where the CPU
-    // probe read 0.717 — i.e. the SAME quiesced regime CalibRef=0.72
-    // was pinned in (raw total 63.5 s, under the gate). Validation
-    // across that session's degraded/recovered run pair: the mem
-    // probe's ratio (1.06/0.91 = 1.16) tracked the slots' actual
-    // drift (72.1/63.5 = 1.14) far better than the CPU probe's
-    // (0.801/0.717 = 1.12) — the reason this probe exists.
-    val CalibMemRef = 0.91
-    def calibMemOnce(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 48L << 20, 1L, 64)
-        .selectExpr(
-          "sum(length(md5(CAST(id % 16777216 AS STRING)))) AS s")
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    calibOnce() // untimed: JIT + scheduler warm, like every slot
-    calibMemOnce()
-    // Box speed is sampled at the START, MIDPOINT, and END of the run
-    // (3 samples each; calib = median of 9) — bench_schema 4. The v3
-    // single pre-run sample misrepresented a DRIFTING host: observed
-    // back-to-back full runs at raw 83.6 s with pre-run calib 0.712
-    // (normalized 84.5 — the host slowed AFTER the sample) then raw
-    // 77.3 s with calib 0.902 (normalized 61.7); spanning the run
-    // makes the normalization see the same host regime the slots saw.
-    val calibSamples = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val calibMemSamples = scala.collection.mutable.ArrayBuffer.empty[Double]
-    calibSamples ++= (1 to 3).map(_ => calibOnce())
-    calibMemSamples ++= (1 to 3).map(_ => calibMemOnce())
-
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    var errors = List.empty[(String, String)]
-    val midpoint = benched.size / 2
-    val results = benched.zipWithIndex.map { case (name, slotIdx) =>
-      if (slotIdx == midpoint) {
-        calibSamples ++= (1 to 3).map(_ => calibOnce())
-        calibMemSamples ++= (1 to 3).map(_ => calibMemOnce())
-      }
-      val times = (1 to reps).iterator.map { _ =>
-        val t0 = System.nanoTime()
-        val t = try {
-          materialize(name, sfDir)
-          (System.nanoTime() - t0) / 1e9
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            errors ::= name -> e.toString.take(200)
-            -1.0
-        }
-        spark.catalog.clearCache() // cleanup excluded from the timing
-        // quiesce the heap between runs: otherwise one arbitrary run
-        // per query absorbs the full-GC pause of everything before it
-        System.gc()
-        t
-      }.takeWhile(_ >= 0).toVector // a failed rep poisons the query: stop
-      if (times.length < reps) name -> (-1.0, -1.0)
-      else name -> (times.sorted.apply(reps / 2), times.min)
-    }
-    calibSamples ++= (1 to 3).map(_ => calibOnce())
-    calibMemSamples ++= (1 to 3).map(_ => calibMemOnce())
-    val calib = calibSamples.sorted.apply(calibSamples.size / 2)
-    val calibMem = calibMemSamples.sorted.apply(calibMemSamples.size / 2)
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-    def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    def f2(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
-    // Headline per-query medians at TWO decimals: the final line must fit
-    // the harness's 2000-char tail window WHOLE, and at 90 bench slots the
-    // 3-decimal form (~1.97 KB) left under 30 chars of margin. 10 ms
-    // precision is still well under the run-to-run noise floor; the
-    // 3-decimal per-query values survive on the earlier queries_min line.
-    val qs = results.map { case (k, (med, _)) => jstr(k) + ":" + f2(med) }
-      .mkString("{", ",", "}")
-    val qsMin = results.map { case (k, (_, mn)) => jstr(k) + ":" + f3(mn) }
-      .mkString("{", ",", "}")
-    // empty errors map elided: 12 more chars of tail margin on the line
-    // that must not overflow
-    val errs =
-      if (errors.isEmpty) ""
-      else errors.reverse.map { case (k, v) => jstr(k) + ":" + jstr(v) }
-        .mkString(""""errors":{""", ",", "},")
-    val total = results.map(_._2._1).filter(_ >= 0).sum
-    val totalMin = results.map(_._2._2).filter(_ >= 0).sum
+    val benched = Runner.selected(SparkEntry.benchQueries)
+    // warm-up failures are ignored here; the timed run reports them
+    if (WarmDir != sfDir)
+      benched.foreach(name => Runner.step(spark)(materialize(name, WarmDir)))
+    val slots = measure(spark, benched)(materialize(_, sfDir))
     // Stop FIRST, then print: the harness that launched us keeps only the
     // last ~2KB of combined output, and Spark's shutdown logging printed
     // after the metric line used to push it out of that window. The
@@ -194,13 +66,57 @@ object Bench {
     // line as a scalar so the judge always sees it.
     spark.sparkContext.setLogLevel("ERROR")
     spark.stop()
-    // reps rides THIS line (not the final one): at 96 slots the final
-    // line needs every tail-window char for the per-query map
-    // bench_schema 6 = schema 5 + shuffle partitions sized to the SF
-    // (cpus/2 session default — see Sessions.builder; slot set and
-    // calibration pins unchanged, probes are map-side-dominated)
-    println(s"""{"metric":"total_min","value":${f3(totalMin)},"unit":"sec","reps":$reps,"bench_schema":6,"queries_min":$qsMin}""")
-    // sf as basename: the full path cost 15 chars of tail-window margin
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","total_min":${f3(totalMin)},"calib":${f3(calib)},"total_norm":${f3(total * CalibRef / calib)},"calib_mem":${f2(calibMem)},"norm_mem":${f2(total * CalibMemRef / calibMem)},"queries":$qs,$errs"sf":"${new java.io.File(sfDir).getName}"}""")
+    println(minLine(slots))
+    println(finalLine(slots, sfDir))
+  }
+
+  /** Times `run` [[Reps]] times per name through [[Runner.step]]; a
+    * failed rep poisons the slot and skips its remaining reps.
+    */
+  def measure(spark: SparkSession, names: Seq[String])(
+      run: String => Unit): Seq[Slot] =
+    names.map { name =>
+      name -> (1 to Reps).foldLeft[Either[String, Vector[Double]]](
+        Right(Vector.empty)) { (done, _) =>
+        done.flatMap(ts =>
+          Runner.step(spark)(Runner.seconds(run(name))).map(ts :+ _))
+      }
+    }
+
+  /** (median, min) seconds per slot; -1 for a failed one. */
+  private def stats(slots: Seq[Slot]): Seq[(String, (Double, Double))] =
+    slots.map { case (name, r) =>
+      name -> r.fold(_ => (-1.0, -1.0),
+        ts => (ts.sorted.apply(ts.size / 2), ts.min))
+    }
+
+  private def total(vs: Seq[Double]): Double = vs.filter(_ >= 0).sum
+
+  /** reps rides THIS line (not the final one): at 96 slots the final
+    * line needs every tail-window char for the per-query map.
+    * bench_schema 7 = schema 6 without the box-speed probes: raw
+    * seconds only, same slot set.
+    */
+  def minLine(slots: Seq[Slot]): String = {
+    val st = stats(slots)
+    val qsMin = st.map { case (k, (_, mn)) => Runner.jstr(k) + ":" +
+      Runner.num(mn, 3) }.mkString("{", ",", "}")
+    s"""{"metric":"total_min","value":${Runner.num(total(st.map(_._2._2)), 3)},"unit":"sec","reps":$Reps,"bench_schema":7,"queries_min":$qsMin}"""
+  }
+
+  /** The line the harness parses; it must fit the 2000-char tail
+    * window WHOLE, hence two-decimal medians (10 ms is still well under
+    * the run-to-run noise floor; the 3-decimal values survive on
+    * [[minLine]]), an elided empty errors map and the sf basename.
+    */
+  def finalLine(slots: Seq[Slot], sfDir: String): String = {
+    val st = stats(slots)
+    val qs = st.map { case (k, (med, _)) => Runner.jstr(k) + ":" +
+      Runner.num(med, 2) }.mkString("{", ",", "}")
+    val errors = slots.collect { case (k, Left(e)) =>
+      Runner.jstr(k) + ":" + Runner.jstr(e.take(200)) }
+    val errs =
+      if (errors.isEmpty) "" else errors.mkString(""""errors":{""", ",", "},")
+    s"""{"metric":"total","value":${Runner.num(total(st.map(_._2._1)), 3)},"unit":"sec","total_min":${Runner.num(total(st.map(_._2._2)), 3)},"queries":$qs,$errs"sf":"${new java.io.File(sfDir).getName}"}"""
   }
 }

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One SparkSession recipe for every harness main (Bench, Verify,
-  * Profile, Stress, Explain) — the settings below were each measured in
+/** One SparkSession recipe for the harness mains (via [[Runner]]) and
+  * the test session — the settings below were each measured in
   * earlier rounds and MUST stay in sync across the tools, so they live
   * here once.
   */
@@ -28,22 +28,16 @@ object Sessions {
       // constant is cluster-tuned upward (or AQE coalesces a large
       // initial count) — the principle is partitions track DATA
       // volume, which a fixed per-core count does not.
-      // SPARK_GRAFT_SHUFFLE overrides for harness experiments (the
-      // SPARK_GRAFT_AQE pattern); the driver never sets it.
       .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-          scala.util.Try((cpus.toInt / 2).max(1).toString)
-            .getOrElse(cpus)))
+        scala.util.Try((cpus.toInt / 2).max(1).toString).getOrElse(cpus))
       .config("spark.sql.session.timeZone", "UTC")
       // events.parquet stores TIMESTAMP(NANOS); read as long and let
       // Tables.loadEvents truncate to micros (matches DuckDB)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      // AQE on by default (the 100 TB posture: runtime coalescing +
-      // skew splitting); SPARK_GRAFT_AQE=false is a harness experiment
-      // knob for quantifying AQE's per-stage driver cost at small SF
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      // AQE on (the 100 TB posture: runtime coalescing + skew
+      // splitting)
+      .config("spark.sql.adaptive.enabled", "true")
       // keep FALSE: letting AQE re-plan cached outputs coalesces small
       // persisted frames to ~1 partition, serializing their CPU-heavy
       // consumers (measured 2× on pipeline_curate, SURVEY §9). The

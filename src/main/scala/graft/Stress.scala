@@ -5,7 +5,7 @@ import graft.text.{Curation, SeqPack}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Scale-stress main (dev tool, like [[Profile]]): runs each operator
+/** Scale-stress main (dev tool, like [[Trace]]): runs each operator
   * family on a deliberately adversarial blow-up of the sf0.1 testdata
   * and prints wall-clock seconds. These are the numbers SURVEY §2.10 /
   * §9 cite; re-run after touching any hot-path operator.
@@ -32,8 +32,8 @@ object Stress {
         "mmr", "symdel", "linkpred", "binquant1m", "hardmine1m",
         "coldcatalog", "hotband", "cowtable", "txlog100k", "txlog1m",
         "bm25del", "bm25lsm")
-    val spark = Sessions.local("32")
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = Runner.session()
+    val dir = Runner.sfDir
 
     def timed(label: String)(body: => Long): Unit = {
       val t0 = System.nanoTime()

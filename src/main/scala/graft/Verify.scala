@@ -6,40 +6,20 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.local(cpus)
+    val spark = Runner.session()
     new java.io.File(outDir).mkdirs()
-    // local-iteration hook: SPARK_GRAFT_ONLY=q1,q2 dumps a subset; the
-    // driver sets no env, so its full-surface contract is unchanged
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // operators may persist() shared pipeline stages; drop them so a
-      // 25-query dump holds at most one query's caches at a time
-      spark.catalog.clearCache()
+    val selected = Runner.selected(SparkEntry.queries.keys.toSeq).toSet
+    selected.foreach { name =>
+      // the step drops the caches operators persist, so a long dump
+      // holds at most one query's caches at a time
+      Runner.step(spark)(SparkEntry.queries(name)(spark, sfDir)
+        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+        .left.foreach(e => System.err.println(s"[verify] $name failed: $e"))
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .filter { case (k, _) => selected(k) }
+      .map { case (k, v) => s"${Runner.jstr(k)}: ${Runner.jstr(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.operators.DriverReplay
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -26,21 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object Clusters {
 
-  /** Driver-iteration rail (round 17, the PageRank/BpeTrain
-    * discipline): when the PAIR RELATION fits comfortably on the
-    * driver, min-label propagation is O(edges) integer minima per
-    * round over arrays, and running each round as a Catalyst
-    * join+aggregate+count is pure orchestration cost (the benched
-    * dedup graphs are a few hundred verified pairs; the incremental /
-    * streaming faces run CC on batch-contracted graphs every call).
-    * 2^18 pairs keeps the probe collect at a few MB; larger graphs
-    * keep the distributed loop — the operator's scale story — and the
-    * replay applies the IDENTICAL seeded recurrence with the same
-    * maxIter bound, so results (and the non-convergence failure) are
-    * unchanged (spec-pinned equality against the distributed path).
-    */
-  private val DriverIterMaxEdges = 1 << 18
-
   /** (id, component) for every node in `pairs`, where component = the
     * minimum node id reachable through the pair graph.
     *
@@ -49,12 +35,12 @@ object Clusters {
     * @param bCol    second endpoint column
     * @param maxIter safety bound on propagation rounds
     * @param driverIterMaxEdges probe cap for the small-graph driver
-    *        iteration ([[DriverIterMaxEdges]]); 0 disables the fast
+    *        iteration ([[DriverReplay.MaxEdges]]); 0 disables the fast
     *        path (every round distributed regardless of size)
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 20,
-      driverIterMaxEdges: Int = DriverIterMaxEdges): DataFrame = {
+      driverIterMaxEdges: Int = DriverReplay.MaxEdges): DataFrame = {
     // both edge directions from ONE scan of `pairs` (explode, not a
     // union of two selects — a union re-runs the whole upstream pair
     // pipeline once per branch, which for LSH-derived pair graphs means
@@ -66,18 +52,24 @@ object Clusters {
       .distinct()
       .persist()
 
-    // small-graph fast path: one bounded probe against the SAME
-    // persisted frame the distributed rounds consume — rdd.take scans
-    // partitions incrementally over the identical lineage, so an
-    // over-cap graph loses nothing: the shuffle maps and cached
-    // partitions the probe ran ARE the prep the loop needs anyway.
-    // The probe sees the POST-coercion endpoint type (the explode
-    // unifies aCol/bCol), so the replay labels exactly the values the
-    // distributed loop would; node ordering and equality must agree
+    // small-graph fast path (DriverReplay): when the pair relation
+    // fits on the driver, min-label propagation is O(edges) integer
+    // minima per round, and running each round as a Catalyst
+    // join+aggregate+count is pure orchestration cost (the benched
+    // dedup graphs are a few hundred verified pairs; the incremental /
+    // streaming faces run CC on batch-contracted graphs every call).
+    // The replay applies the IDENTICAL seeded recurrence with the same
+    // maxIter bound, so results and the non-convergence failure are
+    // unchanged. One bounded probe against the SAME persisted frame
+    // the distributed rounds consume — rdd.take scans partitions
+    // incrementally over the identical lineage, so an over-cap graph
+    // loses nothing: the shuffle maps and cached partitions the probe
+    // ran ARE the prep the loop needs anyway. The probe sees the
+    // POST-coercion endpoint type (the explode unifies aCol/bCol), so
+    // the replay labels exactly the values the distributed loop would; node ordering and equality must agree
     // with Spark's (DriverReplay.orderedNodeType) and nulls decline.
     if (driverIterMaxEdges > 0 &&
-        graft.operators.DriverReplay.orderedNodeType(
-          edges.schema(0).dataType)) {
+        DriverReplay.orderedNodeType(edges.schema(0).dataType)) {
       val probe = edges.rdd.take(driverIterMaxEdges + 1)
       if (probe.isEmpty && maxIter >= 1) {
         // no pairs, no nodes: the empty (id, comp) frame the

@@ -16,6 +16,15 @@ import org.apache.spark.sql.types._
   * other.
   */
 object DriverReplay {
+
+  /** Probe cap of both fast paths: 2^18 edges keeps the probe collect
+    * at a few MB; a larger graph keeps the distributed loop, the
+    * operators' scale story. Each replay is the SAME integer
+    * recurrence as its distributed loop, so the two paths agree
+    * exactly (spec-pinned).
+    */
+  val MaxEdges: Int = 1 << 18
+
   def orderedNodeType(t: DataType): Boolean = t match {
     case StringType | BooleanType | ByteType | ShortType |
          IntegerType | LongType | DateType | TimestampType |

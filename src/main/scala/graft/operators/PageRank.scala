@@ -57,31 +57,17 @@ object PageRank {
     */
   private val CheckpointEvery = 8
 
-  /** Driver-iteration rail (round 17, the BpeTrain discipline): when
-    * the EDGE RELATION — not the raw input — fits comfortably on the
-    * driver, the iteration itself is O(edges · iters) integer adds
-    * over a few hundred KB of arrays, and running it as `iters`
-    * Catalyst queries is pure orchestration cost (measured: the benched
-    * 5-round run spent ~0.25 s computing its ~20-node transition graph
-    * and ~1 s scheduling 29 AQE stage-jobs over it). 2^18 edges keeps
-    * the probe collect at a few MB; anything larger keeps the
-    * distributed loop, whose per-round shape is the operator's scale
-    * story. The replayed recurrence is the SAME floor-divided integer
-    * arithmetic, so the two paths are bit-identical (property-pinned).
-    */
-  private val DriverIterMaxEdges = 1 << 18
-
   /** (node, rank_fp) for every node appearing as src or dst of
     * `edges`, after `iters` rounds. `weightCol` is the multi-edge
     * weight (pass a lit(1) column upstream for unweighted graphs).
     *
     * @param driverIterMaxEdges probe cap for the small-graph driver
-    *        iteration ([[DriverIterMaxEdges]]); 0 disables the fast
+    *        iteration ([[DriverReplay.MaxEdges]]); 0 disables the fast
     *        path (every round distributed regardless of size)
     */
   def ranks(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, iters: Int = 5,
-      driverIterMaxEdges: Int = DriverIterMaxEdges): DataFrame = {
+      driverIterMaxEdges: Int = DriverReplay.MaxEdges): DataFrame = {
     require(iters >= 1 && iters <= 100, s"iters in [1,100], got $iters")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
       col(weightCol).cast("bigint").as("w"))
@@ -99,12 +85,17 @@ object PageRank {
     val outW = e.groupBy("src").agg(sum(col("w")).as("outw"))
     val eOut = e.join(outW, "src").repartition(col("src")).persist()
 
-    // small-graph fast path: one bounded probe against the SAME
-    // persisted frame the distributed rounds consume — rdd.take scans
-    // partitions incrementally over the identical lineage, so an
-    // over-cap graph loses nothing: the shuffle maps and cached
-    // partitions the probe ran ARE the prep the loop needs anyway. If
-    // the whole annotated edge relation came back well-formed
+    // small-graph fast path (DriverReplay): when the edge relation
+    // fits on the driver, the iteration is O(edges · iters) integer
+    // adds, and running it as `iters` Catalyst queries is pure
+    // orchestration cost (measured: the benched 5-round run spent
+    // ~0.25 s computing its ~20-node transition graph and ~1 s
+    // scheduling 29 AQE stage-jobs over it). One bounded probe against
+    // the SAME persisted frame the distributed rounds consume —
+    // rdd.take scans partitions incrementally over the identical
+    // lineage, so an over-cap graph loses nothing: the shuffle maps
+    // and cached partitions the probe ran ARE the prep the loop needs
+    // anyway. If the whole annotated edge relation came back well-formed
     // (same-typed orderable endpoints, no nulls, weights ≥ 1 so all
     // masses stay nonnegative and truncating == floor division), the
     // recurrence replays driver-side over the Spark-computed

@@ -11,7 +11,7 @@ object Tables {
     * from the metastore/manifest once, it does not re-infer it from
     * data-file footers on every query. Bare-path `spark.read.parquet`
     * re-infers per call, and that inference measures 70–100 ms against
-    * ~10 ms for a schema-pinned read (round 17, LoadTime probe) — a
+    * ~10 ms for a schema-pinned read (round 17, sf0.1 read probe) — a
     * pure driver-side fixed cost paid by every query × rep in the
     * harness, and a footer-listing cost that only grows with file
     * count at scale. Metadata only (never row data); the harness's

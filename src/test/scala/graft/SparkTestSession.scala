@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * so this is per-`sbt test` run, not per-suite).
   *
   * Built from [[Sessions.builder]] — the SAME config the harness mains
-  * (Bench/Verify/Stress) run under, so plan-shape assertions in
+  * (Bench/Verify/Trace/Stress) run under, so plan-shape assertions in
   * PlanAuditSpec hold for the configuration that is actually measured,
   * not a divergent test-only one.
   */

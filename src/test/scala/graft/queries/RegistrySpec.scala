@@ -53,12 +53,13 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("the bench metric line fits the harness tail window") {
-    // ~22 bytes per slot on the final line ("name":12.34,) plus fixed
-    // overhead must stay under 2000 chars — the driver keeps only the
-    // last 2 KB of output, and an overflowing line zeroes the round's
-    // bench. Estimate with worst-case 6-char values.
-    // fixed overhead includes the calib/total_norm fields (bench v3)
-    val est = 130 + SparkEntry.benchQueries.map(_.length + 10).sum
-    assert(est < 2000, s"metric line estimate $est chars — trim slots")
+    // the harness keeps only the last 2 KB of Bench output, and an
+    // overflowing final line zeroes the run: render the real line for
+    // every slot at worst-case 6-char values
+    val slots =
+      SparkEntry.benchQueries.map(_ -> Right(Vector.fill(3)(999.99)))
+    val line = graft.Bench.finalLine(slots, "sf0.1")
+    assert(line.length < 2000,
+      s"metric line is ${line.length} chars — trim slots")
   }
 }
