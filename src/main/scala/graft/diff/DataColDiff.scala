@@ -1,8 +1,10 @@
 package graft.diff
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
+import scala.jdk.CollectionConverters._
 
 /** The core operator: per-row / per-column diff of two DataFrames that
   * share a schema and a primary key.
@@ -24,8 +26,9 @@ import org.apache.spark.sql.types.StringType
   *     differs, and there is no sentinel-collision risk. String columns
   *     were already null-blanked in [[Standardize.prepare]], so observable
   *     semantics match the reference exactly.
-  *   - stats are ONE aggregation each (groupBy/explode) instead of the
-  *     reference's 6+N count() jobs (find_datacol_diff.py:136-149).
+  *   - flag counts and per-column stats come from ONE aggregation over
+  *     the cached diff instead of the reference's 6+N count() jobs
+  *     (find_datacol_diff.py:136-149).
   */
 object DataColDiff {
 
@@ -231,24 +234,44 @@ object DataColDiff {
     diff.groupBy(Flag).agg(count(lit(1)).as("cnt"))
 
   /** Public API mirroring the reference's `compute_dataframe_diff`
-    * (find_dataframe_diff.py:7-23). Persists the join once, then runs
-    * exactly two jobs (flag counts + column stats). The returned `diff`
-    * and `stats` frames stay persisted for caller reuse; call
-    * `result.diff.unpersist()` when done (the reference never
-    * unpersists — find_datacol_diff.py:128).
+    * (find_dataframe_diff.py:7-23). Persists the join, then runs ONE
+    * summary action: a single aggregate over the cached diff, grouped
+    * by (flag, differing column), whose ≤ 3 + N rows give both the flag
+    * counts and the per-column counts on the driver. Only `diff` stays
+    * persisted; call `result.diff.unpersist()` when done (the reference
+    * never unpersists — find_datacol_diff.py:128). `stats` is a
+    * driver-local frame: collecting it launches no job, and it outlives
+    * the unpersist. Row-for-row and schema-equal to [[statsPlan]] and
+    * [[flagCountsPlan]] over the same diff (spec-gated).
     */
   def computeDataframeDiff(s1: DataFrame, s2: DataFrame, pks: Seq[String],
       lenient: Boolean = false, skewResilient: Boolean = false):
       Either[SchemaMismatch, DiffResult] =
     diffPlan(s1, s2, pks, lenient, skewResilient).map { diff =>
       diff.persist()
-      val fc = flagCountsPlan(diff).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      // one row per (flag, column): `entries` counts the column's diff
+      // entries, `rows` the diff rows (each row has exactly one pos 0,
+      // or one null pos when its array is empty). Only DIFF rows carry
+      // entries, so each column appears in one group.
+      val groups = diff
+        .select(col(Flag), posexplode_outer(col(s"$CompColArr.col_name")))
+        .groupBy(col(Flag), col("col"))
+        .agg(count(lit(1)).as("entries"),
+          count_if(coalesce(col("pos"), lit(0)) === 0).as("rows"))
+        .collect()
+      val fc = groups.groupMapReduce(_.getString(0))(_.getLong(3))(_ + _)
       val counts = FlagCounts(
         s1Only = fc.getOrElse(Flags.S1Only, 0L),
         s2Only = fc.getOrElse(Flags.S2Only, 0L),
         noDiff = fc.getOrElse(Flags.NoDiff, 0L),
         diff = fc.getOrElse(Flags.Diff, 0L))
-      DiffResult(diff, statsPlan(diff), counts)
+      // statsPlan's order: count descending, then name in Spark's
+      // (UTF-8 binary) string order
+      val perCol = groups.filterNot(_.isNullAt(1))
+        .sortBy(r => (-r.getLong(2), UTF8String.fromString(r.getString(1))))
+        .map(r => Row(r.getString(1), r.getLong(2)))
+      val stats = diff.sparkSession.createDataFrame(
+        perCol.toSeq.asJava, statsPlan(diff).schema)
+      DiffResult(diff, stats, counts)
     }
 }

@@ -46,11 +46,14 @@ case class FlagCounts(s1Only: Long, s2Only: Long, noDiff: Long, diff: Long) {
   * @param diff  one row per (outer-joined) key: both sides' key columns
   *              (suffixed `_s1`/`_s2`), `CompColArr`
   *              (array&lt;struct&lt;col_name,s1_value,s2_value&gt;&gt;) and `Flag`.
+  *              The only persisted frame: release it with
+  *              `diff.unpersist()`.
   * @param stats per-column mismatch counts, descending — the reference
   *              returns this as a pandas DataFrame
-  *              (find_datacol_diff.py:146-153); we keep it a (tiny)
-  *              Spark DataFrame so nothing leaves the cluster until the
-  *              caller decides.
+  *              (find_datacol_diff.py:146-153). A driver-local frame
+  *              (≤ one row per compared column) built from the same
+  *              summary action as `counts`: collecting it launches no
+  *              job, and it stays valid after `diff` is unpersisted.
   */
 case class DiffResult(diff: DataFrame, stats: DataFrame, counts: FlagCounts)
 

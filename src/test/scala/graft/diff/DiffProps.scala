@@ -49,9 +49,11 @@ object DiffProps extends Properties("DataColDiff") {
       s2recs.zip(inS2).collect { case (r, true) => r })
   }
 
-  private def diffOf(s1: Seq[Rec], s2: Seq[Rec]): DiffResult = {
+  private def diffOf(s1: Seq[Rec], s2: Seq[Rec],
+      skewResilient: Boolean = false): DiffResult = {
     import spark.implicits._
-    DataColDiff.computeDataframeDiff(s1.toDF(), s2.toDF(), Seq("id"))
+    DataColDiff.computeDataframeDiff(s1.toDF(), s2.toDF(), Seq("id"),
+        skewResilient = skewResilient)
       .fold(mm => sys.error(mm.message), identity)
   }
 
@@ -92,6 +94,46 @@ object DiffProps extends Properties("DataColDiff") {
       flagsSwap :| s"fwd=${fwd.counts} bwd=${bwd.counts}" &&
         (fwdStats == bwdStats) :| "per-column stats symmetric"
     } finally { fwd.diff.unpersist(); bwd.diff.unpersist() }
+  }
+
+  /** The one-pass summary against the reference formulation over the
+    * same cached diff: `stats` row-for-row (in order) and schema-equal
+    * to `statsPlan`, `counts` equal to `flagCountsPlan`'s classes, in
+    * both join shapes.
+    */
+  private def summaryMatchesPlans(s1: Seq[Rec], s2: Seq[Rec]): Prop =
+    Prop.all(Seq(false, true).map { skew =>
+      val res = diffOf(s1, s2, skew)
+      try {
+        val want = DataColDiff.statsPlan(res.diff)
+        val fc = DataColDiff.flagCountsPlan(res.diff).collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        val counts = Map(Flags.S1Only -> res.counts.s1Only,
+          Flags.S2Only -> res.counts.s2Only, Flags.NoDiff -> res.counts.noDiff,
+          Flags.Diff -> res.counts.diff).filter(_._2 > 0)
+        (res.stats.collect().toSeq == want.collect().toSeq) :|
+          s"skew=$skew stats rows" &&
+          (res.stats.schema == want.schema) :|
+            s"skew=$skew schema ${res.stats.schema} vs ${want.schema}" &&
+          (counts == fc) :| s"skew=$skew counts ${res.counts} vs $fc"
+      } finally res.diff.unpersist()
+    }: _*)
+
+  property("one-pass summary ≡ statsPlan + flagCountsPlan") =
+    forAll(genTables) { case (s1, s2) => summaryMatchesPlans(s1, s2) }
+
+  property("one-pass summary: empty and one-sided inputs, empty stats") = Prop.delay {
+    val one = Seq(Rec(1L, Some("x"), Some(1), None), Rec(2L, None, None, None))
+    Prop.all(
+      summaryMatchesPlans(Nil, Nil),
+      summaryMatchesPlans(one, Nil),
+      summaryMatchesPlans(Nil, one),
+      Prop.all(Seq(false, true).map { skew =>
+        val res = diffOf(one, Nil, skew)
+        try (res.stats.collect().isEmpty && res.counts == FlagCounts(2, 0, 0, 0)) :|
+          s"skew=$skew counts=${res.counts}"
+        finally res.diff.unpersist()
+      }: _*))
   }
 
   // --- random-SCHEMA tables with COMPOSITE keys -----------------------
