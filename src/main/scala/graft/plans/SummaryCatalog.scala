@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.queries.Tables
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
@@ -50,7 +51,7 @@ object SummaryCatalog {
     * contract is enforced at EVERY entry point, not just [[build]].
     */
   def register(spark: SparkSession, s: Summary): Unit = {
-    lazy val sumSchema = spark.read.parquet(s.summaryPath).schema
+    lazy val sumSchema = Tables.schemaOf(spark, s.summaryPath)
     s.measures.foreach { m =>
       import org.apache.spark.sql.types._
       val exact = m.op != "sum" || (m.cast match {

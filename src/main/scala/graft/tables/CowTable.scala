@@ -1,5 +1,6 @@
 package graft.tables
 
+import graft.queries.Tables
 import graft.tables.TxLog.{AddFile, ColStats, Commit, Snapshot}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -2539,7 +2540,7 @@ object CowTable {
     // booleans keyed by path, re-sniffing is merely a footer read.
     val cached = cdcFormatCache.get(loc)
     if (cached != null) return cached.booleanValue()
-    val onDisk = StructType(spark.read.parquet(loc).schema.fields
+    val onDisk = StructType(Tables.schemaOf(spark, loc).fields
       .filterNot(_.name == ChangeTypeCol))
     val legacy = nameTree(onDisk) != nameTree(phys)
     if (cdcFormatCache.size() > 100000) cdcFormatCache.clear()
