@@ -61,30 +61,23 @@ object Clusters {
     // The replay applies the IDENTICAL seeded recurrence with the same
     // maxIter bound, so results and the non-convergence failure are
     // unchanged. One bounded probe against the SAME persisted frame
-    // the distributed rounds consume — rdd.take scans partitions
-    // incrementally over the identical lineage, so an over-cap graph
-    // loses nothing: the shuffle maps and cached partitions the probe
-    // ran ARE the prep the loop needs anyway. The probe sees the
-    // POST-coercion endpoint type (the explode unifies aCol/bCol), so
-    // the replay labels exactly the values the distributed loop would; node ordering and equality must agree
-    // with Spark's (DriverReplay.orderedNodeType) and nulls decline.
-    if (driverIterMaxEdges > 0 &&
-        DriverReplay.orderedNodeType(edges.schema(0).dataType)) {
-      val probe = edges.rdd.take(driverIterMaxEdges + 1)
-      if (probe.isEmpty && maxIter >= 1) {
+    // the distributed rounds consume. The probe sees the POST-coercion
+    // endpoint type (the explode unifies aCol/bCol), so the replay
+    // labels exactly the values the distributed loop would; nulls
+    // decline.
+    DriverReplay.probe(edges, driverIterMaxEdges)(r =>
+        !r.isNullAt(0) && !r.isNullAt(1)) match {
+      case Some(rows) if rows.isEmpty && maxIter >= 1 =>
         // no pairs, no nodes: the empty (id, comp) frame the
         // distributed loop's first (empty) round would converge to —
         // maxIter < 1 falls through so its non-convergence failure on
         // an unenterable loop stays identical
         edges.unpersist()
         return ccEmpty(pairs.sparkSession, edges.schema(0))
-      }
-      if (probe.nonEmpty && probe.length <= driverIterMaxEdges &&
-          probe.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
+      case Some(rows) if rows.nonEmpty =>
         edges.unpersist()
-        return ccDriver(pairs.sparkSession, edges.schema(0), probe,
-          maxIter)
-      }
+        return ccDriver(pairs.sparkSession, edges.schema(0), rows, maxIter)
+      case _ =>
     }
 
     // seed = one propagation round for free: min(id, direct neighbors).

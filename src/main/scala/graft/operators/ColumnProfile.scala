@@ -28,18 +28,8 @@ object ColumnProfile {
     * (col_name, n_rows, n_null, n_distinct, min_val, max_val) —
     * distinct/min/max over non-null values; min/max lexicographic.
     */
-  def profile(df: DataFrame, cols: Seq[String] = Nil): DataFrame = {
-    val cs = if (cols.nonEmpty) cols else df.columns.toSeq
-    require(cs.nonEmpty, "profile of zero columns")
-    // pure-DSL melt (no string-spliced SQL — column names with quotes /
-    // backticks stay data, not syntax); the generator stays inline
-    val melted = df
-      .select(explode(array(cs.map(c => struct(
-          lit(c).as("col_name"),
-          col(s"`${c.replace("`", "``")}`").cast("string").as("value"))): _*))
-        .as("p"))
-      .select(col("p.col_name").as("col_name"), col("p.value").as("value"))
-    melted
+  def profile(df: DataFrame, cols: Seq[String] = Nil): DataFrame =
+    melt(df, cols)
       .groupBy(col("col_name"), col("value"))
       .agg(count(lit(1)).as("n"))
       .groupBy(col("col_name"))
@@ -50,5 +40,19 @@ object ColumnProfile {
         count(col("value")).as("n_distinct"),
         min(col("value")).as("min_val"),
         max(col("value")).as("max_val"))
+
+  /** (col_name, value) — one row per (row, profiled column), the value
+    * cast to string; `cols` empty profiles every column. Pure-DSL melt
+    * (no string-spliced SQL — column names with quotes / backticks stay
+    * data, not syntax); the generator stays inline.
+    */
+  private[graft] def melt(df: DataFrame, cols: Seq[String]): DataFrame = {
+    val cs = if (cols.nonEmpty) cols else df.columns.toSeq
+    require(cs.nonEmpty, "profile of zero columns")
+    df.select(explode(array(cs.map(c => struct(
+          lit(c).as("col_name"),
+          col(s"`${c.replace("`", "``")}`").cast("string").as("value"))): _*))
+        .as("p"))
+      .select(col("p.col_name").as("col_name"), col("p.value").as("value"))
   }
 }

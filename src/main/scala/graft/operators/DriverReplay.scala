@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 /** Shared guard for the bounded-graph driver fast paths
@@ -31,5 +32,27 @@ object DriverReplay {
          TimestampNTZType => true
     case _: DecimalType => true
     case _ => false
+  }
+
+  /** The bounded probe both fast paths take. `Some(rows)` when
+    * `cap > 0`, the first two (endpoint) columns of `edges` share one
+    * [[orderedNodeType]], and one `rdd.take(cap + 1)` returns at most
+    * `cap` rows, every one `wellFormed`; otherwise `None`, and the
+    * caller keeps its distributed loop. An empty edge set gives `Some`
+    * of no rows. The probe runs over the caller's persisted frame, so
+    * an over-cap graph loses nothing: `rdd.take` scans partitions
+    * incrementally over the identical lineage, and the shuffle maps and
+    * cached partitions it ran ARE the prep the loop needs anyway.
+    */
+  def probe(edges: DataFrame, cap: Int)(
+      wellFormed: Row => Boolean): Option[Array[Row]] = {
+    val t = edges.schema(0).dataType
+    if (cap <= 0 || edges.schema(1).dataType != t || !orderedNodeType(t))
+      None
+    else {
+      val rows = edges.rdd.take(cap + 1)
+      if (rows.length <= cap && rows.forall(wellFormed)) Some(rows)
+      else None
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Fixed-point PageRank over a weighted edge table — link-style
@@ -69,21 +69,8 @@ object PageRank {
       weightCol: String, iters: Int = 5,
       driverIterMaxEdges: Int = DriverReplay.MaxEdges): DataFrame = {
     require(iters >= 1 && iters <= 100, s"iters in [1,100], got $iters")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(weightCol).cast("bigint").as("w"))
-
-    // static per-round join input: edges annotated with their node's
-    // total out-weight, hash-partitioned by src ONCE and persisted —
-    // the InMemoryRelation keeps its outputPartitioning (and sort
-    // order), so every round's rank join consumes the cached layout
-    // directly with no fresh exchange on the (big) edge side.
-    // (A localCheckpoint would NOT work here: LogicalRDD drops the
-    // partitioning and every round would re-shuffle the edges —
-    // verified on the executed plans.) The last round is checkpointed
-    // EAGERLY so all rounds materialize inside this call and the cache
-    // can be dropped before returning — no persist leak.
-    val outW = e.groupBy("src").agg(sum(col("w")).as("outw"))
-    val eOut = e.join(outW, "src").repartition(col("src")).persist()
+    val e = endpoints(edges, srcCol, dstCol, weightCol)
+    val eOut = annotated(e)
 
     // small-graph fast path (DriverReplay): when the edge relation
     // fits on the driver, the iteration is O(edges · iters) integer
@@ -91,40 +78,65 @@ object PageRank {
     // orchestration cost (measured: the benched 5-round run spent
     // ~0.25 s computing its ~20-node transition graph and ~1 s
     // scheduling 29 AQE stage-jobs over it). One bounded probe against
-    // the SAME persisted frame the distributed rounds consume —
-    // rdd.take scans partitions incrementally over the identical
-    // lineage, so an over-cap graph loses nothing: the shuffle maps
-    // and cached partitions the probe ran ARE the prep the loop needs
-    // anyway. If the whole annotated edge relation came back well-formed
-    // (same-typed orderable endpoints, no nulls, weights ≥ 1 so all
-    // masses stay nonnegative and truncating == floor division), the
-    // recurrence replays driver-side over the Spark-computed
-    // out-weights — bit-identical by construction (property-pinned).
-    if (driverIterMaxEdges > 0 &&
-        e.schema(0).dataType == e.schema(1).dataType &&
-        DriverReplay.orderedNodeType(e.schema(0).dataType)) {
-      val probe = eOut.rdd.take(driverIterMaxEdges + 1)
-      if (probe.nonEmpty && probe.length <= driverIterMaxEdges &&
-          probe.forall(r =>
-            !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2) &&
-              !r.isNullAt(3) && r.getLong(2) >= 1L)) {
+    // the SAME persisted frame the distributed rounds consume. If the
+    // whole annotated edge relation came back well-formed (no nulls,
+    // weights ≥ 1 so all masses stay nonnegative and truncating ==
+    // floor division), the recurrence replays driver-side over the
+    // Spark-computed out-weights — bit-identical by construction
+    // (property-pinned).
+    DriverReplay.probe(eOut, driverIterMaxEdges)(r =>
+        !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2) &&
+          !r.isNullAt(3) && r.getLong(2) >= 1L) match {
+      case Some(rows) if rows.nonEmpty =>
         eOut.unpersist()
-        return ranksDriver(edges.sparkSession, e.schema, probe, iters)
-      }
+        ranksDriver(edges.sparkSession, e.schema, rows, iters)
+      case _ =>
+        val nodes = nodesOf(e)
+        val n = nodes.count()
+        rounds(eOut, nodes, lit(Scale / n), lit(3L * Scale / (20L * n)),
+          iters)
     }
+  }
 
-    val nodes = e.select(col("src").as("node"))
+  private def endpoints(edges: DataFrame, srcCol: String, dstCol: String,
+      weightCol: String): DataFrame =
+    edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+      col(weightCol).cast("bigint").as("w"))
+
+  /** Static per-round join input: edges annotated with their node's
+    * total out-weight, hash-partitioned by src ONCE and persisted — the
+    * InMemoryRelation keeps its outputPartitioning (and sort order), so
+    * every round's rank join consumes the cached layout directly with no
+    * fresh exchange on the (big) edge side. (A localCheckpoint would NOT
+    * work here: LogicalRDD drops the partitioning and every round would
+    * re-shuffle the edges — verified on the executed plans.) [[rounds]]
+    * checkpoints its last round EAGERLY so all rounds materialize inside
+    * the call and the cache can be dropped before returning — no persist
+    * leak. Row layout (using-join key first): src, dst, w, outw.
+    */
+  private def annotated(e: DataFrame): DataFrame = {
+    val outW = e.groupBy("src").agg(sum(col("w")).as("outw"))
+    e.join(outW, "src").repartition(col("src")).persist()
+  }
+
+  /** Every node appearing as src or dst. */
+  private def nodesOf(e: DataFrame): DataFrame =
+    e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
       .localCheckpoint(false)
-    val n = nodes.count()
 
-    var r = nodes.select(col("node"), lit(Scale / n).as("r"))
-      .localCheckpoint(false)
-    val base = 3L * Scale / (20L * n)
+  /** The distributed recurrence of both faces: `r0` is each node's
+    * initial rank and `teleport` its per-round base, both columns over
+    * `node` (uniform: literals; personalized: seed-gated). Releases
+    * `eOut`.
+    */
+  private def rounds(eOut: DataFrame, nodes: DataFrame, r0: Column,
+      teleport: Column, iters: Int): DataFrame = {
+    var r = nodes.select(col("node"), r0.as("r")).localCheckpoint(false)
     for (k <- 1 to iters) {
       // node spine rides the aggregate as zero rows: sum(m ∪ {0}) ==
-      // coalesce(sum(m), 0), so no-inbound nodes still get base and
-      // the old per-round left join (its own exchange) is gone
+      // coalesce(sum(m), 0), so no-inbound nodes still get the teleport
+      // base and the old per-round left join (its own exchange) is gone
       val contrib = eOut
         .join(r.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"),
@@ -132,7 +144,7 @@ object PageRank {
         .unionByName(nodes.select(col("node"), lit(0L).as("m")))
         .groupBy("node").agg(sum(col("m")).as("m"))
       r = contrib
-        .select(col("node"), (lit(base) + expr("(17 * m) DIV 20")).as("r"))
+        .select(col("node"), (teleport + expr("(17 * m) DIV 20")).as("r"))
       if (k % CheckpointEvery == 0 || k == iters)
         r = r.localCheckpoint(eager = k == iters)
     }
@@ -221,35 +233,14 @@ object PageRank {
       weightCol: String, seeds: Seq[String], iters: Int = 5): DataFrame = {
     require(iters >= 1 && iters <= 100, s"iters in [1,100], got $iters")
     require(seeds.nonEmpty, "need at least one seed node")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(weightCol).cast("bigint").as("w"))
-    val ns = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(false)
-    val outW = e.groupBy("src").agg(sum(col("w")).as("outw"))
-    val eOut = e.join(outW, "src").repartition(col("src")).persist()
+    val e = endpoints(edges, srcCol, dstCol, weightCol)
+    val ns = nodesOf(e)
+    val eOut = annotated(e)
     val isSeed = col("node").isin(seeds: _*)
     val nSeeds = seeds.length.toLong
-    var r = ns.select(col("node"),
-        when(isSeed, lit(Scale / nSeeds)).otherwise(lit(0L)).as("r"))
-      .localCheckpoint(false)
-    val base = 3L * Scale / (20L * nSeeds)
-    for (k <- 1 to iters) {
-      // same zero-row spine trick as [[ranks]]: one exchange per round
-      val contrib = eOut
-        .join(r.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"),
-          (col("w") * expr("r DIV outw")).as("m"))
-        .unionByName(ns.select(col("node"), lit(0L).as("m")))
-        .groupBy("node").agg(sum(col("m")).as("m"))
-      r = contrib
-        .select(col("node"),
-          (when(isSeed, lit(base)).otherwise(lit(0L)) +
-            expr("(17 * m) DIV 20")).as("r"))
-      if (k % CheckpointEvery == 0 || k == iters)
-        r = r.localCheckpoint(eager = k == iters)
-    }
-    eOut.unpersist()
-    r.select(col("node"), col("r").as("rank_fp"))
+    rounds(eOut, ns,
+      when(isSeed, lit(Scale / nSeeds)).otherwise(lit(0L)),
+      when(isSeed, lit(3L * Scale / (20L * nSeeds))).otherwise(lit(0L)),
+      iters)
   }
 }

@@ -4,7 +4,7 @@ import graft.operators.HeavyHitters
 import graft.text._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{abs, coalesce, col, concat, count,
-  explode, floor, greatest, lit, log, md5, row_number, size, sum, when}
+  explode, floor, lit, log, md5, row_number, size, sum, when}
 
 /** Driver-verifiable text-analysis queries over the `documents` table.
   * All but tfidf are pure per-row projections (zero shuffle) ordered by
@@ -1612,16 +1612,11 @@ object TextQueries {
   def pipelineDatasheet(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.loadSpread(spark, dir, "documents")
     val w = TextFeatures.words(col("text"))
-    val scores = LangId.Lexicons.map { case (l, lex) =>
-      l -> LangId.score(w, lex) }
-    val best = greatest(scores.map(_._2): _*)
-    val pred = scores.foldRight(lit("und")) { case ((l, s), other) =>
-      when(best > 0 && s === best, lit(l)).otherwise(other) }
     val perDoc = docs.select(col("source"),
         size(w).cast("long").as("n_toks"),
         floor(TextStats.qualityScore(w) * lit((1L << 20).toDouble))
           .cast("long").as("q_fp"),
-        pred.as("lang"), md5(col("text")).as("h"))
+        LangId.predictCol(w).as("lang"), md5(col("text")).as("h"))
       .persist()
     val base = perDoc.groupBy("source").agg(
       count(lit(1)).as("n_docs"), sum("n_toks").as("n_tokens"),

@@ -163,84 +163,32 @@ object IvfPq {
   }
 
   /** Train coarse + PQ codebooks over a (cached) prep frame. ONE seed
-    * collect feeds both trainers (smallest-id seeding is shared
-    * policy; slicing/truncating happens driver-side).
+    * collect feeds both (smallest-id seeding is shared policy;
+    * slicing/truncating happens driver-side).
     *
-    * Global (non-residual) encoding trains FUSED
-    * ([[fitModelFused]]): the PQ books quantize the same `q` the
-    * coarse trainer scans, so the two refinement chains are
-    * independent and each round collapses to ONE aggregate job.
-    * Residual encoding keeps the sequential path — its PQ input is
-    * defined by the FINISHED coarse codebook.
+    * Global encoding trains coarse and PQ books as ONE [[KMeans.train]]:
+    * the PQ books quantize the same `q` the coarse book scans, so each
+    * round is one pass for all of them. Residual encoding trains the
+    * coarse book first — its PQ input, the floored residual `cq`, is
+    * defined by the FINISHED coarse codebook — and seeds the PQ books
+    * with the seed rows' residuals ([[residualOf]]), no second job.
     */
-  private[similarity] def fitModel(prep: DataFrame, dim: Int, cfg: Config): Model =
-    if (cfg.residual) fitModelSequential(prep, dim, cfg)
-    else fitModelFused(prep, dim, cfg)
-
-  private[similarity] def fitModelSequential(prep: DataFrame, dim: Int,
+  private[similarity] def fitModel(prep: DataFrame, dim: Int,
       cfg: Config): Model = {
     val seedRows = KMeans.seedRows(prep, math.max(cfg.cells, cfg.pq.codeK))
-    val coarse = KMeans.centroidsPrepared(prep, cfg.coarseCfg, Some(seedRows))
-    val codeSrc = codeSource(prep, coarse, cfg)
-    val pqSeeds =
-      if (!cfg.residual) seedRows
-      else seedRows.map { case (vid, q) => (vid, residualOf(q, coarse)) }
-    val books = ProductQuant.trainPrepared(
-      codeSrc.select(col("vid"), col("cq").as("q")), dim, cfg.pq,
-      Some(pqSeeds))
-    Model(coarse, books)
-  }
-
-  /** The fused trainer (global encoding only): per refinement round,
-    * coarse assignment and all `m` PQ subspace assignments project in
-    * one pass, and BOTH trainers' (cluster, position) integer sums ride
-    * ONE map-side-combined aggregate — the per-row explode tags each
-    * (pos, x) twice (tag 0 = coarse label, tag 1 = its subspace's PQ
-    * label), so the collected state is the exact UNION of the two
-    * sequential collects (no cross-product grouping — the large-k
-    * regime keeps its bounds), and each round costs ONE job instead of
-    * two. Arithmetic is bit-identical to the sequential path: same
-    * argmins, same integer sums, same one-division means
-    * ([[IvfPqSpec]] asserts Model equality; every IVFADC oracle
-    * re-proves it end-to-end).
-    */
-  private[similarity] def fitModelFused(prep: DataFrame, dim: Int,
-      cfg: Config): Model = {
-    require(!cfg.residual, "fused training is the global-encoding path")
-    require(dim % cfg.pq.m == 0, s"dim $dim must divide by m=${cfg.pq.m}")
-    val sub = dim / cfg.pq.m
-    val seedRows = KMeans.seedRows(prep, math.max(cfg.cells, cfg.pq.codeK))
-    var coarse = KMeans.fromSeedRows(seedRows.take(cfg.cells))
-    var books: Seq[Seq[KMeans.Centroid]] = (0 until cfg.pq.m).map { s =>
-      seedRows.take(cfg.pq.codeK).map { case (vid, full) =>
-        val cv = full.slice(s * sub, (s + 1) * sub)
-        KMeans.Centroid(vid, cv, KMeans.leftFoldSq(cv))
-      }
+    val coarseBook = KMeans.fullBook(seedRows, cfg.coarseCfg)
+    if (!cfg.residual) {
+      val all = KMeans.train(prep,
+        coarseBook +: ProductQuant.books(seedRows, dim, cfg.pq))
+      Model(all.head, all.tail)
+    } else {
+      val coarse = KMeans.train(prep, Seq(coarseBook)).head
+      val pqSeeds =
+        seedRows.map { case (vid, q) => (vid, residualOf(q, coarse)) }
+      Model(coarse, KMeans.train(
+        codeSource(prep, coarse, cfg).select(col("vid"), col("cq").as("q")),
+        ProductQuant.books(pqSeeds, dim, cfg.pq)))
     }
-    for (round <- 2 to math.max(cfg.coarseIters, cfg.pq.iters)) {
-      val refineCoarse = round <= cfg.coarseIters
-      val refinePq = round <= cfg.pq.iters
-      // one RDD pass refines coarse + all m subspaces
-      // ([[KMeans.refinePass]] — round 17: replaces the per-round
-      // Catalyst query that tagged-exploded n×dim rows twice through
-      // an exchange; the coarse codebook is the full-vector view
-      // (tag -1), each PQ book its slice view (tag s). Same static
-      // argmin loop, same exact integer sums — bit-identical Model,
-      // property-pinned in KMeansSpec / asserted in IvfPqSpec).
-      val views =
-        (if (refineCoarse) Seq(KMeans.viewOf(-1, 0, full = true, coarse))
-        else Nil) ++
-        (if (refinePq) (0 until cfg.pq.m).map(s =>
-          KMeans.viewOf(s, s * sub, full = false, books(s)))
-        else Nil)
-      val pass = KMeans.refinePass(prep, views)
-      if (refineCoarse)
-        coarse = KMeans.centroidsFromPass(pass, -1)
-      if (refinePq)
-        books = (0 until cfg.pq.m).map(s =>
-          KMeans.centroidsFromPass(pass, s))
-    }
-    Model(coarse, books)
   }
 
   /** prep + (cell, cq): `cq` is the vector the PQ codebooks quantize —

@@ -25,9 +25,10 @@ import org.apache.spark.sql.functions._
   *     state, constant plan size in k. The corpus is scanned once per
   *     iteration.
   *   - '''Only k·d numbers ever reach the driver.''' Per iteration one
-  *     map-side-combined `(cluster, pos)` aggregate shuffles ≤ k·d rows
-  *     per task and collects k·d sums — the MLlib-style Lloyd's loop,
-  *     independent of corpus size. The corpus itself is never collected.
+  *     RDD fold ([[refinePass]]) sums each partition's rows into k·d
+  *     arrays — no aggregate, no shuffle — and the partition sums merge
+  *     on the driver: the MLlib-style Lloyd's loop, independent of
+  *     corpus size. The corpus itself is never collected.
   *
   * Distance is squared L2 in the quantized space, expanded as
   * `|q|² + |c|² − 2·q·c` so both norms are computed once (per row / per
@@ -104,10 +105,6 @@ object KMeans {
     prep.orderBy("vid").limit(k).select("vid", "q").collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
 
-  /** Seed centroids: the k smallest-id vectors (collect is k rows). */
-  private def seeds(prep: DataFrame, cfg: Config): Seq[Centroid] =
-    fromSeedRows(seedRows(prep, cfg.k))
-
   private[similarity] def fromSeedRows(
       rows: Seq[(Long, Array[Double])]): Seq[Centroid] =
     rows.map { case (vid, cv) => Centroid(vid, cv, leftFoldSq(cv)) }
@@ -158,8 +155,8 @@ object KMeans {
   /** One codebook's slice view of the quantized vector: the refinement
     * pass argmins `q[offset, offset+len)` against `cids/cns/flat` and
     * accumulates that slice's (cluster, position) sums under `tag`.
-    * tag disambiguates codebooks sharing a pass (coarse = -1, PQ
-    * subspace s = s in the fused trainer).
+    * tag disambiguates codebooks sharing a pass (the book's index in
+    * [[train]]).
     */
   private[similarity] final case class RefineView(tag: Int, offset: Int,
       len: Int, full: Boolean, cids: Array[Long], cns: Array[Double],
@@ -300,6 +297,38 @@ object KMeans {
     }
   }
 
+  /** One codebook to train: its view of the quantized vector
+    * ([[viewOf]]: whole vector, or the slice at `offset`), its seed
+    * centroids, and its `iters` (assignment passes; `iters − 1`
+    * refinements).
+    */
+  private[similarity] final case class Book(offset: Int, full: Boolean,
+      seeds: Seq[Centroid], iters: Int)
+
+  /** A whole-vector book seeded by the first `cfg.k` of `rows`. */
+  private[similarity] def fullBook(rows: Seq[(Long, Array[Double])],
+      cfg: Config): Book =
+    Book(0, full = true, fromSeedRows(rows.take(cfg.k)), cfg.iters)
+
+  /** The Lloyd's loop every trainer runs: round r is ONE [[refinePass]]
+    * over the books whose `iters` still cover r, so books that read the
+    * same frame (ProductQuant's subspaces, IvfPq's coarse + PQ books)
+    * share each round's scan. Books run independent chains — the
+    * centroids equal training each book alone, bit-for-bit. Returns the
+    * trained books in input order.
+    */
+  private[similarity] def train(prep: DataFrame,
+      books: Seq[Book]): Seq[Seq[Centroid]] = {
+    var cents = books.map(_.seeds).toVector
+    for (round <- 2 to books.map(_.iters).max) {
+      val live = books.indices.filter(round <= books(_).iters)
+      val pass = refinePass(prep, live.map(b =>
+        viewOf(b, books(b).offset, books(b).full, cents(b))))
+      live.foreach(b => cents = cents.updated(b, centroidsFromPass(pass, b)))
+    }
+    cents
+  }
+
   /** Train and label: `iters` assignment passes with `iters − 1`
     * centroid refinements between them. Returns one row per input
     * vector: (vec_id, cluster, dist) — cluster is the seed id of the
@@ -308,19 +337,13 @@ object KMeans {
   def fit(vectors: DataFrame, idCol: String, vecCol: String,
       cfg: Config = Config()): DataFrame = {
     val prep = quantize(vectors, idCol, vecCol, cfg).persist()
-    var cents = seeds(prep, cfg)
-    var it = 1
-    while (it < cfg.iters) {
-      cents = centroidsFromPass(
-        refinePass(prep, Seq(viewOf(0, 0, full = true, cents))), 0)
-      it += 1
-    }
-    assign(prep, cents)
+    assign(prep, centroidsPrepared(prep, cfg))
       .select(col("vid").as("vec_id"), col("cluster"), col("dist"))
   }
 
   /** Label a frame with an already-trained centroid set: quantize with
-    * the training config and take the same literal-centroid argmin — a
+    * the training config and take the same codebook argmin
+    * ([[graft.expressions.NearestCentroid]]) — a
     * pure stateless projection, so it runs IDENTICALLY on batch and
     * streaming frames (the [[graft.streaming.EventStream]] one-
     * definition-for-both pattern; no state, no watermark needed).
@@ -343,20 +366,10 @@ object KMeans {
     finally prep.unpersist(blocking = false)
   }
 
-  /** [[centroids]] over an existing (vid, q, qn) quantized frame —
-    * lets [[IvfPq]] train the coarse codebook on the same persisted
-    * prep its PQ training and search scans use (one corpus cache, not
-    * one per trainer). The frame must be quantized with THIS config's
-    * scale.
+  /** [[centroids]] over an existing (vid, q, qn) quantized frame,
+    * quantized with THIS config's scale.
     */
-  private[similarity] def centroidsPrepared(prep: DataFrame, cfg: Config,
-      preSeeds: Option[Seq[(Long, Array[Double])]] = None): Seq[Centroid] = {
-    var cents = preSeeds.fold(seeds(prep, cfg))(r =>
-      fromSeedRows(r.take(cfg.k)))
-    (1 until cfg.iters).foreach { _ =>
-      cents = centroidsFromPass(
-        refinePass(prep, Seq(viewOf(0, 0, full = true, cents))), 0)
-    }
-    cents
-  }
+  private[similarity] def centroidsPrepared(prep: DataFrame,
+      cfg: Config): Seq[Centroid] =
+    train(prep, Seq(fullBook(seedRows(prep, cfg.k), cfg))).head
 }

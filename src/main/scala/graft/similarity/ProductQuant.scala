@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   * document's code centroid (asymmetric distance computation — the
   * query side stays unquantized, only documents are coded).
   *
-  * Search shape: document codes are computed by the same
-  * literal-centroid codegen'd argmin the trainer uses (zero shuffle);
+  * Search shape: document codes are computed by the same codebook
+  * argmin the trainer uses ([[graft.expressions.NearestCentroid]],
+  * zero shuffle);
   * each query carries one tiny literal-derived LUT
   * (`map(cid → dist)` per subspace, built from the same trained
   * centroids), so scoring a candidate is `m` map lookups and an add
@@ -51,12 +52,10 @@ object ProductQuant {
     * Trains ALL `m` subspaces through SHARED jobs rather than m
     * independent [[KMeans.centroids]] runs: one seed collect covers
     * every subspace (the seed rows' full vectors slice driver-side),
-    * and each refinement is ONE projection (m literal-centroid argmins
-    * producing a label array) + ONE map-side-combined
-    * (position, label) aggregate whose collect is m·k·(dim/m) sums.
-    * Identical arithmetic to the per-subspace trainer — integer sums
-    * don't care how the jobs are batched — measured 6.5 s → ~1.5 s at
-    * sf0.1 purely from deleting ~25 per-subspace job launches.
+    * and each refinement is ONE [[KMeans.refinePass]] over the m slice
+    * views, collecting m·k·(dim/m) sums. Identical arithmetic to the
+    * per-subspace trainer — integer sums don't care how the jobs are
+    * batched.
     */
   def train(vectors: DataFrame, idCol: String, vecCol: String, dim: Int,
       cfg: Config = Config()): Seq[Seq[KMeans.Centroid]] = {
@@ -71,38 +70,26 @@ object ProductQuant {
   }
 
   /** [[train]] over an existing (vid, q: quantized array<double>)
-    * frame — lets [[topK]] (and [[IvfPq]]) share one persisted prep
-    * with the search.
+    * frame — lets [[topK]] share one persisted prep with the search.
     */
   private[similarity] def trainPrepared(prep: DataFrame, dim: Int,
-      cfg: Config,
-      preSeeds: Option[Seq[(Long, Array[Double])]] = None): Seq[Seq[KMeans.Centroid]] = {
+      cfg: Config): Seq[Seq[KMeans.Centroid]] =
+    KMeans.train(prep, books(KMeans.seedRows(prep, cfg.codeK), dim, cfg))
+
+  /** The `m` subspace books, each seeded by slicing the first `codeK`
+    * seed rows' full vectors to its subspace — one seed collect feeds
+    * every subspace (and, in [[IvfPq]], the coarse book too).
+    */
+  private[similarity] def books(seedRows: Seq[(Long, Array[Double])],
+      dim: Int, cfg: Config): Seq[KMeans.Book] = {
     require(dim % cfg.m == 0, s"dim $dim must divide by m=${cfg.m}")
     val sub = dim / cfg.m
-
-    // one collect seeds every subspace (or reuse a caller's collect —
-    // IvfPq seeds coarse + all PQ subspaces from a single job)
-    val seedRows = preSeeds.fold(KMeans.seedRows(prep, cfg.codeK))(
-      _.take(cfg.codeK))
-    var books: Seq[Seq[KMeans.Centroid]] = (0 until cfg.m).map { s =>
-      seedRows.map { case (vid, full) =>
-        val cv = full.slice(s * sub, (s + 1) * sub)
-        KMeans.Centroid(vid, cv, KMeans.leftFoldSq(cv))
-      }
+    (0 until cfg.m).map { s =>
+      KMeans.Book(s * sub, full = false, KMeans.fromSeedRows(
+        seedRows.take(cfg.codeK).map { case (vid, full) =>
+          (vid, full.slice(s * sub, (s + 1) * sub))
+        }), cfg.iters)
     }
-    for (_ <- 2 to cfg.iters) {
-      // one RDD pass refines every subspace ([[KMeans.refinePass]] —
-      // round 17: the per-round Catalyst query (m-argmin label array
-      // staged below a posexplode, then a (pos, label) aggregate whose
-      // input is n×dim exploded rows through an exchange) is replaced
-      // by the shared accumulate-in-arrays fold, one slice view per
-      // subspace. Same static argmin loop, same exact integer sums —
-      // bit-identical books, property-pinned in KMeansSpec.
-      val pass = KMeans.refinePass(prep, (0 until cfg.m).map(s =>
-        KMeans.viewOf(s, s * sub, full = false, books(s))))
-      books = (0 until cfg.m).map(s => KMeans.centroidsFromPass(pass, s))
-    }
-    books
   }
 
   /** Top-k neighbors per query: ADC screen over PQ codes to `screenK`,

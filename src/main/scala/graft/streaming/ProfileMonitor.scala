@@ -60,14 +60,7 @@ object ProfileMonitor {
     */
   def profileState(df: DataFrame, cols: Seq[String] = Nil,
       k: Int = 64): Map[String, ColState] = {
-    val cs = if (cols.nonEmpty) cols else df.columns.toSeq
-    require(cs.nonEmpty, "profile of zero columns")
-    val melted = df
-      .select(explode(array(cs.map(c => struct(
-          lit(c).as("col_name"),
-          col(s"`${c.replace("`", "``")}`").cast("string").as("value"))): _*))
-        .as("p"))
-      .select(col("p.col_name").as("col_name"), col("p.value").as("value"))
+    val melted = graft.operators.ColumnProfile.melt(df, cols)
     val counts = melted
       .groupBy(col("col_name"))
       .agg(count(lit(1)).as("n_rows"),

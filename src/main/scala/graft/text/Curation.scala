@@ -68,13 +68,9 @@ object Curation {
       .partitionBy(md5(col("text")))
     val withRep = base.withColumn("__rep", min(col("doc_id")).over(rep))
     val w = words(col("text"))
-    val scores = LangId.Lexicons.map { case (l, lex) => l -> LangId.score(w, lex) }
-    val best = greatest(scores.map(_._2): _*)
-    val pred = scores.foldRight(lit("und")) { case ((l, s), other) =>
-      when(best > 0 && s === best, lit(l)).otherwise(other)
-    }
     val scored = withRep.select(col("doc_id"), col("text"), col("__rep"),
-      TextStats.qualityScore(w).as("quality"), pred.as("lang_pred"))
+      TextStats.qualityScore(w).as("quality"),
+      LangId.predictCol(w).as("lang_pred"))
     // near-dup losers come from the SAME pair pipeline curate runs —
     // over the kept-so-far survivors only (pipeline order matters: a
     // quality-dropped doc never reaches the LSH stage)
@@ -103,13 +99,9 @@ object Curation {
       docs.select(col(idCol).as("doc_id"), col(textCol).as("text")),
       "text", "doc_id")
     val w = words(col("text"))
-    val scores = LangId.Lexicons.map { case (l, lex) => l -> LangId.score(w, lex) }
-    val best = greatest(scores.map(_._2): _*)
-    val pred = scores.foldRight(lit("und")) { case ((l, s), other) =>
-      when(best > 0 && s === best, lit(l)).otherwise(other)
-    }
     val scored = uniq.select(col("doc_id"), col("text"),
-      TextStats.qualityScore(w).as("quality"), pred.as("lang_pred"))
+      TextStats.qualityScore(w).as("quality"),
+      LangId.predictCol(w).as("lang_pred"))
     // two consumers (the LSH pass and the final anti-join) — persist so
     // the scoring+window lineage runs once, not twice (at scale: a
     // staging table; here the plan-keyed cache)

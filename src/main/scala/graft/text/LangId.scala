@@ -70,17 +70,12 @@ object LangId {
     }
     val bestShare = greatest(shares.map(_._2): _*)
     val w = col("__w")
-    val lexScores = Lexicons.map { case (l, lex) => l -> score(w, lex) }
-    val lexBest = greatest(lexScores.map(_._2): _*)
-    val lexPred = lexScores.foldRight(lit("und")) { case ((lang, s), other) =>
-      when(lexBest > 0 && s === lexBest, lit(lang)).otherwise(other)
-    }
-    val pred = shares.foldRight(lexPred) { case ((code, s), other) =>
+    val pred = shares.foldRight(predictCol(w)) { case ((code, s), other) =>
       when(bestShare >= ScriptThreshold && s === bestShare, lit(code))
         .otherwise(other)
     }
     val scoreCol = when(bestShare >= ScriptThreshold, bestShare)
-      .otherwise(coalesce(lexBest, lit(0.0)))
+      .otherwise(coalesce(bestScore(w), lit(0.0)))
     staged.select(col("doc_id"),
       pred.as("lang_pred"), scoreCol.as("lang_score"))
   }

@@ -111,4 +111,26 @@ class PageRankSpec extends AnyFunSuite {
     assert(plan.contains("Scan ExistingRDD"),
       s"ill-formed edges must keep the distributed loop:\n$plan")
   }
+
+  test("personalizedRanks seeded at every node equals the uniform ranks") {
+    // all-node seeds make r_0 = S div N and the teleport base
+    // 3S div 20N at every node: the uniform recurrence, so the two faces
+    // must agree exactly (both run the one distributed round loop)
+    val raw = Iterator.iterate(24680L)(x => (x * 48271) % 2147483647)
+      .drop(1).take(300).toSeq
+    val edges = raw.grouped(2).collect { case Seq(x, y) =>
+      (s"v${x % 40}", s"v${y % 40}", 1L + (x % 3))
+    }.toSeq.filter { case (u, v, _) => u != v }.toDF("s", "d", "w")
+    val nodes = (edges.select("s").as[String].collect() ++
+      edges.select("d").as[String].collect()).distinct.toSeq
+    for (iters <- Seq(1, 3, 9)) {
+      val uniform = PageRank.ranks(edges, "s", "d", "w", iters,
+        driverIterMaxEdges = 0)
+        .collect().map(x => x.getString(0) -> x.getLong(1)).toMap
+      val ppr = PageRank.personalizedRanks(edges, "s", "d", "w", nodes, iters)
+        .collect().map(x => x.getString(0) -> x.getLong(1)).toMap
+      assert(uniform.size === nodes.size)
+      assert(ppr === uniform, s"faces diverged at iters=$iters")
+    }
+  }
 }

@@ -42,8 +42,9 @@ class IvfPqSpec extends AnyFunSuite {
         x => floor(x * lit(cfg.pq.kmCfg.scale)).cast("double")))
       .withColumn("qn", graft.expressions.DotProduct(col("q"), col("q")))
       .persist()
-    val fused = IvfPq.fitModelFused(prep, 64, cfg)
-    val seq = IvfPq.fitModelSequential(prep, 64, cfg)
+    val fused = IvfPq.fitModel(prep, 64, cfg)
+    val seq = IvfPq.Model(KMeans.centroidsPrepared(prep, cfg.coarseCfg),
+      ProductQuant.trainPrepared(prep, 64, cfg.pq))
     prep.unpersist(blocking = false)
     def flat(m: IvfPq.Model): Seq[(Long, Seq[Double], Double)] =
       (m.coarse ++ m.books.flatten).map(c => (c.cid, c.cv.toSeq, c.cn))
