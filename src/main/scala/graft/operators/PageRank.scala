@@ -87,14 +87,19 @@ object PageRank {
     DriverReplay.probe(eOut, driverIterMaxEdges)(r =>
         !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2) &&
           !r.isNullAt(3) && r.getLong(2) >= 1L) match {
-      case Some(rows) if rows.nonEmpty =>
+      case Some(rows) =>
         eOut.unpersist()
-        ranksDriver(edges.sparkSession, e.schema, rows, iters)
+        ranksDriver(edges.sparkSession, e.schema("src"), rows, iters)
       case _ =>
         val nodes = nodesOf(e)
         val n = nodes.count()
-        rounds(eOut, nodes, lit(Scale / n), lit(3L * Scale / (20L * n)),
-          iters)
+        if (n == 0) {
+          // no nodes to rank, and none to split the unit mass over
+          eOut.unpersist()
+          ranksDriver(edges.sparkSession, nodes.schema("node"), Array.empty,
+            iters)
+        } else rounds(eOut, nodes, lit(Scale / n),
+          lit(3L * Scale / (20L * n)), iters)
     }
   }
 
@@ -164,8 +169,15 @@ object PageRank {
     * PageRankSpec).
     */
   private def ranksDriver(spark: org.apache.spark.sql.SparkSession,
-      eSchema: org.apache.spark.sql.types.StructType,
+      nodeField: org.apache.spark.sql.types.StructField,
       eOutRows: Array[org.apache.spark.sql.Row], iters: Int): DataFrame = {
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      nodeField.copy(name = "node"),
+      org.apache.spark.sql.types.StructField("rank_fp",
+        org.apache.spark.sql.types.LongType)))
+    val out = new java.util.ArrayList[org.apache.spark.sql.Row]()
+    // an empty graph ranks no nodes
+    if (eOutRows.isEmpty) return spark.createDataFrame(out, schema)
     val idx = new java.util.LinkedHashMap[Any, Integer]()
     def id(v: Any): Int = {
       var i = idx.get(v)
@@ -202,16 +214,12 @@ object PageRank {
       while (v < idx.size) { r(v) = base + 17L * mass(v) / 20L; v += 1 }
       round += 1
     }
-    val out = new java.util.ArrayList[org.apache.spark.sql.Row](idx.size)
     val it = idx.entrySet().iterator()
     while (it.hasNext) {
       val en = it.next()
       out.add(org.apache.spark.sql.Row(en.getKey, r(en.getValue)))
     }
-    spark.createDataFrame(out, org.apache.spark.sql.types.StructType(Seq(
-      eSchema("src").copy(name = "node"),
-      org.apache.spark.sql.types.StructField("rank_fp",
-        org.apache.spark.sql.types.LongType))))
+    spark.createDataFrame(out, schema)
   }
 
   /** Personalized PageRank: identical integer fixed-point frame, but

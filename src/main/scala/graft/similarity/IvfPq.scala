@@ -1,10 +1,13 @@
 package graft.similarity
 
-import graft.expressions.DotProduct
+import graft.expressions.{CentroidDistMap, DotProduct, FloorResidual}
 import graft.similarity.Cosine._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, MapData, SQLOrderingUtil}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** IVFADC — the composed billion-scale ANN layout: a trained coarse
   * quantizer prunes the corpus to the cells a query probes, and
@@ -144,7 +147,7 @@ object IvfPq {
   // declarative zip_with formulation below is the ScalaCheck'd
   // reference (FloorResidualProps), per the interpreted-HOF
   // discipline.
-  private def residTo(coarse: Seq[KMeans.Centroid], q: Column,
+  private[similarity] def residTo(coarse: Seq[KMeans.Centroid], q: Column,
       cell: Column): Column =
     graft.expressions.FloorResidual(q, cell,
       coarse.map(_.cid), coarse.map(_.cv))
@@ -205,9 +208,9 @@ object IvfPq {
         .withColumn("cq", residTo(coarse, col("q"), col("cell")))
   }
 
-  private def cqSlice(s: Int, sub: Int): Column =
+  private[similarity] def cqSlice(s: Int, sub: Int): Column =
     slice(col("cq"), s * sub + 1, sub)
-  private def cqNorm(s: Int, sub: Int): Column =
+  private[similarity] def cqNorm(s: Int, sub: Int): Column =
     DotProduct(cqSlice(s, sub), cqSlice(s, sub))
 
   /** Code a frame with a FROZEN model: (vid, v, nrm, cell, c0..c{m-1})
@@ -232,41 +235,85 @@ object IvfPq {
         }: _*)
   }
 
-  /** Probes: nProbe nearest cells per query in the SAME quantized
-    * distance (ties toward the smaller cell id); the query set is
-    * tiny, so the query × cells fan-out and its window are driver-
-    * negligible and the result broadcasts. The ADC LUTs build AFTER
-    * the probe cut, from the probe-relative vector (global: the query
-    * itself; residual: its floored residual to the PROBED cell — one
-    * LUT set per (query, cell), the residual-IVFADC shape).
+  /** The probe set, built on the driver: per query the `nProbe`
+    * nearest cells in the SAME quantized distance (ties toward the
+    * smaller cell id), then the ADC LUTs from the probe-relative vector
+    * (global: the query itself; residual: its floored residual to the
+    * PROBED cell — one LUT set per (query, cell), the residual-IVFADC
+    * shape). The query set is tiny and [[search]] broadcasts all of it
+    * anyway, so its prep is collected (no job for a local query frame:
+    * the projection folds into the local relation) and the distances,
+    * residuals and LUTs run the kernels the Spark expressions share
+    * ([[graft.expressions.CentroidDistMap.table]],
+    * [[graft.expressions.FloorResidual.compute]]) — bit-equal to the
+    * distributed explode + window formulation, which IvfPqProbeProps
+    * keeps as the reference. Rows sharing a `q_id` (null included)
+    * compete for its nProbe cells, as that window's partition does; a
+    * query whose distance table is null (null vector or element, wrong
+    * dimension) probes nothing, as `explode(null)`.
+    *
+    * Returns (q_id, pv, pn, cell, lut0..lut{m-1}) as a local relation
+    * and the sorted distinct probed cells.
     */
-  private[similarity] def probes(queriesPrep: DataFrame, model: Model, dim: Int,
-      cfg: Config): DataFrame = {
+  private[similarity] def probeSet(queriesPrep: DataFrame, model: Model,
+      dim: Int, cfg: Config): (DataFrame, Array[Long]) = {
     val sub = dim / cfg.pq.m
-    // coarse probe distances and per-subspace ADC LUTs both ride
-    // CentroidDistMap — ONE flat-array expression per codebook instead
-    // of k literal DotProduct trees (constant plan/codegen size in k;
-    // bit-equal arithmetic, see the expression's contract)
-    val coarseDists = graft.expressions.CentroidDistMap(
-      col("q"), col("qn"),
-      model.coarse.map(_.cid), model.coarse.map(_.cn),
-      model.coarse.map(_.cv))
-    val wp = Window.partitionBy("q_id").orderBy(asc("cd"), asc("cell"))
-    val lutCols = model.books.zipWithIndex.map { case (cents, s) =>
-      graft.expressions.CentroidDistMap(
-        cqSlice(s, sub), cqNorm(s, sub),
-        cents.map(_.cid), cents.map(_.cn), cents.map(_.cv)).as(s"lut$s")
+    val coarse = new FlatBook(model.coarse)
+    val books = model.books.map(new FlatBook(_))
+    // (prep row, q, cell, cd): every coarse cell of every query whose
+    // distance table is not null
+    val cands = queriesPrep.select("vid", "v", "nrm", "q", "qn").collect()
+      .toSeq.flatMap { r =>
+        val q = if (r.isNullAt(3)) null
+          else new GenericArrayData(r.getSeq[Any](3).toArray)
+        val t = if (q == null || r.isNullAt(4)) null
+          else coarse.dists(q, r.getDouble(4))
+        if (t == null) Nil
+        else (0 until t.numElements()).map(i =>
+          (r, q, t.keyArray.getLong(i), t.valueArray.getDouble(i)))
+      }
+    // groupBy and sortWith are stable, so distance ties on one cell keep
+    // the window's input order
+    val probes = cands.groupBy(c => Option(c._1.get(0))).values.toSeq
+      .flatMap(_.sortWith { (a, b) =>
+        val c = SQLOrderingUtil.compareDoubles(a._4, b._4)
+        c < 0 || (c == 0 && a._3 < b._3)
+      }.take(cfg.nProbe))
+    def asMap(t: MapData): Map[Long, Double] =
+      if (t == null) null
+      else (0 until t.numElements()).map(i =>
+        t.keyArray.getLong(i) -> t.valueArray.getDouble(i)).toMap
+    val rows = probes.map { case (r, q, cell, _) =>
+      val cq =
+        if (cfg.residual)
+          FloorResidual.compute(q, cell, coarse.ids, coarse.flat, coarse.dim)
+        else q
+      val luts = books.zipWithIndex.map { case (book, s) =>
+        val sl = Array.tabulate(sub)(i => cq.getDouble(s * sub + i))
+        asMap(book.dists(new GenericArrayData(sl), KMeans.leftFoldSq(sl)))
+      }
+      Row.fromSeq(Seq(r.get(0), r.get(1), r.get(2), cell) ++ luts)
     }
-    queriesPrep
-      .select(col("vid").as("q_id"), col("v").as("pv"), col("nrm").as("pn"),
-        col("q"), explode(coarseDists).as(Seq("cell", "cd")))
-      .withColumn("prn", row_number().over(wp))
-      .filter(col("prn") <= cfg.nProbe)
-      .withColumn("cq",
-        if (cfg.residual) residTo(model.coarse, col("q"), col("cell"))
-        else col("q"))
-      .select(Seq(col("q_id"), col("pv"), col("pn"),
-        col("cell")) ++ lutCols: _*)
+    val schema = StructType(Seq(StructField("q_id", LongType),
+        queriesPrep.schema("v").copy(name = "pv"),
+        queriesPrep.schema("nrm").copy(name = "pn"),
+        StructField("cell", LongType, nullable = false)) ++
+      books.indices.map(s => StructField(s"lut$s",
+        MapType(LongType, DoubleType, valueContainsNull = false))))
+    (queriesPrep.sparkSession.createDataFrame(rows.asJava, schema),
+      probes.map(_._3).distinct.sorted.toArray)
+  }
+
+  /** A codebook as the shared kernels take it: ids, norms and the
+    * components flattened in codebook order.
+    */
+  private final class FlatBook(cents: Seq[KMeans.Centroid]) {
+    val ids: Array[Long] = cents.map(_.cid).toArray
+    val flat: Array[Double] = cents.flatMap(_.cv).toArray
+    val dim: Int = flat.length / ids.length
+    private val norms = cents.map(_.cn).toArray
+    def dists(q: ArrayData, qn: Double): MapData =
+      CentroidDistMap.table(q, qn, ids, norms, flat, dim)
   }
 
   /** ADC screen over probed cells + exact-cosine re-rank — the search
@@ -307,7 +354,7 @@ object IvfPq {
     val prep = prepare(vectors, idCol, vecCol, cfg).persist()
     val model = fitModel(prep, dim, cfg)
     search(coded(prep, model, dim, cfg),
-      probes(prep.filter(isQuery(col("vid"))), model, dim, cfg), k, cfg)
+      probeSet(prep.filter(isQuery(col("vid"))), model, dim, cfg)._1, k, cfg)
   }
 
   // ------------------------------------------------------ persisted index
@@ -378,39 +425,22 @@ object IvfPq {
       .write.partitionBy("cell").mode("append").saveAsTable(table)
 
   /** Serve a query batch from a persisted index: zero training jobs,
-    * and the coded-corpus scan is restricted to the PROBED cells via a
-    * partition-pruning IN filter (the probe set is queries × nProbe
-    * rows — collecting its distinct cells is a driver-trivial job).
-    * Output and semantics are [[topK]]'s; [[IvfPqIndexSpec]] asserts
-    * row equality against the train-and-search path and the pruned
-    * scan shape.
+    * the probe set built on the driver ([[probeSet]]: no job for a
+    * local query frame, one collect otherwise, nothing persisted), and
+    * the coded-corpus scan restricted to the PROBED cells via a
+    * partition-pruning IN filter. Output and semantics are [[topK]]'s;
+    * [[IvfPqIndexSpec]] asserts row equality against the
+    * train-and-search path and the pruned scan shape.
     */
   def topKIndexed(spark: org.apache.spark.sql.SparkSession, table: String,
       queries: DataFrame, idCol: String, vecCol: String, dim: Int, k: Int,
-      cfg: Config = Config(), model: Option[Model] = None): DataFrame =
-    topKIndexedScoped(spark, table, queries, idCol, vecCol, dim, k,
-      cfg, model)._1
-
-  /** [[topKIndexed]] with its internal persisted probe frame handed
-    * back, so a PER-MICRO-BATCH caller ([[graft.streaming.AnnServe]])
-    * can release exactly that cache after consuming the result — a
-    * blanket `catalog.clearCache()` there would also unpersist every
-    * user-cached relation sharing the session. The result is lazy and
-    * references the handle: unpersist AFTER consuming.
-    */
-  private[graft] def topKIndexedScoped(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      queries: DataFrame, idCol: String, vecCol: String, dim: Int, k: Int,
-      cfg: Config = Config(),
-      model: Option[Model] = None): (DataFrame, DataFrame) = {
+      cfg: Config = Config(), model: Option[Model] = None): DataFrame = {
     require(cfg.pq.screenK >= k, "screenK must be >= k")
     val m = model.getOrElse(readModel(spark, table))
-    val probeSet = probes(
-      prepare(queries, idCol, vecCol, cfg), m, dim, cfg).persist()
-    val cells = probeSet.select("cell").distinct().collect()
-      .map(_.getLong(0)).sorted
+    val (probes, cells) =
+      probeSet(prepare(queries, idCol, vecCol, cfg), m, dim, cfg)
     val codedDocs = spark.table(table)
       .filter(col("cell").isin(cells.map(c => c: Any): _*))
-    (search(codedDocs, probeSet, k, cfg), probeSet)
+    search(codedDocs, probes, k, cfg)
   }
 }

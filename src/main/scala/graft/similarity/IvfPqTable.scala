@@ -143,14 +143,16 @@ object IvfPqTable {
       ()
     }
 
-  /** Serve a query batch: probes from the version-resolved model,
-    * then a scan of ONLY the probed cells' files — one manifest-pruned
-    * read per probed cell (each file carries exact point `cell`
-    * bounds, so a file joins exactly one cell's read). `asOfVersion`
-    * serves a TIME-TRAVELED index with the model epoch in force at
-    * that version. An explicitly passed `model` overrides resolution
-    * (callers asserting their own epoch discipline — e.g. a spec
-    * comparing against a catalog index coded with the same books).
+  /** Serve a query batch: the probe set built on the driver from the
+    * version-resolved model ([[IvfPq.probeSet]]: no job for a local
+    * query frame, nothing persisted), then a scan of ONLY the probed
+    * cells' files — one manifest-pruned read per probed cell (each
+    * file carries exact point `cell` bounds, so a file joins exactly
+    * one cell's read). `asOfVersion` serves a TIME-TRAVELED index
+    * with the model epoch in force at that version. An explicitly
+    * passed `model` overrides resolution (callers asserting their own
+    * epoch discipline — e.g. a spec comparing against a catalog index
+    * coded with the same books).
     */
   def topK(spark: SparkSession, path: String, queries: DataFrame,
       idCol: String, vecCol: String, dim: Int, k: Int,
@@ -159,17 +161,15 @@ object IvfPqTable {
       asOfVersion: Option[Long] = None): DataFrame = {
     require(cfg.pq.screenK >= k, "screenK must be >= k")
     val m = model.getOrElse(readModel(spark, path, asOfVersion))
-    val probeSet = IvfPq.probes(
-      IvfPq.prepare(queries, idCol, vecCol, cfg), m, dim, cfg).persist()
-    val cells = probeSet.select("cell").distinct().collect()
-      .map(_.getLong(0)).sorted
+    val (probes, cells) =
+      IvfPq.probeSet(IvfPq.prepare(queries, idCol, vecCol, cfg), m, dim, cfg)
     // empty query batch → empty probe set → no cells to read
     val codedDocs =
       if (cells.isEmpty) CowTable.read(spark, path, asOfVersion).limit(0)
       else cells.map(c => CowTable.readOverlapping(spark, path,
           "cell", c.toString, c.toString, asOfVersion))
         .reduce(_ unionByName _)
-    IvfPq.search(codedDocs, probeSet, k, cfg)
+    IvfPq.search(codedDocs, probes, k, cfg)
   }
 
   /** The model-bearing commit version in force at `asOf` (default:

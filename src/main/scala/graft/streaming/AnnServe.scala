@@ -33,19 +33,12 @@ object AnnServe {
     val spark = queries.sparkSession
     val model = IvfPq.readModel(spark, table)
     queries.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      if (!batch.isEmpty) {
-        // the scoped form hands back the query-batch-scale probe frame
-        // topKIndexed persists internally; release exactly it after
-        // `onBatch` consumes the result (a serving stream runs
-        // unboundedly many batches — but a blanket clearCache would
-        // also unpersist every USER-cached relation in the session).
-        // Contract: onBatch materializes the frame within the call
-        // (writes/collects it); a deferred consumer recomputes.
-        val (topk, probe) = IvfPq.topKIndexedScoped(spark, table, batch,
-          idCol, vecCol, dim, k, cfg, Some(model))
-        try onBatch(batchId, topk)
-        finally { probe.unpersist(blocking = false); () }
-      }
+      // the probe set is a driver-built local relation, so a batch
+      // leaves nothing cached behind: the stream can run unboundedly
+      // many batches without releasing anything per batch
+      if (!batch.isEmpty)
+        onBatch(batchId, IvfPq.topKIndexed(spark, table, batch, idCol,
+          vecCol, dim, k, cfg, Some(model)))
     }
   }
 }

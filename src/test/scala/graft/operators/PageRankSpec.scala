@@ -112,6 +112,20 @@ class PageRankSpec extends AnyFunSuite {
       s"ill-formed edges must keep the distributed loop:\n$plan")
   }
 
+  test("an empty graph ranks no nodes, on both paths") {
+    val empty = Seq.empty[(String, String, Long)].toDF("s", "d", "w")
+    val one = Seq(("a", "b", 1L)).toDF("s", "d", "w")
+    def fields(df: org.apache.spark.sql.DataFrame) =
+      df.schema.map(f => (f.name, f.dataType))
+    for (cap <- Seq(DriverReplay.MaxEdges, 0)) {
+      val got = PageRank.ranks(empty, "s", "d", "w",
+        driverIterMaxEdges = cap)
+      assert(got.collect().isEmpty)
+      assert(fields(got) === fields(PageRank.ranks(one, "s", "d", "w",
+        driverIterMaxEdges = cap)))
+    }
+  }
+
   test("personalizedRanks seeded at every node equals the uniform ranks") {
     // all-node seeds make r_0 = S div N and the teleport base
     // 3S div 20N at every node: the uniform recurrence, so the two faces

@@ -328,9 +328,9 @@ class PlanAuditSpec extends AnyFunSuite {
   test("ivfadc: the ADC screen joins hash-keyed on the cell, never corpus × query") {
     // the composed layout's whole point: the coded corpus meets queries
     // ONLY through the (cell)-keyed hash join against the broadcast
-    // probe set; the probe fan-out itself is an explode of a literal
-    // cell array (no join at all), so no nested-loop or cartesian may
-    // appear anywhere
+    // probe set; the probe set itself is a driver-built local relation
+    // (no join at all), so no nested-loop or cartesian may appear
+    // anywhere
     val plan = planOf("sim_ivfpq")
     assert(!plan.contains("BroadcastNestedLoopJoin") &&
       !plan.contains("CartesianProduct"),
