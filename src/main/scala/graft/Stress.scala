@@ -2,56 +2,54 @@ package graft
 
 import graft.dedup.{Clusters, MinHashLSH}
 import graft.text.{Curation, SeqPack}
-import org.apache.spark.sql.DataFrame
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
 /** Scale-stress main (dev tool, like [[Trace]]): runs each operator
-  * family on a deliberately adversarial blow-up of the sf0.1 testdata
-  * and prints wall-clock seconds. These are the numbers SURVEY §2.10 /
-  * §9 cite; re-run after touching any hot-path operator.
+  * family on a deliberately adversarial blow-up of the testdata under
+  * `SPARK_GRAFT_SF_DIR` (default sf0.1) and prints wall-clock seconds.
+  * These are the numbers SURVEY §2.10 / §9 cite; re-run after touching
+  * any hot-path operator.
   *
-  *   - cc: 500k nodes / 2.25M edges as 50k ten-clone CLIQUES — the
-  *     realistic dup-graph shape (every clone collides with most
-  *     others), checked for exactly 50k components;
-  *   - minhash: a 10× corpus (500k docs at sf0.1) where EVERY doc is in
-  *     a 10-clone duplicate cluster — worst case for LSH band fanout;
-  *   - curate: the full curation pipeline over the same 10× corpus;
-  *   - diff: the diff core on 15×-unioned orders (2.25M × 2.27M rows).
+  * The scenarios are one ordered [[table]]. Each entry stages its
+  * inputs untimed, then records one or more labelled timings
+  * ([[Stage.timed]]), each printed as `STRESS <label> <seconds> s
+  * rows=<n>`; the entry's `require`s are its correctness checks. Every
+  * entry runs through [[Runner.step]], so a failing entry is reported
+  * and the next one still runs; caches are dropped at the end of each
+  * entry. The run ends with one [[Bench.finalLine]] over the labels
+  * (a failed entry appears under its own name with its error) and
+  * exits non-zero if any entry failed.
+  *
+  * {{{
+  * SPARK_GRAFT_ONLY=cc,diff sbt "runMain graft.Stress"
+  * }}}
+  * `SPARK_GRAFT_ONLY` selects entries by name, as for Bench; unset runs
+  * the whole table.
   */
 object Stress {
-  def main(args: Array[String]): Unit = {
-    val which = if (args.nonEmpty) args.toSet
-      else Set("cc", "minhash", "curate", "diff", "diffskew", "pack",
-        "shards", "decontam", "bloomdecontam", "encode", "chunks", "kmv",
-        "dupspans", "incr", "aggmerge", "funnel", "anomaly", "lmscore",
-        "scd2", "semantic", "pmi", "epochs", "order", "profilediff",
-        "outliers", "pagerank", "equidepth", "outliersbig", "heavyhitters",
-        "hll", "kmeans", "kmeans4096", "simquant", "ivfserve", "linkage",
-        "bpe", "bm25", "knngraph", "cms", "ssjoin", "classifier",
-        "ntile", "novelty", "semantic1m", "ivfpq4096", "gram", "trend",
-        "mmr", "symdel", "linkpred", "binquant1m", "hardmine1m",
-        "coldcatalog", "hotband", "cowtable", "txlog100k", "txlog1m",
-        "bm25del", "bm25lsm")
-    val spark = Runner.session()
-    val dir = Runner.sfDir
 
+  /** One named scenario: `body` stages its inputs and records its
+    * labelled timings.
+    */
+  final case class Scenario(name: String, body: Stage => Unit)
+
+  /** What a scenario runs against: the session, the input directory, a
+    * scratch directory of its own (removed when the scenario ends) and
+    * the input builders the scenarios share.
+    */
+  final class Stage(val spark: SparkSession, val dir: String,
+      val scratch: String) {
+    private[Stress] val timings = mutable.ArrayBuffer.empty[(String, Double)]
+
+    /** Time `body`, whose result is the row count printed with it. */
     def timed(label: String)(body: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val n = body
-      println(f"STRESS $label%-12s ${(System.nanoTime() - t0) / 1e9}%8.2f s   rows=$n")
-      spark.catalog.clearCache()
-    }
-
-    /** [[timed]] WITHOUT the trailing clearCache — for back-to-back
-      * timings over the same staged inputs (clearCache would evict the
-      * staged frames and the later timing would silently pay the full
-      * input rebuild; measured 17× on the lmscore-fast case). Caller
-      * clears once after the block.
-      */
-    def timedWarm(label: String)(body: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val n = body
-      println(f"STRESS $label%-12s ${(System.nanoTime() - t0) / 1e9}%8.2f s   rows=$n")
+      var n = 0L
+      val s = Runner.seconds { n = body }
+      println(f"STRESS $label%-12s $s%8.2f s   rows=$n")
+      timings += label -> s
     }
 
     /** Materialize an input frame before timing: the synthetic blow-up
@@ -60,23 +58,81 @@ object Stress {
       */
     def staged(df: DataFrame): DataFrame = {
       val cached = df.persist()
-      cached.write.format("noop").mode("overwrite").save()
+      Runner.noop(cached)
       cached
     }
 
-    /** 10 re-keyed copies of the documents table: every doc belongs to a
-      * ten-clone exact-duplicate cluster.
+    def load(table: String): DataFrame = queries.Tables.load(spark, dir, table)
+    def loadSpread(table: String): DataFrame =
+      queries.Tables.loadSpread(spark, dir, table)
+
+    /** The six orders columns the diff-family blow-ups copy. */
+    def orders: DataFrame = load("orders").select(col("o_orderkey"),
+      col("o_custkey"), col("o_orderstatus"), col("o_totalprice"),
+      col("o_orderdate"), col("o_orderpriority"))
+
+    /** `n` copies of `df`, copy c re-keyed to `idCol + c·stride` (the
+      * copies' keyspaces stay disjoint while every base key is below
+      * `stride`), then `spread` over 32 partitions.
       */
-    def corpus10x: DataFrame = {
-      val docs = queries.Tables.loadSpread(spark, dir, "documents")
-      docs.select(col("doc_id"), col("text"),
-          explode(sequence(lit(0), lit(9))).as("copy"))
-        .select((col("doc_id") + col("copy") * 1000000L).as("doc_id"),
-          col("text"))
-        .repartition(32)
+    def copies(df: DataFrame, idCol: String, n: Int,
+        stride: Long = 1000000L, spread: Boolean = true): DataFrame = {
+      val out = df.select(col("*"),
+          explode(sequence(lit(0), lit(n - 1))).as("copy"))
+        .withColumn(idCol, col(idCol) + col("copy") * stride)
+        .drop("copy")
+      if (spread) out.repartition(32) else out
     }
 
-    if (which("cc")) {
+    /** 10 re-keyed copies of the documents table: every doc belongs to
+      * a ten-clone exact-duplicate cluster.
+      */
+    def corpus10x: DataFrame =
+      copies(loadSpread("documents").select("doc_id", "text"), "doc_id", 10)
+
+    /** The fastest of three runs of `body`, in milliseconds. */
+    def minMs(body: => Unit): Double =
+      (1 to 3).map(_ => Runner.seconds(body) * 1e3).min
+
+    /** A synthetic transaction log at `t`: `commits` commits of `adds`
+      * manifest entries each, file j of commit c covering the keys
+      * [(c·adds + j)·1000, +999] (the fold never touches data files).
+      */
+    def synthLog(t: String, commits: Int, adds: Int,
+        bytes: Option[Long] = None): Unit = {
+      import tables.TxLog
+      import tables.TxLog.{AddFile, ColStats, Commit}
+      (1 to commits).foreach { v =>
+        val c = v - 1
+        val files = (0 until adds).map { j =>
+          val lo = (c.toLong * adds + j) * 1000L
+          AddFile(f"data/op$c%03d/part-$j%05d.parquet", 1000L,
+            Map("k" -> ColStats("long", lo.toString,
+              (lo + 999).toString, Some(false))), bytes = bytes)
+        }
+        require(TxLog.tryCommit(spark, t, Commit(v,
+          if (v == 1) "create" else "append", files, Seq.empty,
+          if (v == 1) Some("k BIGINT,v BIGINT") else None,
+          if (v == 1) Some(Seq("k")) else None)), s"commit $v lost")
+      }
+    }
+
+    /** `n` synthetic (vec_id, embedding) rows over 32 partitions:
+      * component j of vector id is `hash(id mod period, j) / 2^31`, so
+      * ids `period` apart are exact duplicates.
+      */
+    def vectors(n: Long, dim: Int, period: Long = Long.MaxValue): DataFrame =
+      spark.range(0L, n, 1L, 32).select(col("id").as("vec_id"),
+        transform(sequence(lit(0), lit(dim - 1)),
+          j => hash(pmod(col("id"), lit(period)), j).cast("double")
+            / 2147483648.0d).as("embedding"))
+  }
+
+  private def entry(name: String)(body: Stage => Unit) = Scenario(name, body)
+
+  /** Every scenario, in run order. */
+  val table: Seq[Scenario] = Seq(
+    entry("cc") { st => import st._
       // 50k ten-node cliques: nodes c*10+j, all 45 intra-clique edges
       val pairs = staged(spark.range(50000).select(col("id").as("c"),
           explode(expr("transform(flatten(transform(sequence(0,8), i -> " +
@@ -91,33 +147,32 @@ object Stress {
         require(comps == 50000L, s"expected 50000 components, got $comps")
         comps
       }
-    }
+    },
 
-    if (which("minhash")) {
+    entry("minhash") { st => import st._
       val corpus = staged(corpus10x)
       timed("minhash") {
         MinHashLSH.nearDuplicatePairs(corpus, "doc_id", "text").count()
       }
-    }
+    },
 
-    if (which("ssjoin")) {
+    entry("ssjoin") { st => import st._
       // the prefix-filter join's reason to exist, at scale: 51k docs
       // ALL sharing a 10-word boilerplate footer. The plain postings
       // self-join would fan out df² ≈ 51k² candidate rows through each
       // of the ~8 footer shingles (~2·10^10 rows — unrunnable); the
       // footer shingles sort LAST in the (df, sh) order and never
       // enter any prefix, so the exact join runs in seconds. Copies
-      // get per-copy word suffixes (disjoint shingles across copies);
-      // every 50th doc also plants an exact-clone twin at id + 10^7.
+      // get per-copy word suffixes (disjoint shingles across copies;
+      // the copy index is doc_id div 10^6); every 50th doc also plants
+      // an exact-clone twin at id + 10^7.
       val footer = (0 until 10).map(i => s"foot$i").mkString(" ")
-      val base = queries.Tables.loadSpread(spark, dir, "documents")
-        .select(col("doc_id"), col("text"),
-          explode(sequence(lit(0), lit(9))).as("copy"))
-        .select((col("doc_id") + col("copy") * 1000000L).as("doc_id"),
-          concat(
-            expr("array_join(transform(split(text, ' '), " +
-              "w -> concat(w, '_c', copy)), ' ')"),
-            lit(s" $footer")).as("text"))
+      val base = copies(loadSpread("documents").select("doc_id", "text"),
+          "doc_id", 10, spread = false)
+        .withColumn("text", concat(
+          expr("array_join(transform(split(text, ' '), " +
+            "w -> concat(w, '_c', doc_id div 1000000)), ' ')"),
+          lit(s" $footer")))
       val twins = base.filter(col("doc_id") % 50 === 0)
         .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
       val corpus = staged(base.unionByName(twins).repartition(32))
@@ -133,9 +188,9 @@ object Stress {
           s"expected all $nTwins planted twin pairs, got $planted")
         pairs.count()
       }
-    }
+    },
 
-    if (which("dupspans")) {
+    entry("dupspans") { st => import st._
       // every doc in a 10-clone cluster: EVERY gram is shared, so every
       // doc collapses into one full-length span — worst case for the
       // shared-gram join (no posting is filtered out) and the island
@@ -149,6 +204,9 @@ object Stress {
         require(n == nDocs, s"expected one span per doc ($nDocs), got $n")
         n
       }
+      // excise's figures (SURVEY §9) include rebuilding the unstaged
+      // corpus
+      spark.catalog.clearCache()
       timed("excise") {
         // all-duplicated corpus: every doc fully covered → every doc
         // comes back empty (reassembly's worst case: nothing survives,
@@ -158,74 +216,64 @@ object Stress {
         require(empties == nDocs, s"expected $nDocs empty docs, got $empties")
         out.count()
       }
-    }
+    },
 
-    if (which("incr")) {
+    entry("incr") { st => import st._
       // 500k-doc ingest batch screened against the 50k-doc standing
       // corpus; every batch doc is an exact (and near) dup of exactly
       // one corpus doc — maximal screen hit rate, zero keeps
-      val corpus = staged(queries.Tables.loadSpread(spark, dir, "documents"))
+      val corpus = staged(loadSpread("documents"))
       val batch = staged(corpus10x)
-      timed("incr") {
-        val v = graft.dedup.IncrementalDedup
-          .verdicts(corpus, batch, "doc_id", "text")
+      def zeroKeeps(v: DataFrame): Long = {
         val keeps = v.filter(col("keep") === 1).count()
         require(keeps == 0L, s"expected zero keeps, got $keeps")
         v.count()
       }
+      timed("incr") {
+        zeroKeeps(graft.dedup.IncrementalDedup
+          .verdicts(corpus, batch, "doc_id", "text"))
+      }
+      // a prebuilt corpus index as staging tables; each screen below
+      // runs on a cleared cache, as its SURVEY figures were taken
+      def prebuilt(from: DataFrame, at: String) = {
+        val built = graft.dedup.IncrementalDedup
+          .buildIndex(from, "doc_id", "text")
+        built.textHashes.distinct().write.parquet(s"$at/h") // keep the write-time distinct invariant writeIndex maintains (r16 advice)
+        built.bands.write.parquet(s"$at/bands")
+        built.shingles.write.parquet(s"$at/shingles")
+        spark.catalog.clearCache()
+        graft.dedup.IncrementalDedup.CorpusIndex(
+          spark.read.parquet(s"$at/h"),
+          spark.read.parquet(s"$at/bands"),
+          spark.read.parquet(s"$at/shingles"))
+      }
       // the production path: the corpus index is PREBUILT (staging
       // tables); an ingest batch pays only its own shingling + the
       // screens. incr-prebuilt vs incr isolates that saving.
-      val idxDir = java.nio.file.Files.createTempDirectory("graft-incr-idx")
-      val built = graft.dedup.IncrementalDedup
-        .buildIndex(corpus, "doc_id", "text")
-      built.textHashes.distinct().write.parquet(s"$idxDir/h") // keep the write-time distinct invariant writeIndex maintains (r16 advice)
-      built.bands.write.parquet(s"$idxDir/bands")
-      built.shingles.write.parquet(s"$idxDir/shingles")
-      spark.catalog.clearCache()
-      val idx = graft.dedup.IncrementalDedup.CorpusIndex(
-        spark.read.parquet(s"$idxDir/h"),
-        spark.read.parquet(s"$idxDir/bands"),
-        spark.read.parquet(s"$idxDir/shingles"))
+      val idx = prebuilt(corpus, s"$scratch/idx")
       timed("incr-prebuilt") {
-        val v = graft.dedup.IncrementalDedup.verdicts(idx, batch,
-          "doc_id", "text", graft.dedup.MinHashLSH.Config())
-        val keeps = v.filter(col("keep") === 1).count()
-        require(keeps == 0L, s"expected zero keeps, got $keeps")
-        v.count()
+        zeroKeeps(graft.dedup.IncrementalDedup.verdicts(idx, batch,
+          "doc_id", "text", graft.dedup.MinHashLSH.Config()))
       }
       // inverted, REALISTIC direction: corpus 10× the batch (at 100 TB
       // the ratio is far more extreme and re-shingling the corpus per
       // batch is simply impossible) — the prebuilt screen pays only the
       // small batch's shingling, so this is the headline saving
-      val bigIdxDir = java.nio.file.Files.createTempDirectory("graft-incr-idx2")
-      val bigBuilt = graft.dedup.IncrementalDedup
-        .buildIndex(batch, "doc_id", "text") // the 10× frame as corpus
-      bigBuilt.textHashes.distinct().write.parquet(s"$bigIdxDir/h") // ditto
-      bigBuilt.bands.write.parquet(s"$bigIdxDir/bands")
-      bigBuilt.shingles.write.parquet(s"$bigIdxDir/shingles")
-      spark.catalog.clearCache()
-      val bigIdx = graft.dedup.IncrementalDedup.CorpusIndex(
-        spark.read.parquet(s"$bigIdxDir/h"),
-        spark.read.parquet(s"$bigIdxDir/bands"),
-        spark.read.parquet(s"$bigIdxDir/shingles"))
+      val bigIdx = prebuilt(batch, s"$scratch/idx2") // the 10× frame as corpus
       timed("incr-smallbatch") {
-        val v = graft.dedup.IncrementalDedup.verdicts(bigIdx, corpus,
-          "doc_id", "text", graft.dedup.MinHashLSH.Config())
-        val keeps = v.filter(col("keep") === 1).count()
-        require(keeps == 0L, s"expected zero keeps, got $keeps")
-        v.count()
+        zeroKeeps(graft.dedup.IncrementalDedup.verdicts(bigIdx, corpus,
+          "doc_id", "text", graft.dedup.MinHashLSH.Config()))
       }
-    }
+    },
 
-    if (which("curate")) {
+    entry("curate") { st => import st._
       val corpus = staged(corpus10x)
       timed("curate") {
         Curation.curate(corpus, "doc_id", "text").count()
       }
-    }
+    },
 
-    if (which("pack")) {
+    entry("pack") { st => import st._
       // 10M docs with deterministic pseudo-random token counts 1..997:
       // the hierarchical prefix sum over 100 buckets of 100k docs each.
       val docs = staged(spark.range(10000000L)
@@ -241,45 +289,42 @@ object Stress {
         require(end == want, s"stream end $end != token sum $want")
         packed.count()
       }
-    }
+    },
 
-    if (which("shards")) {
+    entry("shards") { st => import st._
       // 10M-row corpus written as 64 shards × 4 splits — a real disk
       // write (parquet + partitionBy), verified lossless on read-back.
       val docs = staged(spark.range(10000000L)
         .select(col("id"), md5(col("id").cast("string")).as("payload"))
         .repartition(32))
-      val out = java.nio.file.Files.createTempDirectory("stress-shards")
       timed("shards") {
         operators.Sharding.writeShards(docs, "id", nShards = 64,
-          out.toString, tasksPerShard = 4)
-        val n = spark.read.parquet(out.toString).count()
+          scratch, tasksPerShard = 4)
+        val n = spark.read.parquet(scratch).count()
         require(n == 10000000L, s"round-trip lost rows: $n")
         n
       }
-      org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
-    }
+    },
 
-    if (which("decontam")) {
+    entry("decontam") { st => import st._
       // 10× corpus (500k docs at sf0.1) against a 5k-doc benchmark set —
       // the realistic ratio: the eval grams broadcast, the corpus side
       // streams through map-side
       val corpus = staged(corpus10x)
-      val eval = queries.Tables.loadSpread(spark, dir, "documents")
-        .filter(col("doc_id") % 10 === 0)
+      val eval = loadSpread("documents").filter(col("doc_id") % 10 === 0)
       timed("decontam") {
         graft.text.Decontam.overlap(corpus, eval, "doc_id", "text").count()
       }
-    }
+    },
 
-    if (which("chunks")) {
+    entry("chunks") { st => import st._
       val corpus = staged(corpus10x)
       timed("chunks") {
         graft.text.Chunker.chunks(corpus, "doc_id", "text").count()
       }
-    }
+    },
 
-    if (which("aggmerge")) {
+    entry("aggmerge") { st => import st._
       // 10M-key standing aggregate updated by a 100k-row delta — the
       // daily-ingest ratio; merged result must carry every base key
       // plus the delta's new ones, with history never rescanned
@@ -299,9 +344,9 @@ object Stress {
         require(n == 10050000L, s"expected 10.05M keys, got $n")
         n
       }
-    }
+    },
 
-    if (which("funnel")) {
+    entry("funnel") { st => import st._
       // 5M events / 7,499 users (coprime to the 4-type cycle, so every
       // user's type rotates round-robin): one ts per user per round ⇒
       // every user hits view→click→purchase in order within 12 rounds
@@ -320,9 +365,9 @@ object Stress {
           s"every user must complete all stages: ${stages.mkString(";")}")
         stages.length.toLong
       }
-    }
+    },
 
-    if (which("anomaly")) {
+    entry("anomaly") { st => import st._
       timed("anomaly") { // rolling z over 5M events
         val scored = operators.Anomaly.rollingZ(
           spark.range(5000000L).select(
@@ -332,9 +377,9 @@ object Stress {
           "g", "ts")
         scored.count()
       }
-    }
+    },
 
-    if (which("bloomdecontam")) {
+    entry("bloomdecontam") { st => import st._
       // the regime overlapBloom exists for: an eval side whose gram SET
       // is too big to want as a broadcast string relation — 200k synth
       // docs of unique tokens (~1.6M distinct 3-grams) plus the real
@@ -346,7 +391,7 @@ object Stress {
           concat_ws(" ", (0 until 10).map(j =>
             md5(concat(col("id").cast("string"), lit(s"_$j")))): _*)
             .as("text"))
-      val eval = staged(queries.Tables.loadSpread(spark, dir, "documents")
+      val eval = staged(loadSpread("documents")
         .filter(col("doc_id") % 10 === 0).select("doc_id", "text")
         .unionByName(uniqueBulk))
       var nBloom = 0L
@@ -355,15 +400,18 @@ object Stress {
           .overlapBloom(corpus, eval, "doc_id", "text").count()
         nBloom
       }
+      // the SURVEY's bloom-vs-broadcast comparison ran the broadcast
+      // path on unstaged inputs
+      spark.catalog.clearCache()
       timed("decon-ref") { // broadcast path on the same inputs
         val n = graft.text.Decontam
           .overlap(corpus, eval, "doc_id", "text").count()
         require(n == nBloom, s"bloom path $nBloom != broadcast path $n")
         n
       }
-    }
+    },
 
-    if (which("lmscore")) {
+    entry("lmscore") { st => import st._
       // score the 10× corpus against its own model: a per-row
       // projection end to end — must stay within small multiples of
       // the encode pass
@@ -373,63 +421,56 @@ object Stress {
       // frame would re-run the full corpus fit inside both timings;
       // materialize RESULTS through the noop write — count() on a pure
       // projection lets column pruning delete the scoring itself
-      // (same rule as Bench.materialize)
+      // (same rule as Bench)
       val fitted = staged(graft.text.LmScore.model(corpus, "doc_id", "text"))
-      timedWarm("lmscore") { // interpreted HOF fold
-        graft.text.LmScore.scoreWith(corpus, "doc_id", "text", fitted)
-          .write.format("noop").mode("overwrite").save()
+      timed("lmscore") { // interpreted HOF fold
+        Runner.noop(graft.text.LmScore.scoreWith(corpus, "doc_id", "text",
+          fitted))
         nDocs
       }
-      timedWarm("lmscore-fast") { // codegen'd UnigramScore expression
-        graft.text.LmScore.scoreFast(corpus, "doc_id", "text", fitted)
-          .write.format("noop").mode("overwrite").save()
+      timed("lmscore-fast") { // codegen'd UnigramScore expression
+        Runner.noop(graft.text.LmScore.scoreFast(corpus, "doc_id", "text",
+          fitted))
         nDocs
       }
       val n = graft.text.LmScore
         .scoreFast(corpus, "doc_id", "text", fitted).count()
       require(n == nDocs, s"lmscore dropped docs: $n != $nDocs")
-      spark.catalog.clearCache()
-    }
+    },
 
-    if (which("classifier")) {
+    entry("classifier") { st => import st._
       // NB + DSIR at the 500k-doc scale: both trainers are aggregates
       // with bounded outputs (top-K vocab rows / B bucket cells), both
       // scorers are pure projections — fit must stay near one corpus
       // tokenize, scoring near the lmscore-fast pass, and the screen
       // must stay non-degenerate on the cloned corpus
-      val docs = queries.Tables.loadSpread(spark, dir, "documents")
-      val corpus = staged(docs
-        .select(col("doc_id"), col("text"), col("source"),
-          explode(sequence(lit(0), lit(9))).as("copy"))
-        .select((col("doc_id") + col("copy") * 1000000L).as("doc_id"),
-          col("text"), col("source"))
-        .repartition(32))
+      val corpus = staged(copies(loadSpread("documents")
+        .select("doc_id", "text", "source"), "doc_id", 10))
       val nDocs = corpus.count()
       val cfg = graft.text.NbQuality.Config()
       var m: graft.text.NbQuality.Model = null
-      timedWarm("nbfit") {
+      timed("nbfit") {
         m = graft.text.NbQuality.fit(corpus, "doc_id", "text", cfg); nDocs
       }
-      timedWarm("nbscore") {
-        graft.text.NbQuality.scoreWith(corpus, "doc_id", "text", m)
-          .write.format("noop").mode("overwrite").save(); nDocs
+      timed("nbscore") {
+        Runner.noop(graft.text.NbQuality.scoreWith(corpus, "doc_id", "text",
+          m)); nDocs
       }
       val dcfg = graft.text.Dsir.Config()
       var dm: graft.text.Dsir.Model = null
-      timedWarm("dsirfit") {
+      timed("dsirfit") {
         dm = graft.text.Dsir.fit(corpus, "doc_id", "text", dcfg); nDocs
       }
-      timedWarm("dsirscore") {
-        graft.text.Dsir.scoreWith(corpus, "doc_id", "text", dcfg.buckets, dm)
-          .write.format("noop").mode("overwrite").save(); nDocs
+      timed("dsirscore") {
+        Runner.noop(graft.text.Dsir.scoreWith(corpus, "doc_id", "text",
+          dcfg.buckets, dm)); nDocs
       }
       val kept = graft.text.NbQuality.scoreWith(corpus, "doc_id", "text", m)
         .filter(col("pred") === 1).count()
       require(kept > 0 && kept < nDocs, s"nb screen degenerate: $kept/$nDocs")
-      spark.catalog.clearCache()
-    }
+    },
 
-    if (which("encode")) {
+    entry("encode") { st => import st._
       // vocab-encode the 10× corpus: the one-row-map broadcast must keep
       // the corpus side shuffle-free at 500k docs; every doc comes back,
       // and clones of the same doc encode identically (spot-checked via
@@ -437,8 +478,7 @@ object Stress {
       val corpus = staged(corpus10x)
       val nDocs = corpus.count()
       timed("encode") { // noop write: count() would prune the encoding
-        graft.text.Vocab.encode(corpus, "doc_id", "text")
-          .write.format("noop").mode("overwrite").save()
+        Runner.noop(graft.text.Vocab.encode(corpus, "doc_id", "text"))
         nDocs
       }
       val enc = graft.text.Vocab.encode(corpus, "doc_id", "text")
@@ -446,9 +486,9 @@ object Stress {
       val distinctSeqs = enc.select("token_ids").distinct().count()
       require(distinctSeqs <= nDocs / 10,
         s"clones must encode identically: $distinctSeqs distinct sequences")
-    }
+    },
 
-    if (which("heavyhitters")) {
+    entry("heavyhitters") { st => import st._
       // 20M postings: 16 planted heavy items (30% of mass, each ≥1.25%
       // share) over a 1M-distinct tail — ~3000× more distinct items
       // than the 320 MG counters, so eviction runs constantly and the
@@ -460,10 +500,7 @@ object Stress {
           .otherwise(concat(lit("t"), (col("id") % 1000000L).cast("string")))
           .as("t")).repartition(32))
       var got: Array[org.apache.spark.sql.Row] = null
-      // timedWarm: the naive cross-check below must reuse the STAGED
-      // frame (timed's trailing clearCache would force a full input
-      // rebuild for it — the documented lmscore trap)
-      timedWarm("heavyhitters") {
+      timed("heavyhitters") {
         got = operators.HeavyHitters.exact(items, "t", denom = 256, k = 320)
           .collect() // ≤ k rows by construction
         require(got.length == 16, s"expected the 16 planted heavy items, " +
@@ -477,10 +514,9 @@ object Stress {
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       val gotMap = got.map(r => r.getString(0) -> r.getLong(1)).toMap
       require(gotMap == naive, s"two-pass != naive: $gotMap vs $naive")
-      spark.catalog.clearCache()
-    }
+    },
 
-    if (which("hll")) {
+    entry("hll") { st => import st._
       // same regime as the kmv case: 10M postings / 32 groups, all
       // values distinct — the constant-size registers must land within
       // the 6.5%-σ envelope while shuffling 256 bytes per (group, task)
@@ -501,9 +537,9 @@ object Stress {
         }
         rows.length.toLong
       }
-    }
+    },
 
-    if (which("kmv")) {
+    entry("kmv") { st => import st._
       // 10M (group, value) postings over 32 groups, millions of
       // distinct values per group — the cardinality regime the sketch
       // exists for; estimates must land within the KMV error bound
@@ -522,6 +558,9 @@ object Stress {
         }
         rows.length.toLong
       }
+      // kmv-agg is timed over the unstaged postings, so its figure
+      // stays comparable across runs
+      spark.catalog.clearCache()
       var aggRows: Array[org.apache.spark.sql.Row] = null
       timed("kmv-agg") { // the single-shuffle KmvBottomK form, same input
         aggRows = operators.KmvSketch.distinctEstimateAgg(posts, "grp", "v",
@@ -533,9 +572,9 @@ object Stress {
         k = 256).collect()
       require(aggRows.map(_.toString).sorted.sameElements(
         comp.map(_.toString).sorted), "agg form diverged from composable")
-    }
+    },
 
-    if (which("diffskew")) {
+    entry("diffskew") { st => import st._
       // One pathological hot key carrying 50% of s1's rows at the 15×
       // scale — the dirty-input case the full-outer plan cannot spread:
       // AQE's OptimizeSkewedJoin refuses FULL OUTER (verified: neither
@@ -544,20 +583,13 @@ object Stress {
       // (inner ∪ anti ∪ anti) is splittable; this case proves AQE
       // actually splits it (skewed-marker in the final adaptive plan)
       // and that both modes agree on every flag count.
-      val orders = queries.Tables.load(spark, dir, "orders")
-      def wide15x(df: DataFrame) = df.select(col("o_orderkey"),
-          col("o_custkey"), col("o_orderstatus"), col("o_totalprice"),
-          col("o_orderdate"), col("o_orderpriority"),
-          explode(sequence(lit(0), lit(14))).as("copy"))
-        .select((col("o_orderkey") + col("copy") * 1000000000L).as("o_orderkey"),
-          col("o_custkey"), col("o_orderstatus"), col("o_totalprice"),
-          col("o_orderdate"), col("o_orderpriority"))
-      // repartition matters: AQE splits a skewed reduce partition at MAP
-      // granularity only — a single-split parquet read caches as ONE
-      // partition, one map task, and the hot partition becomes a single
-      // indivisible block (diagnosed empirically; the 100 TB reality is
-      // thousands of map tasks, which this models)
-      val clean = staged(wide15x(orders).repartition(32))
+      // The 32-way spread matters: AQE splits a skewed reduce partition
+      // at MAP granularity only — a single-split parquet read caches as
+      // ONE partition, one map task, and the hot partition becomes a
+      // single indivisible block (diagnosed empirically; the 100 TB
+      // reality is thousands of map tasks, which this models). Copies
+      // are spaced 1e9 apart, as in the diff case.
+      val clean = staged(copies(orders, "o_orderkey", 15, 1000000000L))
       val hot = staged(clean.withColumn("o_orderkey",
         when(col("o_custkey") % 2 === 0, lit(42L)).otherwise(col("o_orderkey"))))
       val saved = Seq(
@@ -572,51 +604,49 @@ object Stress {
       ).map { case (key, v) =>
         val old = spark.conf.getOption(key); spark.conf.set(key, v); key -> old
       }
-      var resilientCounts: diff.FlagCounts = null
-      timed("diffskew-res") {
-        val res = diff.DataColDiff.computeDataframeDiff(
-          hot, clean, Seq("o_orderkey"), skewResilient = true)
-          .fold(mm => throw new IllegalArgumentException(mm.message), identity)
-        resilientCounts = res.counts
-        // the final adaptive plan must show split skewed partitions and
-        // each side's exchange reused across its two joins
-        val plan = res.diff.queryExecution.executedPlan.toString
-        require(plan.toLowerCase.contains("skewed"),
-          s"AQE did not split the hot partition:\n$plan")
-        // no ReusedExchange by design: Catalyst prunes each piece's
-        // columns separately, so the anti joins shuffle KEYS ONLY
-        // (~10% extra bytes) instead of reusing the full-row exchange
-        require("Exchange hashpartitioning".r.findAllIn(plan).length >= 6,
-          s"expected six per-piece exchanges (column-pruned):\n$plan")
-        res.diff.unpersist()
-        resilientCounts.total
-      }
-      timed("diffskew-fo") { // the unsplittable full-outer, for contrast
-        val res = diff.DataColDiff.computeDataframeDiff(
-          hot, clean, Seq("o_orderkey"))
-          .fold(mm => throw new IllegalArgumentException(mm.message), identity)
-        require(res.counts == resilientCounts,
-          s"mode mismatch: full-outer ${res.counts} vs resilient $resilientCounts")
-        res.diff.unpersist()
-        res.counts.total
-      }
-      saved.foreach { case (key, old) =>
+      try {
+        var resilientCounts: diff.FlagCounts = null
+        timed("diffskew-res") {
+          val res = diff.DataColDiff.computeDataframeDiff(
+            hot, clean, Seq("o_orderkey"), skewResilient = true)
+            .fold(mm => throw new IllegalArgumentException(mm.message), identity)
+          resilientCounts = res.counts
+          // the final adaptive plan must show split skewed partitions and
+          // each side's exchange reused across its two joins
+          val plan = res.diff.queryExecution.executedPlan.toString
+          require(plan.toLowerCase.contains("skewed"),
+            s"AQE did not split the hot partition:\n$plan")
+          // no ReusedExchange by design: Catalyst prunes each piece's
+          // columns separately, so the anti joins shuffle KEYS ONLY
+          // (~10% extra bytes) instead of reusing the full-row exchange
+          require("Exchange hashpartitioning".r.findAllIn(plan).length >= 6,
+            s"expected six per-piece exchanges (column-pruned):\n$plan")
+          res.diff.unpersist()
+          resilientCounts.total
+        }
+        // the full-outer contrast runs on unstaged inputs, so its
+        // figure stays comparable across runs
+        spark.catalog.clearCache()
+        timed("diffskew-fo") { // the unsplittable full-outer, for contrast
+          val res = diff.DataColDiff.computeDataframeDiff(
+            hot, clean, Seq("o_orderkey"))
+            .fold(mm => throw new IllegalArgumentException(mm.message), identity)
+          require(res.counts == resilientCounts,
+            s"mode mismatch: full-outer ${res.counts} vs resilient $resilientCounts")
+          res.diff.unpersist()
+          res.counts.total
+        }
+      } finally saved.foreach { case (key, old) =>
         old.fold(spark.conf.unset(key))(spark.conf.set(key, _)) }
-      clean.unpersist(); hot.unpersist()
-    }
+    },
 
-    if (which("diff")) {
-      val orders = queries.Tables.load(spark, dir, "orders")
-      val big = staged(orders.select(col("o_orderkey"), col("o_custkey"),
-          col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"),
-          col("o_orderpriority"),
-          explode(sequence(lit(0), lit(14))).as("copy"))
-        // copies spaced 1e9 apart: perturbedOrders rekeys %97 keys by
-        // +1e8, which must stay INSIDE one copy's keyspace (1e7 spacing
-        // collided — rekeyed copy c landed exactly on copy c+10)
-        .select((col("o_orderkey") + col("copy") * 1000000000L).as("o_orderkey"),
-          col("o_custkey"), col("o_orderstatus"), col("o_totalprice"),
-          col("o_orderdate"), col("o_orderpriority")))
+    entry("diff") { st => import st._
+      // copies spaced 1e9 apart: perturbedOrders rekeys %97 keys by
+      // +1e8, which must stay INSIDE one copy's keyspace (1e7 spacing
+      // collided — rekeyed copy c landed exactly on copy c+10); left
+      // unspread, one partition per read split
+      val big = staged(copies(orders, "o_orderkey", 15, 1000000000L,
+        spread = false))
       timed("diff") {
         val res = diff.DataColDiff.computeDataframeDiff(
           big, queries.DiffQueries.perturbedOrders(big), Seq("o_orderkey"))
@@ -626,73 +656,9 @@ object Stress {
         res.diff.unpersist()
         n
       }
-    }
+    },
 
-    if (which("scd2")) {
-      // SCD2 snapshot apply on the 15× orders blow-up: 2.25M-key open
-      // history vs a 2.27M-row snapshot — every outcome class exercised
-      // at scale (the %-derived deletes/changes/inserts of the gated
-      // query, 15× over). Same keyspace-spacing rule as the diff case.
-      val orders = queries.Tables.load(spark, dir, "orders")
-      val big = staged(orders.select(col("o_orderkey"), col("o_custkey"),
-          col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"),
-          col("o_orderpriority"),
-          explode(sequence(lit(0), lit(14))).as("copy"))
-        .select((col("o_orderkey") + col("copy") * 1000000000L).as("o_orderkey"),
-          col("o_custkey"), col("o_orderstatus"), col("o_totalprice"),
-          col("o_orderdate"), col("o_orderpriority"))
-        .repartition(32))
-      timed("scd2") {
-        val hist = operators.Scd2.initHistory(big, 0L)
-        val out = operators.Scd2.apply(hist,
-          queries.DiffQueries.perturbedOrders(big), Seq("o_orderkey"), 86400L)
-        val byState = out.groupBy(col("valid_to").isNull.as("open"))
-          .count().collect().map(r => r.getBoolean(0) -> r.getLong(1)).toMap
-        // closed rows = deletes + changed-version closes; both present
-        require(byState.getOrElse(true, 0L) > 0 && byState.getOrElse(false, 0L) > 0,
-          s"expected open and closed rows, got $byState")
-        byState.values.sum
-      }
-    }
-
-    if (which("semantic")) {
-      // 20 identical re-keyed copies of every embedding: every clone
-      // group shares one cell (identical vectors → identical centroid
-      // argmax) and must collapse to its lowest id — in-cell pair load
-      // is the 20-clone worst case, cross-group cosines stay ≈ 0.5
-      val vecs = queries.Tables.loadSpread(spark, dir, "embeddings")
-      val nBase = vecs.count()
-      val cloned = staged(vecs.select(col("vec_id"), col("embedding"),
-          explode(sequence(lit(0), lit(19))).as("copy"))
-        .select((col("vec_id") + col("copy") * 1000000L).as("vec_id"),
-          col("embedding"))
-        .repartition(32))
-      timedWarm("semantic") {
-        val n = dedup.SemanticDedup
-          .survivors(cloned, "vec_id", "embedding", 0.99).count()
-        require(n == nBase, s"expected $nBase survivors (one per clone group), got $n")
-        n
-      }
-      // the true-scale form: a TRAINED √N-cell codebook instead of the
-      // stride quantizer (identical drop rule; cells differ, so the
-      // survivor INVARIANT — one per clone group — is the check, not
-      // row equality with the stride run)
-      val k = math.max(16, math.sqrt(nBase * 20.0).toInt)
-      val trained = similarity.IVFIndex.fromKMeans(cloned,
-        similarity.KMeans.centroids(cloned, "vec_id", "embedding",
-          similarity.KMeans.Config(k = k, iters = 1))).persist()
-      timed("semtrained") {
-        val n = dedup.SemanticDedup
-          .survivorsWithCentroids(cloned, "vec_id", "embedding", 0.99,
-            trained)
-          .count()
-        require(n == nBase,
-          s"expected $nBase survivors (one per clone group), got $n")
-        n
-      }
-    }
-
-    if (which("semantic1m")) {
+    entry("semantic1m") { st => import st._
       // SemDeDup at the Σ|cell|² regime's intended scale: 1,000,000
       // synthetic vectors (murmur3-mixed, dim 16), 10% EXACT
       // duplicates (ids >= 900000 clone id - 900000), k = 4096 trained
@@ -704,15 +670,9 @@ object Stress {
       // balanced ideal N/k and N²/k), and the wall time prints for
       // the record. Σ|cell|² ≈ 2.4e8 scored pairs here vs N²/2 =
       // 5·10^11 all-pairs — the 2000× reduction IS the regime claim.
-      val n1m = 1000000L
       val dupBase = 900000L
-      val dim = 16
       val k = 4096
-      val vecs1m = staged(spark.range(0L, n1m, 1L, 32)
-        .select(col("id").as("vec_id"),
-          transform(sequence(lit(0), lit(dim - 1)),
-            j => hash(pmod(col("id"), lit(dupBase)), j).cast("double")
-              / 2147483648.0d).as("embedding")))
+      val vecs1m = staged(vectors(1000000L, 16, dupBase))
       val kmCfg = similarity.KMeans.Config(k = k, iters = 1)
       val cents1m = similarity.KMeans.centroids(
         vecs1m, "vec_id", "embedding", kmCfg)
@@ -739,58 +699,9 @@ object Stress {
         surv.unpersist(blocking = false)
         n
       }
-    }
+    },
 
-    if (which("ivfpq4096")) {
-      // the WHOLE IVFADC search path at the √N-cell regime the
-      // round-10 expressions open: k = 4096 coarse cells over 500k
-      // clustered vectors (dim 32), fused one-job-per-round training,
-      // NearestCentroid coding, CentroidDistMap probe/LUT build (one
-      // 4096-entry distance map per query — the literal formulation
-      // could not plan at this k), cell-keyed ADC screen, exact
-      // re-rank. Asserted: every query fills its k, no self matches,
-      // and every reported cosine BIT-matches the brute-force cosine
-      // of the same pair (the re-rank exactness contract at scale).
-      val nV = 500000L
-      val dimV = 32
-      val nQ = 16
-      val vecs = staged(spark.range(0L, nV, 1L, 32)
-        .select(col("id").as("vec_id"),
-          transform(sequence(lit(0), lit(dimV - 1)),
-            j => (hash(pmod(col("id"), lit(64L)), j).cast("double")
-                / 2147483648.0d
-              + hash(col("id"), j + lit(1000)).cast("double")
-                / 2147483648.0d * 0.05d)).as("embedding")))
-      timed("ivfpq4096") {
-        val cfg = similarity.IvfPq.Config(cells = 4096, nProbe = 8)
-        val k = 10
-        val got = similarity.IvfPq.topK(vecs, "vec_id", "embedding",
-            dimV, _ < nQ, k, cfg).persist()
-        val n = got.count()
-        require(n == nQ.toLong * k, s"expected ${nQ * k} rows, got $n")
-        require(got.filter(col("q_id") === col("n_id")).count() == 0,
-          "self match leaked")
-        val pairs = got.select(col("q_id"), col("n_id"), col("cos_sim"))
-          .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
-        val brute = similarity.BruteForceKNN
-          .topK(vecs, "vec_id", "embedding", _ < nQ, 1000)
-          .select(col("q_id"), col("n_id"), col("cos_sim")).collect()
-          .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-        val hits = pairs.count { case (key, _) => brute.contains(key) }
-        pairs.filter { case (key, _) => brute.contains(key) }.foreach {
-          case (key, cs) =>
-            require(java.lang.Double.doubleToRawLongBits(brute(key)) ==
-              java.lang.Double.doubleToRawLongBits(cs),
-              s"cosine of $key differs from brute force")
-        }
-        println(f"STRESS ivfpq4096 recall@$k vs top-1000 pool: " +
-          f"${hits.toDouble / pairs.length}%.3f")
-        got.unpersist(blocking = false)
-        n
-      }
-    }
-
-    if (which("gram")) {
+    entry("gram") { st => import st._
       // the one-pass Gram/covariance aggregate at pipeline scale:
       // 100k vectors × dim 64 → 208M exploded (i, j) pair terms
       // through ONE map-side-combined aggregate whose shuffled state
@@ -801,30 +712,21 @@ object Stress {
       // path past the int64 moment bound documented in GramMatrix).
       val nG = 100000L
       val dimG = 64
-      val vecsG = staged(spark.range(0L, nG, 1L, 32)
-        .select(col("id").as("vec_id"),
-          transform(sequence(lit(0), lit(dimG - 1)),
-            j => hash(col("id"), j).cast("double") / 2147483648.0d)
-            .as("embedding")))
+      val vecsG = staged(vectors(nG, dimG))
+      def moments(df: DataFrame) = similarity.GramMatrix
+        .upperTriangle(df, "embedding")
+        .select("i", "j", "n", "sx_fp", "sy_fp", "sxy_fp")
+        .collect()
+        .map(r => (r.getInt(0), r.getInt(1)) ->
+          (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
+        .toMap
       timed("gram") {
-        val whole = similarity.GramMatrix
-          .upperTriangle(vecsG, "embedding")
-          .select("i", "j", "n", "sx_fp", "sy_fp", "sxy_fp")
-          .collect()
-          .map(r => (r.getInt(0), r.getInt(1)) ->
-            (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
-          .toMap
+        val whole = moments(vecsG)
         require(whole.size == dimG * (dimG + 1) / 2,
           s"expected ${dimG * (dimG + 1) / 2} cells, got ${whole.size}")
         require(whole.values.forall(_._1 == nG),
           "a cell missed rows")
-        def half(p: Int) = similarity.GramMatrix
-          .upperTriangle(vecsG.filter(col("vec_id") % 2 === p), "embedding")
-          .select("i", "j", "n", "sx_fp", "sy_fp", "sxy_fp")
-          .collect()
-          .map(r => (r.getInt(0), r.getInt(1)) ->
-            (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
-          .toMap
+        def half(p: Int) = moments(vecsG.filter(col("vec_id") % 2 === p))
         val (a, b) = (half(0), half(1))
         whole.foreach { case (cell, (n, sx, sy, sxy)) =>
           val (na, sxa, sya, sxya) = a(cell)
@@ -834,9 +736,9 @@ object Stress {
         }
         whole.size.toLong
       }
-    }
+    },
 
-    if (which("trend")) {
+    entry("trend") { st => import st._
       // exact-rational OLS trend over 50M rows / 1000 groups: ONE
       // map-side-combined aggregate whose shuffled state is 1000
       // moment tuples regardless of N. Asserted: every group present,
@@ -872,22 +774,20 @@ object Stress {
         }
         whole.size.toLong
       }
-    }
+    },
 
-    if (which("mmr")) {
+    entry("mmr") { st => import st._
       // MMR greedy re-rank at serving scale: 20k queries × 20
       // candidates (the pool any ANN face emits), k=5 picks. The k−1
       // rounds join candidate-pool-sized frames only — corpus size
       // never appears. Asserted: exactly 5 dense picks per query and
       // pick 1 == the pool's pure-relevance argmax for every query.
       val nQ = 20000L
-      val candsM = staged(spark.range(0L, nQ * 20L, 1L, 32).select(
-        expr("id div 20").as("q_id"),
-        col("id").as("n_id"),
-        ((col("id") % 1009L).cast("double") / 1009.0).as("rel"),
-        transform(sequence(lit(0), lit(7)),
-          j => hash(col("id"), j).cast("double") / 2147483648.0d)
-          .as("v"))
+      val candsM = staged(vectors(nQ * 20L, 8).select(
+        expr("vec_id div 20").as("q_id"),
+        col("vec_id").as("n_id"),
+        ((col("vec_id") % 1009L).cast("double") / 1009.0).as("rel"),
+        col("embedding").as("v"))
         .withColumn("nrm", expr("aggregate(v, 0.0d, (s, x) -> s + x * x)")))
       timed("mmr") {
         val picks = similarity.Mmr.rerank(candsM, k = 5).persist()
@@ -906,9 +806,9 @@ object Stress {
         picks.unpersist()
         nPicks
       }
-    }
+    },
 
-    if (which("symdel")) {
+    entry("symdel") { st => import st._
       // Deletion-neighborhood fuzzy join at roster scale: 1M clean
       // 10-hex-char keys (md5-derived — a DENSE numeric roster would
       // put every probe at distance 1 from dozens of keys; random hex
@@ -941,9 +841,9 @@ object Stress {
         resolved.unpersist()
         n
       }
-    }
+    },
 
-    if (which("linkpred")) {
+    entry("linkpred") { st => import st._
       // RA link prediction at graph scale: 500k nodes, 2M directed
       // edges with 100 planted hubs (~2k in-degree each — their
       // wedges alone would be ~4e8 rows). The maxDegree cap drops hub
@@ -971,9 +871,9 @@ object Stress {
         top.unpersist()
         rows.length.toLong
       }
-    }
+    },
 
-    if (which("binquant1m")) {
+    entry("binquant1m") { st => import st._
       // Binary SimHash search at corpus scale: 1,000,000 vectors
       // (dim 64; ids >= 900000 are EXACT duplicates of id - 900000),
       // 128-bit fingerprints, Hamming screen to 512 candidates, exact
@@ -984,14 +884,9 @@ object Stress {
       // — the screen provably cannot lose a hamming-0 twin), all k
       // slots fill, no self matches, and a second run returns the
       // identical frame.
-      val nB = 1000000L
       val dupBaseB = 900000L
       val dimB = 64
-      val vecsB = staged(spark.range(0L, nB, 1L, 32)
-        .select(col("id").as("vec_id"),
-          transform(sequence(lit(0), lit(dimB - 1)),
-            j => hash(pmod(col("id"), lit(dupBaseB)), j).cast("double")
-              / 2147483648.0d).as("embedding")))
+      val vecsB = staged(vectors(1000000L, dimB, dupBaseB))
       timed("binquant1m") {
         def run() = similarity.BinaryQuant.topKReranked(vecsB,
           "vec_id", "embedding",
@@ -1015,9 +910,9 @@ object Stress {
         top.unpersist()
         rows.length.toLong
       }
-    }
+    },
 
-    if (which("hardmine1m")) {
+    entry("hardmine1m") { st => import st._
       // Batch-hard triplet mining at corpus scale: 1,000,000 labeled
       // vectors (dim 64), 8 anchors, ONE broadcast scan + ONE
       // conditional min/max(struct) aggregate — no window over the
@@ -1027,16 +922,10 @@ object Stress {
       // cosine ≈ 1 and every anchor violates any positive margin.
       // Asserted: exactly 8 rows, twin negatives, violation flags, and
       // a second run returns the identical frame.
-      val nH = 1000000L
       val dupBaseH = 900000L
-      val dimH = 64
-      val vecsH = staged(spark.range(0L, nH, 1L, 32)
-        .select(col("id").as("vec_id"),
-          transform(sequence(lit(0), lit(dimH - 1)),
-            j => hash(pmod(col("id"), lit(dupBaseH)), j).cast("double")
-              / 2147483648.0d).as("embedding"),
-          ((col("id") + expr(s"id div ${dupBaseH}L")) % 100L)
-            .cast("int").as("label")))
+      val vecsH = staged(vectors(1000000L, 64, dupBaseH).withColumn("label",
+        ((col("vec_id") + expr(s"vec_id div ${dupBaseH}L")) % 100L)
+          .cast("int")))
       timed("hardmine1m") {
         def run() = similarity.HardMining.hardestTriplets(vecsH,
           "vec_id", "embedding", "label",
@@ -1057,19 +946,9 @@ object Stress {
         top.unpersist()
         rows.length.toLong
       }
-    }
+    },
 
-    if (which("pmi")) {
-      val corpus = staged(corpus10x)
-      timed("pmi") {
-        // 500k docs → pair/unigram tables + top-50; the clone structure
-        // multiplies counts 10× but the ratio (and so the ranking) is
-        // scale-invariant — a useful sanity on the arithmetic
-        text.Collocations.topPmi(corpus, "text", 50, 50L).count()
-      }
-    }
-
-    if (which("bpe")) {
+    entry("bpe") { st => import st._
       // 500k docs, 10k-word vocabulary, 16 merge rounds — the
       // vocabulary-sized-iteration claim under a 40× larger training
       // table than the gated query's. Clone-invariance is the
@@ -1077,9 +956,8 @@ object Stress {
       // cannot change any round's argmax, so the rules learned from
       // the cloned corpus must equal the base corpus's exactly, with
       // pair_count scaled 10×.
-      val base = staged(queries.Tables.loadSpread(spark, dir, "documents"))
+      val base = staged(loadSpread("documents"))
       val baseRules = text.BpeTrain.merges(base, "text", 16, 10000).collect()
-      spark.catalog.clearCache()
       val corpus = staged(corpus10x)
       timed("bpe") {
         val rules = text.BpeTrain.merges(corpus, "text", 16, 10000).collect()
@@ -1092,20 +970,9 @@ object Stress {
           "pair counts must scale exactly 10x")
         rules.length.toLong
       }
-    }
+    },
 
-    if (which("epochs")) {
-      val corpus = staged(corpus10x
-        .withColumn("source", concat(lit("src"), col("doc_id") % 4)))
-      timed("epochs") {
-        operators.Sampling.epochMix(corpus, "doc_id", "source",
-          Map("src0" -> 3.0, "src1" -> 1.5, "src2" -> 0.25), 1.0)
-          .write.format("noop").mode("overwrite").save()
-        corpus.count()
-      }
-    }
-
-    if (which("outliersbig")) {
+    entry("outliersbig") { st => import st._
       // ONE 5M-row group: both forms run and must agree bit-for-bit.
       // At this size the group still sorts in one task's memory, so
       // the windowed form WINS on wall-clock (see the operator's
@@ -1117,21 +984,20 @@ object Stress {
           pmod(col("id") * 40503L, lit(1009L)).cast("double")).as("v"))
         .repartition(32))
       var spread: Array[org.apache.spark.sql.Row] = null
-      timedWarm("outliersbig-sp") {
+      timed("outliersbig-sp") {
         spread = operators.RobustOutliers
           .summarySpread(df, "grp", "v", nSub = 64).collect()
         spread.head.getLong(4)
       }
-      timedWarm("outliersbig-win") {
+      timed("outliersbig-win") {
         val win = operators.RobustOutliers.summary(df, "grp", "v").collect()
         require(win.toSeq == spread.toSeq,
           s"spread diverged: ${spread.toSeq} vs ${win.toSeq}")
         win.head.getLong(4)
       }
-      spark.catalog.clearCache()
-    }
+    },
 
-    if (which("equidepth")) {
+    entry("equidepth") { st => import st._
       // 10M skewed doubles (quadratic pile-up toward 0) into 100 exact
       // quantile buckets: counts must differ by ≤ 1, ranges must be
       // non-overlapping and ordered — the full correctness contract,
@@ -1152,9 +1018,9 @@ object Stress {
         }
         h.length.toLong
       }
-    }
+    },
 
-    if (which("pagerank")) {
+    entry("pagerank") { st => import st._
       // 5M-edge pseudo-random graph over 500k nodes, 5 rounds — the
       // operator's shape claim under load: the edge side is shuffled
       // and sorted ONCE (persisted pre-partitioned), each round pays
@@ -1178,9 +1044,9 @@ object Stress {
           "mass exceeded the simplex bound")
         n
       }
-    }
+    },
 
-    if (which("order")) {
+    entry("order") { st => import st._
       // 10M docs through the two-level scan (nSub=1024 → ~3k buckets
       // across 3 stages; the single-partition window sees only those).
       // Permutation validity asserted globally: positions are exactly
@@ -1197,27 +1063,19 @@ object Stress {
           s"positions are not a permutation of [0, 10M): $r")
         r.getLong(0)
       }
-    }
+    },
 
-    if (which("profilediff")) {
+    entry("profilediff") { st => import st._
       // profile screen over two 10×-orders 12-col snapshots (1.5M rows
       // at sf0.1, 6 derived columns) — the thing it must beat is the
       // row diff's full-outer over the same pair
-      val orders = queries.Tables.load(spark, dir, "orders")
       // widen AFTER the drift so the derived columns drift with their
       // source (each side is an independently-derived snapshot — the
       // production shape, where a snapshot is materialized end to end)
       def widen(df: DataFrame) = df.select((col("*") +:
         (0 until 6).map(j => (col("o_totalprice") * (j + 2))
           .as(s"derived_$j"))): _*)
-      val narrow = orders.select(col("o_orderkey"),
-          col("o_custkey"), col("o_orderstatus"), col("o_totalprice"),
-          col("o_orderdate"), col("o_orderpriority"),
-          explode(sequence(lit(0), lit(9))).as("copy"))
-        .select((col("o_orderkey") + col("copy") * 1000000000L)
-          .as("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-          col("o_totalprice"), col("o_orderdate"), col("o_orderpriority"))
-        .repartition(32)
+      val narrow = copies(orders, "o_orderkey", 10, 1000000000L)
       val base = staged(widen(narrow))
       val drifted = staged(widen(narrow.withColumn("o_totalprice",
         when(col("o_orderkey") % 97 === 0, col("o_totalprice") + 1.0)
@@ -1231,10 +1089,9 @@ object Stress {
           flags.getOrElse("NODIFF", 0L) == 5L, s"unexpected flags: $flags")
         flags.values.sum
       }
-      base.unpersist(); drifted.unpersist()
-    }
+    },
 
-    if (which("outliers")) {
+    entry("outliers") { st => import st._
       // 5M values over 5k groups (groups ≫ cores — the regime the
       // operator documents); ~0.1% planted spikes must all be caught
       // and nothing else (uniform base values stay within 3·MAD).
@@ -1255,9 +1112,9 @@ object Stress {
         require(r.getDouble(1) > 0.0, "mad collapsed to zero")
         out.count()
       }
-    }
+    },
 
-    if (which("kmeans")) {
+    entry("kmeans") { st => import st._
       // 50 identical re-keyed copies of every sf embedding (100k × 64-dim
       // at sf0.1). Two invariants make this a distributed-correctness
       // stress, not just a timing: clones of one vector always land in
@@ -1265,15 +1122,12 @@ object Stress {
       // the TRAINED CENTROIDS must be bit-identical to training on the
       // base corpus alone — every membership set scales ×50, so every
       // integer sum and count scales ×50 and the means cancel exactly.
-      val base = queries.Tables.loadSpread(spark, dir, "embeddings")
-      val cloned = staged(base.select(col("vec_id"), col("embedding"),
-          explode(sequence(lit(0), lit(49))).as("copy"))
-        .select((col("vec_id") + col("copy") * 1000000L).as("vec_id"),
-          col("embedding"))
-        .repartition(32))
+      // The clones are NOT staged: the timing includes the blow-up, as
+      // the SURVEY figure does.
+      val base = loadSpread("embeddings")
+      val cloned = copies(base.select("vec_id", "embedding"), "vec_id", 50)
       val baseCents = similarity.KMeans
         .centroids(base, "vec_id", "embedding")
-      spark.catalog.clearCache() // drop base prep; keep the staged clones
       timed("kmeans") {
         val cents = similarity.KMeans
           .centroids(cloned, "vec_id", "embedding")
@@ -1291,9 +1145,9 @@ object Stress {
         require(split == 0L, s"$split clone families split across clusters")
         n
       }
-    }
+    },
 
-    if (which("kmeans4096")) {
+    entry("kmeans4096") { st => import st._
       // the √N-cell regime the codebook-argmin expression opens
       // (NearestCentroid — constant plan/codegen size in k): train
       // k=4096 over 100k vectors (seeds = the 4096 smallest ids, which
@@ -1302,12 +1156,8 @@ object Stress {
       // scale) and label the whole corpus with the frozen codebook.
       // The 4096×64 codebook is ~2 MB of task-binary payload; under
       // the old literal-subtree argmin this plan was unbuildable.
-      val base = queries.Tables.loadSpread(spark, dir, "embeddings")
-      val cloned = staged(base.select(col("vec_id"), col("embedding"),
-          explode(sequence(lit(0), lit(49))).as("copy"))
-        .select((col("vec_id") + col("copy") * 1000000L).as("vec_id"),
-          col("embedding"))
-        .repartition(32))
+      val cloned = staged(copies(loadSpread("embeddings")
+        .select("vec_id", "embedding"), "vec_id", 50))
       timed("kmeans4096") {
         val cfg = similarity.KMeans.Config(k = 4096, iters = 2)
         val cents = similarity.KMeans
@@ -1324,9 +1174,9 @@ object Stress {
         require(bad == 0L, s"$bad vectors labeled with unknown cids")
         n
       }
-    }
+    },
 
-    if (which("bm25")) {
+    entry("bm25") { st => import st._
       // keyword retrieval over the 10× corpus (~500k docs at sf0.1):
       // the inverted-index aggregate is the postings-scale stage; the
       // query-term join stays broadcast and the top-k WindowGroupLimit
@@ -1341,46 +1191,44 @@ object Stress {
         require(n > 0 && n <= 80, s"expected <=80 result rows, got $n")
         n
       }
-    }
+    },
 
-    if (which("ivfserve")) {
+    entry("ivfserve") { st => import st._
       // the persisted-index serving loop at scale: build a 64-cell
       // residual IVFADC index over 100k vectors (train + code + write
       // cell-partitioned), then serve a 100-query batch from the
       // catalog table — the serve pays ZERO training jobs and scans
       // only its probed cells (nProbe/cells = 1/16 of the corpus)
-      val base = queries.Tables.loadSpread(spark, dir, "embeddings")
-      val cloned = staged(base.select(col("vec_id"), col("embedding"),
-          explode(sequence(lit(0), lit(19))).as("copy"))
-        .select((col("vec_id") + col("copy") * 1000000L).as("vec_id"),
-          col("embedding"))
-        .repartition(32))
+      val cloned = staged(copies(loadSpread("embeddings")
+        .select("vec_id", "embedding"), "vec_id", 20))
       val cfg = similarity.IvfPq.Config(cells = 64, nProbe = 4,
         residual = true)
-      var model: similarity.IvfPq.Model = null
-      timedWarm("ivfbuild") {
-        model = similarity.IvfPq.writeIndex(cloned, "vec_id", "embedding",
-          64, "stress_ivf_idx", cfg)
-        spark.table("stress_ivf_idx").count()
+      try {
+        var model: similarity.IvfPq.Model = null
+        timed("ivfbuild") {
+          model = similarity.IvfPq.writeIndex(cloned, "vec_id", "embedding",
+            64, "stress_ivf_idx", cfg)
+          spark.table("stress_ivf_idx").count()
+        }
+        def serveOnce(): Long = {
+          val served = similarity.IvfPq.topKIndexed(spark, "stress_ivf_idx",
+            cloned.filter(col("vec_id") < 100), "vec_id", "embedding",
+            64, 10, cfg, Some(model))
+          val n = served.count()
+          require(n == 100L * 10L, s"expected 1000 result rows, got $n")
+          n
+        }
+        timed("ivfserve")(serveOnce())
+        // second serve = the recurring cost (the first pays plan codegen
+        // + JIT for the fresh 64-cell argmin/LUT classes)
+        timed("ivfserve2")(serveOnce())
+      } finally {
+        spark.sql("DROP TABLE IF EXISTS stress_ivf_idx")
+        spark.sql("DROP TABLE IF EXISTS stress_ivf_idx_model")
       }
-      def serveOnce(): Long = {
-        val served = similarity.IvfPq.topKIndexed(spark, "stress_ivf_idx",
-          cloned.filter(col("vec_id") < 100), "vec_id", "embedding",
-          64, 10, cfg, Some(model))
-        val n = served.count()
-        require(n == 100L * 10L, s"expected 1000 result rows, got $n")
-        n
-      }
-      timedWarm("ivfserve")(serveOnce())
-      // second serve = the recurring cost (the first pays plan codegen
-      // + JIT for the fresh 64-cell argmin/LUT classes)
-      timedWarm("ivfserve2")(serveOnce())
-      spark.sql("DROP TABLE IF EXISTS stress_ivf_idx")
-      spark.sql("DROP TABLE IF EXISTS stress_ivf_idx_model")
-      spark.catalog.clearCache()
-    }
+    },
 
-    if (which("cms")) {
+    entry("cms") { st => import st._
       // bounded-state claim at 10× corpus: ~3.5M token occurrences
       // explode ×depth yet aggregate to ≤ depth×width cells — the
       // shuffle carries bounded state per partition regardless of
@@ -1389,7 +1237,7 @@ object Stress {
       val toks = staged(corpus10x.select(
         explode(graft.text.TokenCount.tokens(col("text"))).as("token")))
       val cfg = operators.CountMin.Config()
-      timedWarm("cms") {
+      timed("cms") {
         val cells = operators.CountMin.cells(toks, "token", cfg).persist()
         val nc = cells.count()
         require(nc <= cfg.depth.toLong * cfg.width,
@@ -1397,23 +1245,19 @@ object Stress {
         operators.CountMin
           .estimates(cells, toks.distinct(), "token", cfg).count()
       }
-      spark.catalog.clearCache()
-    }
+    },
 
-    if (which("knngraph")) {
+    entry("knngraph") { st => import st._
       // the all-sources graph at 100k vectors (50× cloned corpus —
       // every vector carries 49 exact clones, so cells are dense and
       // cosine TIES are everywhere, exercising the (cos DESC, n_id)
       // total order): build the cell-local graph, then one seeded
       // NN-descent round (which rebuilds the base graph internally —
       // the honest end-to-end cost of graph + repair)
-      val base = queries.Tables.loadSpread(spark, dir, "embeddings")
-      val cloned = staged(base.select(col("vec_id"), col("embedding"),
-          explode(sequence(lit(0), lit(49))).as("copy"))
-        .select((col("vec_id") + col("copy") * 1000000L).as("vec_id"),
-          col("embedding"))
-        .repartition(32))
-      timedWarm("knngraph") {
+      val base = loadSpread("embeddings")
+      val cloned = staged(copies(base.select("vec_id", "embedding"),
+        "vec_id", 50))
+      timed("knngraph") {
         val g = similarity.KnnGraph.build(cloned, "vec_id", "embedding", 5)
         val bad = g.groupBy("src_id")
           .agg(count(lit(1)).as("d"), max("rank").as("mr"))
@@ -1421,7 +1265,7 @@ object Stress {
         require(bad == 0L, s"$bad sources with degree > k or rank gaps")
         g.count()
       }
-      timedWarm("nndescent") {
+      timed("nndescent") {
         similarity.NnDescent
           .refine(cloned, "vec_id", "embedding", 5, seedBuckets = 4096)
           .count()
@@ -1436,8 +1280,8 @@ object Stress {
           .centroids(cloned, "vec_id", "embedding", cfg))
           .persist()
       }
-      var standing: org.apache.spark.sql.DataFrame = null
-      timedWarm("knngtrained") {
+      var standing: DataFrame = null
+      timed("knngtrained") {
         standing = similarity.KnnGraph.buildWithCentroids(cloned, "vec_id",
             "embedding", 5, trainedCents)
           .persist()
@@ -1450,27 +1294,22 @@ object Stress {
       val batch = staged(base.limit(1000)
         .select((col("vec_id") + 777000000L).as("vec_id"),
           col("embedding")))
-      timedWarm("knngingest") {
+      timed("knngingest") {
         val merged = similarity.GraphIngest.merged(cloned, batch, standing,
           "vec_id", "embedding", 5, trainedCents)
         val n = merged.count()
         require(n >= standing.count(), "merge lost sources")
         n
       }
-      spark.catalog.clearCache()
-    }
+    },
 
-    if (which("simquant")) {
+    entry("simquant") { st => import st._
       // same 50× cloned corpus: each query's identical clones sit at
       // quantized distance 0, so the screen's floor is exercised (49
       // zero-distance candidates per query) while 100k vectors stream
       // through the int8 codes
-      val base = queries.Tables.loadSpread(spark, dir, "embeddings")
-      val cloned = staged(base.select(col("vec_id"), col("embedding"),
-          explode(sequence(lit(0), lit(49))).as("copy"))
-        .select((col("vec_id") + col("copy") * 1000000L).as("vec_id"),
-          col("embedding"))
-        .repartition(32))
+      val cloned = staged(copies(loadSpread("embeddings")
+        .select("vec_id", "embedding"), "vec_id", 50))
       timed("simquant") {
         val out = similarity.ScalarQuant.topK(cloned, "vec_id", "embedding",
           _ < 8, 10).collect()
@@ -1479,28 +1318,26 @@ object Stress {
           "a non-clone outranked a zero-distance clone in the screen")
         out.length.toLong
       }
-    }
+    },
 
-    if (which("linkage")) {
+    entry("linkage") { st => import st._
       // 20× cloned reference roster (300k rows at sf0.1): blocks grow
       // 20-fold (~2,400 rows each), candidate volume ~36M scored pairs —
       // the blocking join's real load. Clone names carry a "-NN" suffix
-      // (distance ≥ 2 from every copy-0 name), so each dirtied record's
-      // argmin must still be its exact copy-0 source.
-      val cust = queries.Tables.load(spark, dir, "customer")
-      val reference = staged(cust.select(col("c_custkey"), col("c_name"),
-          col("c_nationkey"), col("c_mktsegment"),
-          explode(sequence(lit(0), lit(19))).as("copy"))
-        .select((col("c_custkey") + col("copy") * 10000000L).as("c_custkey"),
-          when(col("copy") === 0, col("c_name"))
-            .otherwise(concat(col("c_name"), lit("-"),
-              col("copy").cast("string"))).as("c_name"),
-          col("c_nationkey"), col("c_mktsegment"))
-        .repartition(32))
+      // (distance ≥ 2 from every copy-0 name; the copy index is
+      // c_custkey div 10^7), so each dirtied record's argmin must still
+      // be its exact copy-0 source.
+      val cust = load("customer")
+      val reference = staged(copies(cust.select("c_custkey", "c_name",
+          "c_nationkey", "c_mktsegment"), "c_custkey", 20, 10000000L)
+        .withColumn("c_name", when(col("c_custkey") < 10000000L,
+            col("c_name"))
+          .otherwise(concat(col("c_name"), lit("-"),
+            expr("c_custkey div 10000000").cast("string")))))
       val dirty = staged(
         queries.Relational.dirtyCustomers(cust).repartition(32))
       val nDirty = dirty.count()
-      timedWarm("linkage") {
+      timed("linkage") {
         val out = operators.RecordLinkage.resolve(dirty, reference,
           Seq("c_nationkey", "c_mktsegment"), "d_id", "d_name",
           "c_custkey", "c_name")
@@ -1511,10 +1348,9 @@ object Stress {
         require(n == nDirty, s"expected $nDirty resolved, got $n")
         n
       }
-      spark.catalog.clearCache()
-    }
+    },
 
-    if (which("ntile")) {
+    entry("ntile") { st => import st._
       // grouped n-tile on the real-corpus skew: one group carries 90%
       // of 2M rows — the shape where ntile() OVER (PARTITION BY g)
       // funnels the majority group through one reducer; GroupedNtile's
@@ -1538,9 +1374,9 @@ object Stress {
           s"bucket spread ${r.getLong(1)} in group ${r.getString(0)}"))
         sizes.map(_.getLong(2)).sum
       }
-    }
+    },
 
-    if (which("novelty")) {
+    entry("novelty") { st => import st._
       // first-occurrence scoring where EVERY shingle has df >= 10 (the
       // ten-clone corpus): the min-owner aggregate must stay one
       // map-side-combinable pass — cost tracks postings, not df². The
@@ -1555,9 +1391,9 @@ object Stress {
           s"$clonesWithNew later clones claimed novel content")
         out.count()
       }
-    }
+    },
 
-    if (which("hotband")) {
+    entry("hotband") { st => import st._
       // THE band-join skew case: 10% of the corpus shares a long
       // boilerplate prefix that dominates every minhash coordinate, so
       // without intervention ALL of them land in ONE band bucket per
@@ -1583,35 +1419,31 @@ object Stress {
             .otherwise(tail).as("text"))
       }
       val cfgCap = dedup.MinHashLSH.Config(maxShingleDocFreq = Some(1000L))
+      // raw band-join candidate rows (doc pairs sharing a band bucket)
+      def bandPairs(docs: DataFrame, cfg: dedup.MinHashLSH.Config) = {
+        val b = dedup.MinHashLSH.bands(dedup.MinHashLSH
+          .docShingles(docs, "doc_id", "text", cfg).persist(), cfg)
+        b.as("a").join(b.as("b"),
+          col("a.band_id") === col("b.band_id") &&
+            col("a.band_val") === col("b.band_val") &&
+            col("a.doc_id") < col("b.doc_id"))
+      }
 
       // (a) small corpus, NO cap: the hot bucket is quadratic — count
       // raw band-join candidates (500 boiler docs → ≈ 500²·6 rows)
       val small = staged(corpus(5000))
-      timedWarm("hotband-raw") {
-        val sh = dedup.MinHashLSH.docShingles(small, "doc_id", "text")
-          .persist()
-        val b = dedup.MinHashLSH.bands(sh, dedup.MinHashLSH.Config())
-        val cand = b.as("a").join(b.as("b"),
-          col("a.band_id") === col("b.band_id") &&
-            col("a.band_val") === col("b.band_val") &&
-            col("a.doc_id") < col("b.doc_id")).count()
+      timed("hotband-raw") {
+        val cand = bandPairs(small, dedup.MinHashLSH.Config()).count()
         require(cand > 500L * 499L / 2,
           s"expected a quadratic hot bucket, saw $cand candidates")
         cand
       }
-      spark.catalog.clearCache()
 
       // (b) 10× corpus WITH the cap: candidates collapse to the twin
       // collisions (~linear), and every planted twin still verifies
       val big = staged(corpus(50000))
       timed("hotband-cap") {
-        val sh = dedup.MinHashLSH.docShingles(big, "doc_id", "text", cfgCap)
-          .persist()
-        val b = dedup.MinHashLSH.bands(sh, cfgCap)
-        val cand = b.as("a").join(b.as("b"),
-          col("a.band_id") === col("b.band_id") &&
-            col("a.band_val") === col("b.band_val") &&
-            col("a.doc_id") < col("b.doc_id"))
+        val cand = bandPairs(big, cfgCap)
           .select(col("a.doc_id"), col("b.doc_id")).distinct().count()
         require(cand < 20L * 50000L,
           s"cap failed to linearize the hot bucket: $cand candidates")
@@ -1622,9 +1454,9 @@ object Stress {
         require(pairs == 250L, s"expected all 250 planted twins, got $pairs")
         cand
       }
-    }
+    },
 
-    if (which("coldcatalog")) {
+    entry("coldcatalog") { st => import st._
       // the production-restart round-trip: write EVERY persisted index
       // family (bm25, binary-simhash, IVFADC, symdelete, embedding
       // buckets, dedup bands) to the catalog, drop all in-memory state
@@ -1636,10 +1468,8 @@ object Stress {
       // external query frame, ≡ the INLINE no-index path). Each index
       // already round-trips in its own spec; this entry proves all six
       // survive the SAME restart in one catalog.
-      val docs = staged(queries.Tables.loadSpread(spark, dir, "documents")
-        .select(col("doc_id"), col("text")))
-      val vecs = staged(queries.Tables.loadSpread(spark, dir, "embeddings")
-        .select(col("vec_id"), col("embedding")))
+      val docs = staged(loadSpread("documents").select("doc_id", "text"))
+      val vecs = staged(loadSpread("embeddings").select("vec_id", "embedding"))
       def snap(df: DataFrame): Seq[String] =
         df.collect().map(_.toString).sorted.toSeq
 
@@ -1662,18 +1492,9 @@ object Stress {
 
       // a previous aborted run may have left orphan warehouse dirs the
       // fresh in-memory catalog no longer knows about — clear them
-      locally {
-        val wh = new java.io.File("spark-warehouse")
-        Option(wh.listFiles()).getOrElse(Array.empty)
-          .filter(_.getName.startsWith("cold_"))
-          .foreach { d =>
-            def rm(f: java.io.File): Unit = {
-              Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-              f.delete(): Unit
-            }
-            rm(d)
-          }
-      }
+      Option(new java.io.File("spark-warehouse").listFiles())
+        .getOrElse(Array.empty).filter(_.getName.startsWith("cold_"))
+        .foreach(FileUtils.deleteDirectory)
       timed("coldwrite") {
         graft.text.Bm25.writeIndex(docs, "doc_id", "text", "cold_bm25")
         similarity.BinaryQuant.writeIndex(vecs, "vec_id", "embedding",
@@ -1745,9 +1566,9 @@ object Stress {
         (coldBm25.size + coldBq.size + coldIvf.size + coldSym.size +
           coldEmb.size + coldDedup.size).toLong
       }
-    }
+    },
 
-    if (which("cowtable")) {
+    entry("cowtable") { st => import st._
       // the table-format write-amplification claim, measured: on a
       // 200-file / 2.25M-row key-clustered CowTable, a key-CLUSTERED
       // merge (one file's key range) must rewrite only that file —
@@ -1756,47 +1577,42 @@ object Stress {
       // rewrite. The gap IS the format's value at scale; both results
       // are content-asserted.
       import tables.{CowTable, TxLog}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_stress_cow"
-      val rootP = new org.apache.hadoop.fs.Path(root)
-      val rfs = TxLog.fs(spark, root)
-      if (rfs.exists(rootP)) { rfs.delete(rootP, true); () }
-      val t = s"$root/t"
-      val orders = queries.Tables.load(spark, dir, "orders")
+      val t = s"$scratch/t"
+      val orders3 = load("orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      val big = staged((0 until 15).map(i => orders.select(
+      val big = staged((0 until 15).map(i => orders3.select(
           (col("o_orderkey") + lit(i * 10000000L)).as("k"),
           col("o_custkey").as("c"), col("o_totalprice").as("p")))
         .reduce(_ unionByName _))
       val nRows = big.count()
+      // the rows of `big` matching `pred`, price raised by `d`
+      def bumped(pred: org.apache.spark.sql.Column, d: Double) =
+        big.filter(pred).select(col("k"), col("c"), (col("p") + d).as("p"))
 
-      timedWarm("cowcreate") {
+      timed("cowcreate") {
         CowTable.create(spark, t, big.repartitionByRange(200, col("k")),
           Seq("k"))
         nRows
       }
-      timedWarm("cowclustered") {
+      timed("cowclustered") {
         // ~1 file's worth of keys: the first copy's low range.
-        val upd = big.filter(col("k") < 12000)
-          .select(col("k"), col("c"), (col("p") + 1.0d).as("p"))
-        val m = CowTable.merge(spark, t, upd, Seq("k"),
-          checkUniqueKeys = false)
+        val m = CowTable.merge(spark, t, bumped(col("k") < 12000, 1.0d),
+          Seq("k"), checkUniqueKeys = false)
         require(m.touchedFiles <= 4,
           s"clustered merge touched ${m.touchedFiles} files")
         require(m.prunedFiles >= 190,
           s"zone maps pruned only ${m.prunedFiles}")
         m.addedRows
       }
-      timedWarm("cowrename") {
+      timed("cowrename") {
         // RENAME COLUMN on the 200-file / 2.25M-row table: one
         // metadata commit, zero files moved, and a key-clustered
         // merge under the NEW name still prunes off the zone maps
-        val filesBefore = tables.TxLog.snapshot(spark, t)
-          .files.map(_.path).toSet
-        val t0 = System.nanoTime()
-        CowTable.renameColumn(spark, t, "k", "key_id")
-        val renameMs = (System.nanoTime() - t0) / 1e6
+        val filesBefore = TxLog.snapshot(spark, t).files.map(_.path).toSet
+        val renameMs =
+          Runner.seconds(CowTable.renameColumn(spark, t, "k", "key_id")) * 1e3
         println(f"STRESS cowrename commit: $renameMs%.0f ms (200 files)")
-        require(tables.TxLog.snapshot(spark, t).files.map(_.path).toSet
+        require(TxLog.snapshot(spark, t).files.map(_.path).toSet
           == filesBefore, "rename moved files")
         val m = CowTable.merge(spark, t,
           big.filter(col("k") < 12000).select(col("k").as("key_id"),
@@ -1807,12 +1623,11 @@ object Stress {
         CowTable.renameColumn(spark, t, "key_id", "k")
         nRows
       }
-      timedWarm("cowscattered") {
+      timed("cowscattered") {
         // keys ≡ 3 (mod 1000) across the WHOLE range: bounds prune
         // nothing and nearly every file holds a match.
-        val upd = big.filter(col("k") % 1000 === 3)
-          .select(col("k"), col("c"), (col("p") + 2.0d).as("p"))
-        val m = CowTable.merge(spark, t, upd, Seq("k"),
+        val m = CowTable.merge(spark, t, bumped(col("k") % 1000 === 3, 2.0d),
+          Seq("k"),
           checkUniqueKeys = false)
         require(m.touchedFiles >= 150,
           s"scattered merge touched only ${m.touchedFiles} files")
@@ -1827,30 +1642,33 @@ object Stress {
         require(deleted.nonEmpty, "vacuum reclaimed nothing")
         got.getLong(0)
       }
+      // the labels below rebuild `big` from the orders scan, so their
+      // SURVEY figures stay comparable
+      spark.catalog.clearCache()
       // Hive-partitioned face at the same scale: 15 date-like
       // partitions × 2.25M rows; a single-partition-keyed merge must
       // prune every other partition from the manifest and leave their
       // files untouched on disk.
-      val tp = s"$root/tp"
-      timedWarm("cowpartwrite") {
+      val tp = s"$scratch/tp"
+      timed("cowpartwrite") {
         CowTable.create(spark, tp,
           big.withColumn("day", col("k") % 15), Seq("k"),
           partitionBy = Seq("day"))
         nRows
       }
       timed("cowpartmerge") {
-        val before = tables.TxLog.snapshot(spark, tp).files
+        val before = TxLog.snapshot(spark, tp).files
           .filterNot(_.path.contains("/day=7/")).map(_.path).toSet
         val upd = big.filter(col("k") % 15 === 7 && col("k") < 1000000)
           .select(col("k"), col("c"), (col("p") + 3.0d).as("p"),
             (col("k") % 15).as("day"))
-        val total = before.size + tables.TxLog.snapshot(spark, tp)
+        val total = before.size + TxLog.snapshot(spark, tp)
           .files.count(_.path.contains("/day=7/"))
         val m = CowTable.merge(spark, tp, upd, Seq("day", "k"),
           checkUniqueKeys = false)
         require(m.prunedFiles > 0 && m.candidateFiles < total,
           s"partition pruning failed: $m of $total files")
-        val after = tables.TxLog.snapshot(spark, tp).files
+        val after = TxLog.snapshot(spark, tp).files
           .filterNot(_.path.contains("/day=7/")).map(_.path).toSet
         require(after == before,
           "files outside the merged partition moved")
@@ -1864,18 +1682,19 @@ object Stress {
       // sub-second driver work. Planning cost tracks FILE COUNT, so
       // 2,000 entries is the shape proxy for the ~1e5 of a 100 TB
       // table at 1 GB files (the fold is a linear hash-map pass).
-      val tm = s"$root/tm"
-      timedWarm("cowmanifest") {
+      val tm = s"$scratch/tm"
+      timed("cowmanifest") {
         CowTable.create(spark, tm,
           big.repartitionByRange(2000, col("k")), Seq("k"))
         TxLog.snapshot(spark, tm).files.size.toLong
       }
       timed("cowplan") {
-        val t0 = System.nanoTime()
-        val snap = TxLog.snapshot(spark, tm)
-        val foldMs = (System.nanoTime() - t0) / 1e6
-        require(snap.files.size >= 1990,
-          s"expected ~2000 manifest entries, got ${snap.files.size}")
+        var nFiles = 0
+        val foldMs = Runner.seconds {
+          nFiles = TxLog.snapshot(spark, tm).files.size
+        } * 1e3
+        require(nFiles >= 1990,
+          s"expected ~2000 manifest entries, got $nFiles")
         // The fold is expected sub-second; report it as a metric and
         // only hard-fail at a 10x backstop so a loaded host can't fail
         // the stress run for a timing reason unrelated to correctness
@@ -1887,12 +1706,10 @@ object Stress {
             "exceeds the expected sub-second budget (loaded host?)")
         require(foldMs < 10000, f"manifest fold took $foldMs%.0f ms " +
           "(10x over budget -- structural, not host noise)")
-        val upd = big.filter(col("k") < 3000)
-          .select(col("k"), col("c"), (col("p") + 9.0d).as("p"))
-        val m = CowTable.merge(spark, tm, upd, Seq("k"),
-          checkUniqueKeys = false)
+        val m = CowTable.merge(spark, tm, bumped(col("k") < 3000, 9.0d),
+          Seq("k"), checkUniqueKeys = false)
         require(m.prunedFiles >= 1990,
-          s"pruned only ${m.prunedFiles} of ${snap.files.size}")
+          s"pruned only ${m.prunedFiles} of $nFiles")
         require(m.touchedFiles <= 4, s"touched ${m.touchedFiles} files")
         m.addedRows
       }
@@ -1902,17 +1719,15 @@ object Stress {
       // functional: a narrow merge against the clone's EXTERNAL
       // references plans with the same zone-map selectivity and
       // rewrites into the clone's own data dir, source untouched.
-      val tclone = s"$root/tclone"
+      val tclone = s"$scratch/tclone"
       timed("cowclone") {
-        val t0 = System.nanoTime()
-        CowTable.shallowClone(spark, tm, tclone)
-        val cloneMs = (System.nanoTime() - t0) / 1e6
+        val cloneMs =
+          Runner.seconds(CowTable.shallowClone(spark, tm, tclone)) * 1e3
         println(f"STRESS cowclone fork: $cloneMs%.0f ms (2,000 files)")
         require(cloneMs < 10000, f"clone took $cloneMs%.0f ms")
         val srcV = TxLog.latestVersion(spark, tm)
-        val upd = big.filter(col("k") >= 5000 && col("k") < 8000)
-          .select(col("k"), col("c"), (col("p") + 11.0d).as("p"))
-        val m = CowTable.merge(spark, tclone, upd, Seq("k"),
+        val m = CowTable.merge(spark, tclone,
+          bumped(col("k") >= 5000 && col("k") < 8000, 11.0d), Seq("k"),
           checkUniqueKeys = false)
         require(m.prunedFiles >= 1990,
           s"external pruning broke: $m")
@@ -1926,9 +1741,9 @@ object Stress {
       // must agree on count AND a content checksum. The merge-commit
       // leg of the feed ships rewritten survivors + CDC rows — the
       // cost is O(touched + changes), never a source rescan.
-      val rsrc = s"$root/rsrc"
-      val rdst = s"$root/rdst"
-      timedWarm("cowreplsrc") {
+      val rsrc = s"$scratch/rsrc"
+      val rdst = s"$scratch/rdst"
+      timed("cowreplsrc") {
         CowTable.create(spark, rsrc,
           big.repartitionByRange(200, col("k")), Seq("k"))
         CowTable.merge(spark, rsrc,
@@ -1942,7 +1757,7 @@ object Stress {
         val q = streaming.TableReplica.replicaSink(
           streaming.TableChangeFeed.readCdc(spark, rsrc),
           rdst, Seq("k"))
-          .option("checkpointLocation", s"$root/rckpt").start()
+          .option("checkpointLocation", s"$scratch/rckpt").start()
         try q.processAllAvailable() finally q.stop()
         val s = CowTable.read(spark, rsrc)
           .agg(count(lit(1)), sum(col("k") * col("c"))).collect()(0)
@@ -1959,12 +1774,11 @@ object Stress {
       // quarantined == wave volume exactly (nothing dropped on the
       // floor, nothing double-counted), and the screen ran against
       // the INDEX (O(batch) shingle work), not a corpus re-shingle.
-      val docs = queries.Tables.loadSpread(spark, dir, "documents")
-        .select("doc_id", "text")
+      val docs = loadSpread("documents").select("doc_id", "text")
       val nDocs = docs.count()
-      val craw = s"$root/craw"
-      val ccur = s"$root/ccur"
-      val cquar = s"$root/cquar"
+      val craw = s"$scratch/craw"
+      val ccur = s"$scratch/ccur"
+      val cquar = s"$scratch/cquar"
       Seq("gs_curidx_hashes", "gs_curidx_bands", "gs_curidx_shingles")
         .foreach { tb =>
           spark.sql(s"DROP TABLE IF EXISTS $tb")
@@ -1973,7 +1787,7 @@ object Stress {
           val lfs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
           if (lfs.exists(loc)) { lfs.delete(loc, true); () }
         }
-      timedWarm("cowcurseed") {
+      timed("cowcurseed") {
         CowTable.create(spark, ccur, docs, Seq("doc_id"))
         dedup.IncrementalDedup.writeIndex(
           dedup.IncrementalDedup.buildIndex(docs, "doc_id", "text"),
@@ -1994,7 +1808,7 @@ object Stress {
           ccur, "doc_id", "text",
           indexPrefix = Some("gs_curidx"),
           quarantinePath = Some(cquar))
-          .option("checkpointLocation", s"$root/cckpt").start()
+          .option("checkpointLocation", s"$scratch/cckpt").start()
         try q.processAllAvailable() finally q.stop()
         val kept = CowTable.read(spark, ccur).count() - nDocs
         val rejected = CowTable.read(spark, cquar).count()
@@ -2006,10 +1820,9 @@ object Stress {
           s"the reversed wave must mostly keep: kept=$kept of $waveTotal")
         kept
       }
-      if (rfs.exists(rootP)) { rfs.delete(rootP, true); () }
-    }
+    },
 
-    if (which("txlog100k")) {
+    entry("txlog100k") { st => import st._
       // The 100 TB metadata claim, measured: a log holding 100k
       // manifest entries (the ~1 GB-file count at 100 TB) must open in
       // driver-tolerable time. Synthetic commits (the fold never
@@ -2018,84 +1831,60 @@ object Stress {
       // and the fold is timed against the inline-JSON form of the SAME
       // log for the comparison the round-14 plan asked to report.
       import tables.TxLog
-      import tables.TxLog.{AddFile, ColStats, Commit}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_stress_txlog"
-      val rootP = new org.apache.hadoop.fs.Path(root)
-      val rfs = TxLog.fs(spark, root)
-      def build(t: String): Unit = {
-        var v = 0L
-        (0 until 50).foreach { c =>
-          val adds = (0 until 2000).map { j =>
-            val lo = (c * 2000L + j) * 1000L
-            AddFile(f"data/op$c%03d/part-$j%05d.parquet", 1000L,
-              Map("k" -> ColStats("long", lo.toString,
-                (lo + 999).toString, Some(false))))
-          }
-          v += 1
-          require(TxLog.tryCommit(spark, t, Commit(v,
-            if (v == 1) "create" else "append", adds, Seq.empty,
-            if (v == 1) Some("k BIGINT,v BIGINT") else None,
-            if (v == 1) Some(Seq("k")) else None)), s"commit $v lost")
-        }
-      }
+      def build(t: String): Unit = synthLog(t, 50, 2000)
       def foldTimed(t: String, label: String): Long = {
-        val reps = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
+        val ms = minMs {
           val s = TxLog.snapshot(spark, t)
           require(s.files.size == 100000, s"fold lost files: ${s.files.size}")
-          (System.nanoTime() - t0) / 1e6
         }
-        println(f"STRESS $label: min ${reps.min}%.0f ms over 3 folds " +
+        println(f"STRESS $label: min $ms%.0f ms over 3 folds " +
           "(100,000 manifest entries)")
         100000L
       }
-      if (rfs.exists(rootP)) { rfs.delete(rootP, true); () }
-      timedWarm("txlogbuild") { build(s"$root/tp"); 100000L }
-      timedWarm("txlogfoldpq") { foldTimed(s"$root/tp", "txlog parquet-ckpt fold") }
+      timed("txlogbuild") { build(s"$scratch/tp"); 100000L }
+      timed("txlogfoldpq") {
+        foldTimed(s"$scratch/tp", "txlog parquet-ckpt fold")
+      }
       // inline-JSON comparison: same log shape, threshold forced high
       sys.props("graft.txlog.parquetCheckpointThreshold") = "10000000"
       try {
-        timedWarm("txlogbuildjs") { build(s"$root/tj"); 100000L }
-        timedWarm("txlogfoldjs") { foldTimed(s"$root/tj", "txlog json-ckpt fold") }
+        timed("txlogbuildjs") { build(s"$scratch/tj"); 100000L }
+        timed("txlogfoldjs") {
+          foldTimed(s"$scratch/tj", "txlog json-ckpt fold")
+        }
       } finally {
         sys.props.remove("graft.txlog.parquetCheckpointThreshold"); ()
       }
       // a zone-map probe over the folded manifest stays sharp at 100k
-      timedWarm("txlogprune") {
-        val s = TxLog.snapshot(spark, s"$root/tp")
+      timed("txlogprune") {
+        val s = TxLog.snapshot(spark, s"$scratch/tp")
         val hit = s.files.count(_.stats.get("k")
           .forall(_.mayOverlap("50000000", "50009999")))
         require(hit <= 12, s"prune kept $hit of 100k files")
         hit.toLong
       }
-      if (rfs.exists(rootP)) { rfs.delete(rootP, true); () }
-    }
+    },
 
-    if (which("bm25del")) {
+    entry("bm25del") { st => import st._
       // Round-15 horizon #2, measured: the Bm25Table postings delete
       // probe is point-set pruned by the deleted docs' vocabulary
       // (CowTable.deleteWhereMatchingAny) — at ~1.5M postings over 64
       // term-clustered files, deleting narrow-vocabulary docs probes
       // O(files overlapping that vocabulary), reported below, and the
       // serve afterward no longer scores the deleted docs.
-      import org.apache.spark.sql.functions._
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_stress_bm25del"
-      val rootP = new org.apache.hadoop.fs.Path(root)
-      val rfs = tables.TxLog.fs(spark, root)
-      if (rfs.exists(rootP)) { rfs.delete(rootP, true); () }
-      val idx = s"$root/idx"
+      val idx = s"$scratch/idx"
       // doc i speaks a 15-term band at (i % 1000) * 10 — vocabulary
       // w000000..w010004, every doc's terms tightly clustered
       val docs = spark.range(100000).select(col("id").as("doc_id"),
         concat_ws(" ", (0 until 15).map(j =>
           format_string("w%06d", col("id") % 1000 * 10 + lit(j))): _*)
           .as("text"))
-      timedWarm("bm25delbuild") {
+      timed("bm25delbuild") {
         text.Bm25Table.create(spark, idx, docs, "doc_id", "text",
           postingFiles = 64)
         1500000L
       }
-      timedWarm("bm25delete") {
+      timed("bm25delete") {
         // 10 docs, all speaking the band at 70..84: the probe must
         // plan only the file(s) covering that term range
         val dels = docs.filter(col("doc_id") % 10000 === 7)
@@ -2117,10 +1906,9 @@ object Stress {
           "a deleted doc scored after delete")
         1500000L
       }
-      if (rfs.exists(rootP)) { rfs.delete(rootP, true); () }
-    }
+    },
 
-    if (which("bm25lsm")) {
+    entry("bm25lsm") { st => import st._
       // Round-16 (verdict r15 #8): BOTH df-fold shapes timed at a
       // wide-vocabulary scale — the keyed replace-MERGE (one row per
       // term, rewrites every df file holding a touched term) vs the
@@ -2128,11 +1916,6 @@ object Stress {
       // compacted lazily). Corpus vocabulary 1M terms; each fold batch
       // touches 100k of them (wide — the merge's worst case: every df
       // file holds touched terms).
-      import org.apache.spark.sql.functions._
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_stress_bm25lsm"
-      val rootP = new org.apache.hadoop.fs.Path(root)
-      val rfs = tables.TxLog.fs(spark, root)
-      if (rfs.exists(rootP)) { rfs.delete(rootP, true); () }
       def corpus(lo: Long, hi: Long) =
         spark.range(lo, hi).select(col("id").as("doc_id"),
           concat_ws(" ", (0 until 100).map(j =>
@@ -2140,25 +1923,21 @@ object Stress {
             .as("text"))
       def batchAt(b: Int) = // 1000 docs × 100 distinct terms = 100k vocab
         corpus(1000000L + b * 1000L, 1000000L + b * 1000L + 1000L)
-      val (mergeIdx, deltaIdx) = (s"$root/m", s"$root/d")
-      timedWarm("bm25lsmbuild") {
+      val (mergeIdx, deltaIdx) = (s"$scratch/m", s"$scratch/d")
+      timed("bm25lsmbuild") {
         Seq(mergeIdx, deltaIdx).foreach(p => text.Bm25Table.create(
           spark, p, corpus(0, 10000), "doc_id", "text",
           postingFiles = 32))
         1000000L
       }
-      def timeFolds(idx: String, delta: Boolean): Double = {
-        val t0 = System.nanoTime()
-        (0 until 3).foreach(b => text.Bm25Table.fold(spark, idx,
-          batchAt(b), "doc_id", "text", dfDelta = delta))
-        (System.nanoTime() - t0) / 1e6 / 3
-      }
-      timedWarm("bm25lsmfold") {
+      def timeFolds(idx: String, delta: Boolean): Double =
+        Runner.seconds((0 until 3).foreach(b => text.Bm25Table.fold(spark,
+          idx, batchAt(b), "doc_id", "text", dfDelta = delta))) * 1e3 / 3
+      timed("bm25lsmfold") {
         val mergeMs = timeFolds(mergeIdx, delta = false)
         val deltaMs = timeFolds(deltaIdx, delta = true)
-        val t1 = System.nanoTime()
-        text.Bm25Table.compactDf(spark, deltaIdx, dfFiles = 8)
-        val compactMs = (System.nanoTime() - t1) / 1e6
+        val compactMs = Runner.seconds(
+          text.Bm25Table.compactDf(spark, deltaIdx, dfFiles = 8)) * 1e3
         println(f"STRESS bm25 df fold @1M-term vocab, 100k-term " +
           f"batches: keyed merge $mergeMs%.0f ms/batch vs LSM delta " +
           f"append $deltaMs%.0f ms/batch + one compact $compactMs%.0f " +
@@ -2169,19 +1948,16 @@ object Stress {
         // identity: both shapes serve the same scores
         import spark.implicits._
         val q = Seq((0L, "w0000100"), (0L, "w0000101")).toDF("q_id", "term")
-        val a = text.Bm25Table.topDocs(spark, mergeIdx, q, 10)
+        def served(idx: String) = text.Bm25Table.topDocs(spark, idx, q, 10)
           .select("doc_id", "rank").collect().map(r =>
             (r.getLong(0), r.getInt(1))).toSet
-        val b = text.Bm25Table.topDocs(spark, deltaIdx, q, 10)
-          .select("doc_id", "rank").collect().map(r =>
-            (r.getLong(0), r.getInt(1))).toSet
+        val (a, b) = (served(mergeIdx), served(deltaIdx))
         require(a == b, s"df modes diverged: $a vs $b")
         1000000L
       }
-      if (rfs.exists(rootP)) { rfs.delete(rootP, true); () }
-    }
+    },
 
-    if (which("txlog1m")) {
+    entry("txlog1m") { st => import st._
       // Round-15: the last driver ceiling, measured at 10× the 100 TB
       // shape — 1,000,000 manifest entries (100 × 10,000-add commits,
       // parquet-sidecar checkpoints). Three numbers:
@@ -2196,51 +1972,29 @@ object Stress {
       //     vacuum/overwrite) still pays, reported for the contrast.
       import tables.{ManifestPlan, TxLog}
       import tables.TxLog.{AddFile, ColStats, Commit}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_stress_txlog1m"
-      val rootP = new org.apache.hadoop.fs.Path(root)
-      val rfs = TxLog.fs(spark, root)
-      if (rfs.exists(rootP)) { rfs.delete(rootP, true); () }
-      val t = s"$root/t"
-      timedWarm("txlog1mbuild") {
-        var v = 0L
-        (0 until 100).foreach { c =>
-          val adds = (0 until 10000).map { j =>
-            val lo = (c * 10000L + j) * 1000L
-            AddFile(f"data/op$c%03d/part-$j%05d.parquet", 1000L,
-              Map("k" -> ColStats("long", lo.toString,
-                (lo + 999).toString, Some(false))),
-              bytes = Some(128L * 1024 * 1024))
-          }
-          v += 1
-          require(TxLog.tryCommit(spark, t, Commit(v,
-            if (v == 1) "create" else "append", adds, Seq.empty,
-            if (v == 1) Some("k BIGINT,v BIGINT") else None,
-            if (v == 1) Some(Seq("k")) else None)), s"commit $v lost")
-        }
+      val t = s"$scratch/t"
+      timed("txlog1mbuild") {
+        synthLog(t, 100, 10000, bytes = Some(128L * 1024 * 1024))
         1000000L
       }
-      timedWarm("txlog1mmeta") {
-        val reps = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
+      timed("txlog1mmeta") {
+        val ms = minMs {
           val p = TxLog.snapshotPlanned(spark, t)
           require(p.isDistributed && p.meta.files.isEmpty)
-          (System.nanoTime() - t0) / 1e6
         }
-        println(f"STRESS txlog 1M metadata fold: min ${reps.min}%.0f ms " +
+        println(f"STRESS txlog 1M metadata fold: min $ms%.0f ms " +
           "(base entries never materialized)")
         1000000L
       }
-      timedWarm("txlog1mprune") {
+      timed("txlog1mprune") {
         val p = TxLog.snapshotPlanned(spark, t)
-        val reps = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
+        val ms = minMs {
           val hit = ManifestPlan.collectSurvivors(spark, t, p,
             ManifestPlan.mayOverlap("k", "500000000", "500009999"))
           require(hit.size <= 12 && hit.nonEmpty,
             s"prune kept ${hit.size} of 1M files")
-          (System.nanoTime() - t0) / 1e6
         }
-        println(f"STRESS txlog 1M distributed prune: min ${reps.min}%.0f ms " +
+        println(f"STRESS txlog 1M distributed prune: min $ms%.0f ms " +
           "(survivors only cross to the driver)")
         1000000L
       }
@@ -2254,14 +2008,15 @@ object Stress {
         (1 to 3).foreach(_ => System.gc()); Thread.sleep(100)
         val rt = Runtime.getRuntime; rt.totalMemory() - rt.freeMemory()
       }
-      timedWarm("txlog1mlist") {
+      timed("txlog1mlist") {
         val p = TxLog.snapshotPlanned(spark, t)
         val rootQ = TxLog.fs(spark, t).makeQualified(
           new org.apache.hadoop.fs.Path(t)).toString.stripSuffix("/")
         val base = usedHeap()
-        val t0 = System.nanoTime()
-        val lean = ManifestPlan.leanListing(spark, t, p, rootQ)
-        val ms = (System.nanoTime() - t0) / 1e6
+        var lean: Seq[org.apache.spark.sql.graft.ManifestFileIndex.Entry] = null
+        val ms = Runner.seconds {
+          lean = ManifestPlan.leanListing(spark, t, p, rootQ)
+        } * 1e3
         require(lean.size == 1000000, s"lean listing lost: ${lean.size}")
         require(lean.forall(_.bytes == 128L * 1024 * 1024))
         val held = usedHeap() - base
@@ -2272,26 +2027,21 @@ object Stress {
         lean.foreach(e => require(e != null)) // keep `lean` live past gc
         n
       }
-      timedWarm("txlog1mroll") {
+      timed("txlog1mroll") {
         // round 16: the every-20-commits checkpoint is a DISTRIBUTED
         // sidecar-to-sidecar roll — time the commit that lands one at
         // the full 1M-entry manifest (the old path materialized the
         // whole fold on the driver here, every interval, forever)
         var v = TxLog.latestVersion(spark, t)
-        while ((v + 1) % TxLog.CheckpointInterval != 0) {
+        def commitNext(): Unit = {
           v += 1
           require(TxLog.tryCommit(spark, t, Commit(v, "append",
             Seq(AddFile(f"data/tail/part-$v%05d.parquet", 1000L,
               Map("k" -> ColStats("long", "0", "999", Some(false))),
               bytes = Some(1024L))), Seq.empty, None, None)))
         }
-        val t0 = System.nanoTime()
-        v += 1
-        require(TxLog.tryCommit(spark, t, Commit(v, "append",
-          Seq(AddFile(f"data/tail/part-$v%05d.parquet", 1000L,
-            Map("k" -> ColStats("long", "0", "999", Some(false))),
-            bytes = Some(1024L))), Seq.empty, None, None)))
-        val ms = (System.nanoTime() - t0) / 1e6
+        while ((v + 1) % TxLog.CheckpointInterval != 0) commitNext()
+        val ms = Runner.seconds(commitNext()) * 1e3
         val names = TxLog.fs(spark, t).listStatus(
           new org.apache.hadoop.fs.Path(t, TxLog.LogDir))
           .map(_.getPath.getName)
@@ -2303,15 +2053,14 @@ object Stress {
           "(base entries never cross the driver)")
         1000000L
       }
-      timedWarm("txlog1mclone") {
+      timed("txlog1mclone") {
         // round 16: clone CREATES ride commit adds-sidecars — a
         // 1M-entry shallow clone is one distributed frame write plus
         // a small JSON commit, with neither manifest on the driver
-        val dst = s"$root/clone"
+        val dst = s"$scratch/clone"
         val base = usedHeap()
-        val t0 = System.nanoTime()
-        tables.CowTable.shallowClone(spark, t, dst)
-        val ms = (System.nanoTime() - t0) / 1e6
+        val ms =
+          Runner.seconds(tables.CowTable.shallowClone(spark, t, dst)) * 1e3
         val held = usedHeap() - base
         val c1 = TxLog.commitAt(spark, dst, 1L)
         require(c1.addsRef.isDefined && c1.adds.isEmpty,
@@ -2324,23 +2073,52 @@ object Stress {
           "(commit adds-sidecar — neither manifest crosses the driver)")
         n
       }
-      timedWarm("txlog1mfold") {
+      timed("txlog1mfold") {
         val base = usedHeap()
-        val t0 = System.nanoTime()
-        val s = TxLog.snapshot(spark, t)
-        // 1M base + the roll stress's ~20 tail entries
-        require(s.files.size >= 1000000 && s.files.size <= 1000050,
-          s"fold lost files: ${s.files.size}")
-        val ms = (System.nanoTime() - t0) / 1e6
+        var snap: TxLog.Snapshot = null
+        val ms = Runner.seconds {
+          snap = TxLog.snapshot(spark, t)
+          // 1M base + the roll stress's ~20 tail entries
+          require(snap.files.size >= 1000000 && snap.files.size <= 1000050,
+            s"fold lost files: ${snap.files.size}")
+        } * 1e3
         val held = usedHeap() - base
         println(f"STRESS txlog 1M materialized fold: $ms%.0f ms, " +
           f"~${held / 1e6}%.0f MB driver heap retained " +
           "(decoded AddFiles — only explicit audits pay this now)")
-        s.files.length.toLong
+        snap.files.length.toLong
       }
-      if (rfs.exists(rootP)) { rfs.delete(rootP, true); () }
     }
+  )
 
+  def main(args: Array[String]): Unit = {
+    val sfDir = Runner.sfDir
+    val spark = Runner.session()
+    val slots = run(spark, sfDir, Runner.selected(table.map(_.name)))
+    spark.sparkContext.setLogLevel("ERROR")
     spark.stop()
+    println(Bench.finalLine(slots, sfDir))
+    if (slots.exists(_._2.isLeft)) sys.exit(1)
+  }
+
+  /** Runs the named scenarios in table order, each through
+    * [[Runner.step]] with a fresh scratch directory: per scenario its
+    * labelled timings, or its error under the scenario's name.
+    */
+  def run(spark: SparkSession, dir: String,
+      names: Seq[String]): Seq[Bench.Slot] = {
+    val root = java.nio.file.Files.createTempDirectory("graft-stress")
+    try table.filter(e => names.contains(e.name)).flatMap { e =>
+      val stage = new Stage(spark, dir, s"$root/${e.name}")
+      Runner.step(spark) {
+        try e.body(stage)
+        finally FileUtils.deleteDirectory(new java.io.File(stage.scratch))
+      }.fold(
+        err => {
+          println(s"STRESS ${e.name} FAILED: $err")
+          Seq(e.name -> Left(err))
+        },
+        _ => stage.timings.toSeq.map { case (l, t) => l -> Right(Vector(t)) })
+    } finally FileUtils.deleteDirectory(root.toFile)
   }
 }

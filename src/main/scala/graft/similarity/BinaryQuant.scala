@@ -57,38 +57,19 @@ object BinaryQuant {
   def planes(bits: Int, dim: Int): Seq[IndexedSeq[Double]] =
     HyperplaneLSH.planes(HyperplaneLSH.Config(bits, dim, seed = "bq"))
 
-  /** MSB-first weight of bit position `j` within a word. */
-  private def weight(j: Int): Long = 1L << (WordBits - 1 - j)
-
   /** Packs the `planes.size`-bit sign pattern of `vec` into an
     * `array<long>` of `planes.size / WordBits` words: bit j of word w
     * is set iff `vec · planes(w·32+j) > 0`, MSB first. One fused
     * native loop ([[graft.expressions.SignPackWords]] — the plane
     * matrix rides the plan as a flat array object, generated-code size
-    * constant in `bits`); bit-equal to [[packWordsLiteral]] by the
-    * expression's arithmetic contract (spec'd).
+    * constant in `bits`); bit-equal to the per-plane dot/when
+    * formulation it replaced by the expression's arithmetic contract
+    * (BinaryQuantSpec keeps that formulation as the reference).
     */
   def packWords(vec: Column, planes: Seq[IndexedSeq[Double]]): Column = {
     require(planes.size % WordBits == 0,
       s"bits must be a multiple of $WordBits")
     graft.expressions.SignPackWords(vec, planes)
-  }
-
-  /** The `bits`-subtree formulation packWords replaced — one
-    * [[Cosine.dot]] + when per plane. Kept as the independent
-    * reference implementation the equality spec checks the fused
-    * expression against (two formulations, one arithmetic).
-    */
-  private[similarity] def packWordsLiteral(vec: Column,
-      planes: Seq[IndexedSeq[Double]]): Column = {
-    val bits = planes.size
-    val words = (0 until bits / WordBits).map { w =>
-      (0 until WordBits).map { j =>
-        when(dot(vec, typedLit(planes(w * WordBits + j))) > 0,
-          lit(weight(j))).otherwise(lit(0L))
-      }.reduce(_ + _)
-    }
-    array(words: _*)
   }
 
   /** Hamming distance between two packed codes of `nWords` words —

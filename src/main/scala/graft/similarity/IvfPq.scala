@@ -2,7 +2,7 @@ package graft.similarity
 
 import graft.expressions.{CentroidDistMap, DotProduct, FloorResidual}
 import graft.similarity.Cosine._
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, MapData, SQLOrderingUtil}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -144,26 +144,13 @@ object IvfPq {
   // fixed-point domain (doc comment above) so the residual PQ
   // trainer's sums stay exact integers. Native codegen'd pass
   // (FloorResidual — the codebook rides as one flat array); the
-  // declarative zip_with formulation below is the ScalaCheck'd
+  // declarative zip_with formulation it replaced is the ScalaCheck'd
   // reference (FloorResidualProps), per the interpreted-HOF
   // discipline.
   private[similarity] def residTo(coarse: Seq[KMeans.Centroid], q: Column,
       cell: Column): Column =
     graft.expressions.FloorResidual(q, cell,
       coarse.map(_.cid), coarse.map(_.cv))
-
-  /** The HOF reference formulation residTo replaced — kept for the
-    * equivalence property: `zip_with` against a literal cell→centroid
-    * map, flooring each component difference.
-    */
-  private[similarity] def residToHof(coarse: Seq[KMeans.Centroid],
-      q: Column, cell: Column): Column = {
-    val centMap = map_from_arrays(
-      array(coarse.map(c => lit(c.cid)): _*),
-      array(coarse.map(c => array(c.cv.map(lit).toSeq: _*)): _*))
-    zip_with(q, element_at(centMap, cell),
-      (a, b) => floor(a - b).cast("double"))
-  }
 
   /** Train coarse + PQ codebooks over a (cached) prep frame. ONE seed
     * collect feeds both (smallest-id seeding is shared policy;
@@ -192,6 +179,44 @@ object IvfPq {
         codeSource(prep, coarse, cfg).select(col("vid"), col("cq").as("q")),
         ProductQuant.books(pqSeeds, dim, cfg.pq)))
     }
+  }
+
+  /** Persist `prep`, fit the model on it and hand the model to `use`;
+    * the prep is released when `use` returns or throws. Whatever `use`
+    * builds lazily from `prep` rescans the source afterwards.
+    */
+  private[similarity] def withModel[A](prep: DataFrame, dim: Int,
+      cfg: Config)(use: Model => A): A = {
+    prep.persist()
+    try use(fitModel(prep, dim, cfg))
+    finally prep.unpersist(blocking = false)
+  }
+
+  /** A model as its persisted rows (part, cid, cv): part = -1 for the
+    * coarse book, s for PQ subspace s. Doubles round-trip parquet
+    * exactly, so [[modelFrom]] reproduces the model bit-for-bit.
+    */
+  private[similarity] def modelRows(spark: SparkSession,
+      model: Model): DataFrame = {
+    import spark.implicits._
+    (model.coarse.map(c => (-1, c.cid, c.cv.toSeq)) ++
+      model.books.zipWithIndex.flatMap { case (cents, s) =>
+        cents.map(c => (s, c.cid, c.cv.toSeq))
+      }).toDF("part", "cid", "cv")
+  }
+
+  /** The model [[modelRows]] wrote (norms recomputed with the same left
+    * fold the trainer used — exact).
+    */
+  private[similarity] def modelFrom(rows: DataFrame): Model = {
+    val cents = rows.select("part", "cid", "cv").collect().map { r =>
+      val cv = r.getSeq[Double](2).toArray
+      (r.getInt(0), KMeans.Centroid(r.getLong(1), cv, KMeans.leftFoldSq(cv)))
+    }
+    val coarse = cents.filter(_._1 == -1).map(_._2).sortBy(_.cid).toSeq
+    val books = cents.filter(_._1 >= 0).groupBy(_._1).toSeq.sortBy(_._1)
+      .map(_._2.map(_._2).sortBy(_.cid).toSeq)
+    Model(coarse, books)
   }
 
   /** prep + (cell, cq): `cq` is the vector the PQ codebooks quantize —
@@ -349,12 +374,14 @@ object IvfPq {
   def topK(vectors: DataFrame, idCol: String, vecCol: String, dim: Int,
       isQuery: Column => Column, k: Int, cfg: Config = Config()): DataFrame = {
     require(cfg.pq.screenK >= k, "screenK must be >= k")
-    // ONE persisted quantized frame: coarse trainer + PQ trainer + the
-    // coded-corpus projection + the query probes all scan this cache
-    val prep = prepare(vectors, idCol, vecCol, cfg).persist()
-    val model = fitModel(prep, dim, cfg)
-    search(coded(prep, model, dim, cfg),
-      probeSet(prep.filter(isQuery(col("vid"))), model, dim, cfg)._1, k, cfg)
+    // ONE persisted quantized frame: the coarse + PQ trainers and the
+    // query probes scan this cache; both are eager, so it is released
+    // before return and the coded-corpus projection rescans the source
+    val prep = prepare(vectors, idCol, vecCol, cfg)
+    val (model, probes) = withModel(prep, dim, cfg) { m =>
+      (m, probeSet(prep.filter(isQuery(col("vid"))), m, dim, cfg)._1)
+    }
+    search(coded(prep, model, dim, cfg), probes, k, cfg)
   }
 
   // ------------------------------------------------------ persisted index
@@ -374,37 +401,20 @@ object IvfPq {
     */
   def writeIndex(vectors: DataFrame, idCol: String, vecCol: String,
       dim: Int, table: String, cfg: Config = Config()): Model = {
-    val spark = vectors.sparkSession
-    val prep = prepare(vectors, idCol, vecCol, cfg).persist()
-    val model = fitModel(prep, dim, cfg)
-    coded(prep, model, dim, cfg)
-      .write.partitionBy("cell").mode("overwrite").saveAsTable(table)
-    prep.unpersist(blocking = false)
-    val rows = model.coarse.map(c => (-1, c.cid, c.cv.toSeq)) ++
-      model.books.zipWithIndex.flatMap { case (cents, s) =>
-        cents.map(c => (s, c.cid, c.cv.toSeq))
-      }
-    import spark.implicits._
-    rows.toDF("part", "cid", "cv")
+    val prep = prepare(vectors, idCol, vecCol, cfg)
+    val model = withModel(prep, dim, cfg) { m =>
+      coded(prep, m, dim, cfg)
+        .write.partitionBy("cell").mode("overwrite").saveAsTable(table)
+      m
+    }
+    modelRows(vectors.sparkSession, model)
       .write.mode("overwrite").saveAsTable(s"${table}_model")
     model
   }
 
-  /** Reopen a [[writeIndex]]-persisted model (norms recomputed with the
-    * same left fold the trainer used — exact).
-    */
-  def readModel(spark: org.apache.spark.sql.SparkSession,
-      table: String): Model = {
-    val rows = spark.table(s"${table}_model")
-      .select("part", "cid", "cv").collect()
-      .map(r => (r.getInt(0), KMeans.Centroid(r.getLong(1),
-        r.getSeq[Double](2).toArray,
-        KMeans.leftFoldSq(r.getSeq[Double](2).toArray))))
-    val coarse = rows.filter(_._1 == -1).map(_._2).sortBy(_.cid).toSeq
-    val books = rows.filter(_._1 >= 0).groupBy(_._1).toSeq.sortBy(_._1)
-      .map(_._2.map(_._2).sortBy(_.cid).toSeq)
-    Model(coarse, books)
-  }
+  /** Reopen a [[writeIndex]]-persisted model ([[modelFrom]]). */
+  def readModel(spark: SparkSession, table: String): Model =
+    modelFrom(spark.table(s"${table}_model"))
 
   /** Code a NEW batch with the frozen model and append it to the
     * persisted index — the operational ingest loop: the same index

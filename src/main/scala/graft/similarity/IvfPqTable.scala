@@ -42,11 +42,12 @@ object IvfPqTable {
   def create(spark: SparkSession, path: String, vectors: DataFrame,
       idCol: String, vecCol: String, dim: Int,
       cfg: IvfPq.Config = IvfPq.Config()): IvfPq.Model = {
-    val prep = IvfPq.prepare(vectors, idCol, vecCol, cfg).persist()
-    val model = IvfPq.fitModel(prep, dim, cfg)
-    CowTable.create(spark, path, IvfPq.coded(prep, model, dim, cfg),
-      Seq("cell"), partitionBy = Seq("cell"))
-    prep.unpersist(blocking = false)
+    val prep = IvfPq.prepare(vectors, idCol, vecCol, cfg)
+    val model = IvfPq.withModel(prep, dim, cfg) { m =>
+      CowTable.create(spark, path, IvfPq.coded(prep, m, dim, cfg),
+        Seq("cell"), partitionBy = Seq("cell"))
+      m
+    }
     writeModel(spark, path, model, 1L)
     model
   }
@@ -113,11 +114,11 @@ object IvfPqTable {
   def retrain(spark: SparkSession, path: String, vectors: DataFrame,
       idCol: String, vecCol: String, dim: Int,
       cfg: IvfPq.Config = IvfPq.Config()): IvfPq.Model = {
-    val prep = IvfPq.prepare(vectors, idCol, vecCol, cfg).persist()
-    val model = IvfPq.fitModel(prep, dim, cfg)
-    val v = CowTable.overwrite(spark, path,
-      IvfPq.coded(prep, model, dim, cfg), op = "retrain")
-    prep.unpersist(blocking = false)
+    val prep = IvfPq.prepare(vectors, idCol, vecCol, cfg)
+    val (model, v) = IvfPq.withModel(prep, dim, cfg) { m =>
+      (m, CowTable.overwrite(spark, path, IvfPq.coded(prep, m, dim, cfg),
+        op = "retrain"))
+    }
     writeModel(spark, path, model, v)
     model
   }
@@ -261,20 +262,11 @@ object IvfPqTable {
       else sys.error(s"index $path has no model for epoch v$epoch " +
         "(a retrain crashed between its commit and its model publish, " +
         "or the dir was removed) — re-run retrain to heal")
-    val rows = spark.read.parquet(src)
-      .select("part", "cid", "cv").collect()
-      .map(r => (r.getInt(0), KMeans.Centroid(r.getLong(1),
-        r.getSeq[Double](2).toArray,
-        KMeans.leftFoldSq(r.getSeq[Double](2).toArray))))
-    val coarse = rows.filter(_._1 == -1).map(_._2).sortBy(_.cid).toSeq
-    val books = rows.filter(_._1 >= 0).groupBy(_._1).toSeq.sortBy(_._1)
-      .map(_._2.map(_._2).sortBy(_.cid).toSeq)
-    IvfPq.Model(coarse, books)
+    IvfPq.modelFrom(spark.read.parquet(src))
   }
 
   private def writeModel(spark: SparkSession, path: String,
       model: IvfPq.Model, epoch: Long): Unit = {
-    import spark.implicits._
     // Upgrade path: a pre-versioning index holds its model as parquet
     // files DIRECTLY under `_model`; writing `_model/v<epoch>` beside
     // them would corrupt the legacy fallback read (parquet leaf files
@@ -291,10 +283,7 @@ object IvfPqTable {
           new org.apache.hadoop.fs.Path(v1, st.getPath.getName)); ()
       }
     }
-    (model.coarse.map(c => (-1, c.cid, c.cv.toSeq)) ++
-      model.books.zipWithIndex.flatMap { case (cents, s) =>
-        cents.map(c => (s, c.cid, c.cv.toSeq))
-      }).toDF("part", "cid", "cv")
+    IvfPq.modelRows(spark, model)
       .write.mode("overwrite").parquet(s"$path/_model/v$epoch")
     // the epoch's content hash rides beside the parquet so append
     // validation is one tiny read, not a model re-open + re-hash

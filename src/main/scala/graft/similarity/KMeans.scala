@@ -119,30 +119,14 @@ object KMeans {
     * task binary like a broadcast variable, constant generated-code
     * size), so plan/codegen cost no longer grows with k and the
     * large-k regime (√N IVF cells, thousands of centroids) is open.
-    * Bit-equal to [[bestStructLiteral]] by the expression's arithmetic
-    * contract, ScalaCheck'd in KMeansSpec.
+    * Bit-equal to the k-literal-subtree formulation it replaced (the
+    * reference NearestCentroidProps keeps) by the expression's
+    * arithmetic contract.
     */
   private[similarity] def bestStruct(cents: Seq[Centroid], q: Column,
       qn: Column): Column =
     graft.expressions.NearestCentroid(q, qn,
       cents.map(_.cid), cents.map(_.cn), cents.map(_.cv))
-
-  /** The k-literal-subtree formulation bestStruct replaced:
-    * `least(struct(qn + cn − 2·dot(q, lit(c)), cid), ...)` —
-    * lexicographic struct ordering IS the (dist asc, cid asc) argmin
-    * with its tie-break. Kept as the independent reference
-    * implementation the equality spec checks the codebook path
-    * against (two formulations, one arithmetic).
-    */
-  private[similarity] def bestStructLiteral(cents: Seq[Centroid], q: Column,
-      qn: Column): Column = {
-    val structs = cents.map { c =>
-      val dist = qn + lit(c.cn) -
-        lit(2.0) * DotProduct(q, array(c.cv.map(lit).toSeq: _*))
-      struct(dist.as("d"), lit(c.cid).as("c"))
-    }
-    if (structs.sizeIs == 1) structs.head else least(structs: _*)
-  }
 
   private def bestColumn(cents: Seq[Centroid]): Column =
     bestStruct(cents, col("q"), col("qn"))
@@ -277,26 +261,6 @@ object KMeans {
         Centroid(cid, cv, leftFoldSq(cv))
       }
 
-  /** New centroids from an assignment: exact integer sums per
-    * (cluster, position), means taken in ONE double division each.
-    * Empty clusters simply don't appear (drop-empty policy). Kept as
-    * the independent aggregate-path REFERENCE the [[refinePass]]
-    * equality property checks against (the bestStructLiteral
-    * discipline); production training runs the RDD pass.
-    */
-  private[similarity] def recompute(asg: DataFrame): Seq[Centroid] = {
-    val rows = asg
-      .select(col("cluster"), posexplode(col("q")).as(Seq("pos", "v")))
-      .groupBy("cluster", "pos")
-      .agg(sum("v").as("s"), count(lit(1)).as("n"))
-      .collect()
-    rows.groupBy(_.getLong(0)).toSeq.sortBy(_._1).map { case (cid, rs) =>
-      val cv = rs.sortBy(_.getInt(1)).map(r => r.getDouble(2) / r.getLong(3))
-        .toArray
-      Centroid(cid, cv, leftFoldSq(cv))
-    }
-  }
-
   /** One codebook to train: its view of the quantized vector
     * ([[viewOf]]: whole vector, or the slice at `offset`), its seed
     * centroids, and its `iters` (assignment passes; `iters − 1`
@@ -329,17 +293,16 @@ object KMeans {
     cents
   }
 
-  /** Train and label: `iters` assignment passes with `iters − 1`
-    * centroid refinements between them. Returns one row per input
-    * vector: (vec_id, cluster, dist) — cluster is the seed id of the
-    * final nearest centroid, dist the squared quantized-space L2.
+  /** Train and label: [[centroids]] (`iters` assignment passes with
+    * `iters − 1` centroid refinements between them), then [[label]]
+    * with the trained codebook — nothing stays persisted. Returns one
+    * row per input vector: (vec_id, cluster, dist) — cluster is the
+    * seed id of the final nearest centroid, dist the squared
+    * quantized-space L2.
     */
   def fit(vectors: DataFrame, idCol: String, vecCol: String,
-      cfg: Config = Config()): DataFrame = {
-    val prep = quantize(vectors, idCol, vecCol, cfg).persist()
-    assign(prep, centroidsPrepared(prep, cfg))
-      .select(col("vid").as("vec_id"), col("cluster"), col("dist"))
-  }
+      cfg: Config = Config()): DataFrame =
+    label(vectors, idCol, vecCol, centroids(vectors, idCol, vecCol, cfg), cfg)
 
   /** Label a frame with an already-trained centroid set: quantize with
     * the training config and take the same codebook argmin

@@ -1,6 +1,5 @@
 package graft.text
 
-import graft.text.TextFeatures._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -20,20 +19,13 @@ object Fingerprint {
 
   val Mod = 1000000007L
 
-  /** Native one-pass form ([[graft.expressions.RollingFingerprint]]);
-    * [[rollingHashHof]] is the reference formulation it is spec'd
-    * against, and the DuckDB oracle keeps the `list_reduce` shape,
-    * re-proving the equivalence per round.
+  /** Native one-pass form ([[graft.expressions.RollingFingerprint]]),
+    * spec'd against the HOF reference formulation RollingFingerprintSpec
+    * keeps; the DuckDB oracle keeps the `list_reduce` shape, re-proving
+    * the equivalence per round.
     */
   def rollingHash(text: Column): Column =
     graft.expressions.RollingFingerprint(text, Mod)
-
-  /** The HOF reference formulation (two interpreted higher-order
-    * passes; kept for the equivalence spec). */
-  def rollingHashHof(text: Column): Column = {
-    val tokenHashes = transform(words(text), w => hexPrefixToLong(md5(w), 6))
-    aggregate(tokenHashes, lit(0L), (acc, h) => (acc * 31L + h) % Mod)
-  }
 
   /** (id, fingerprint) per document. */
   def fingerprints(docs: DataFrame, idCol: String, textCol: String): DataFrame =

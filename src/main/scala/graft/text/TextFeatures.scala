@@ -69,27 +69,12 @@ object TextFeatures {
     * [[wordShingles]], occurrences matter to frequency consumers) of
     * lower-cased text; empty for texts shorter than n chars and for
     * null text. Native one-pass form
-    * ([[graft.expressions.CharShingles]]); [[charShinglesHof]] is the
-    * reference formulation it is spec'd against.
+    * ([[graft.expressions.CharShingles]]), spec'd against the HOF
+    * reference formulation CharShinglesSpec keeps.
     */
   def charShingles(text: Column, n: Int): Column =
     when(text.isNotNull, graft.expressions.CharShingles(text, n))
       .otherwise(array().cast(ArrayType(StringType)))
-
-  /** The HOF reference formulation of [[charShingles]] (interpreted
-    * `transform` + char-indexed `substr` — O(len²) on variable-width
-    * UTF-8; guarded because `sequence(1, k)` counts DOWN for k < 1).
-    * Kept for the equivalence spec; the heavy-hitter DuckDB oracles
-    * mirror this shape.
-    */
-  def charShinglesHof(text: Column, n: Int): Column = {
-    val t = lower(text)
-    val grams = transform(
-      sequence(lit(1), length(t) - (n - 1)),
-      i => t.substr(i, lit(n)))
-    when(length(t) >= n, grams)
-      .otherwise(array().cast(ArrayType(StringType)))
-  }
 
   /** First `digits` hex chars of a (lowercase-hex) md5 string as a
     * non-negative long. 8 digits = 32 bits — safely inside Long.

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The native one-pass char-n-gram expression must be bit-equivalent to
-  * the HOF reference formulation ([[TextFeatures.charShinglesHof]], the
+  * the HOF reference formulation ([[charShinglesHof]], the
   * shape the heavy-hitter DuckDB oracles mirror) — including multi-byte
   * UTF-8 (char-indexed, not byte-indexed, windows), the
   * shorter-than-n guard, duplicates kept in order, and null text.
@@ -16,11 +16,26 @@ class CharShinglesSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
   import spark.implicits._
 
+  /** The HOF formulation [[TextFeatures.charShingles]] replaced
+    * (interpreted `transform` + char-indexed `substr` — O(len²) on
+    * variable-width UTF-8; guarded because `sequence(1, k)` counts DOWN
+    * for k < 1).
+    */
+  private def charShinglesHof(text: org.apache.spark.sql.Column,
+      n: Int): org.apache.spark.sql.Column = {
+    val t = lower(text)
+    val grams = transform(
+      sequence(lit(1), length(t) - (n - 1)),
+      i => t.substr(i, lit(n)))
+    when(length(t) >= n, grams)
+      .otherwise(array().cast("array<string>"))
+  }
+
   private def compare(texts: Seq[String], n: Int): Unit = {
     val rows = texts.toDF("t")
       .select(
         TextFeatures.charShingles(col("t"), n).as("fast"),
-        TextFeatures.charShinglesHof(col("t"), n).as("ref"))
+        charShinglesHof(col("t"), n).as("ref"))
       .collect()
     rows.zip(texts).foreach { case (r, in) =>
       assert(r.getSeq[String](0) === r.getSeq[String](1),
@@ -56,7 +71,7 @@ class CharShinglesSpec extends AnyFunSuite {
     val r = Seq((1, null.asInstanceOf[String])).toDF("id", "t")
       .select(
         TextFeatures.charShingles(col("t"), 4).as("fast"),
-        TextFeatures.charShinglesHof(col("t"), 4).as("ref"))
+        charShinglesHof(col("t"), 4).as("ref"))
       .collect()(0)
     assert(r.getSeq[String](0) === Seq.empty)
     assert(r.getSeq[String](1) === Seq.empty)

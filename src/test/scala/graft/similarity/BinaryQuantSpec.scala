@@ -12,6 +12,20 @@ class BinaryQuantSpec extends AnyFunSuite {
 
   private def emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
 
+  /** The `bits`-subtree formulation [[BinaryQuant.packWords]] replaced:
+    * one dot + when per plane, MSB first within each word.
+    */
+  private def packWordsLiteral(vec: org.apache.spark.sql.Column,
+      planes: Seq[IndexedSeq[Double]]): org.apache.spark.sql.Column = {
+    val wb = BinaryQuant.WordBits
+    array((0 until planes.size / wb).map { w =>
+      (0 until wb).map { j =>
+        when(Cosine.dot(vec, typedLit(planes(w * wb + j))) > 0,
+          lit(1L << (wb - 1 - j))).otherwise(lit(0L))
+      }.reduce(_ + _)
+    }: _*)
+  }
+
   /** Left-fold dot in DotProduct's exact order. */
   private def foldDot(a: Seq[Double], b: Seq[Double]): Double =
     a.zip(b).foldLeft(0.0) { case (acc, (x, y)) => acc + x * y }
@@ -56,7 +70,7 @@ class BinaryQuantSpec extends AnyFunSuite {
     val df = rows.toDF("vec_id", "embedding")
     val both = df.select(col("vec_id"),
         BinaryQuant.packWords(col("embedding"), pl).as("fused"),
-        BinaryQuant.packWordsLiteral(col("embedding"), pl).as("lit"))
+        packWordsLiteral(col("embedding"), pl).as("lit"))
       .collect()
     both.foreach { r =>
       assert(r.getSeq[Long](1) === r.getSeq[Long](2), s"vec ${r.getLong(0)}")

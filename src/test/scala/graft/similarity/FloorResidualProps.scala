@@ -1,6 +1,7 @@
 package graft.similarity
 
 import graft.SparkTestSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
@@ -9,7 +10,7 @@ import org.scalacheck.Prop.forAll
   * codebook-object path ([[graft.expressions.FloorResidual]], the
   * shipped one — one codegen'd pass per row) against the declarative
   * `zip_with(q, element_at(<literal map>, cell), floor(a − b))`
-  * reference ([[IvfPq.residToHof]]). Random codebooks with
+  * reference ([[residToHof]]). Random codebooks with
   * NON-integer centroid components (the Lloyd's-mean regime — means
   * are rational) against integer-valued quantized vectors, cell ids
   * drawn from the codebook AND from outside it (the missing-key →
@@ -21,6 +22,19 @@ object FloorResidualProps extends Properties("FloorResidual") {
     p.withMinSuccessfulTests(12).withWorkers(1)
 
   private lazy val spark = SparkTestSession.spark
+
+  /** The HOF formulation [[IvfPq.residTo]] replaced: `zip_with`
+    * against a literal cell→centroid map, flooring each component
+    * difference.
+    */
+  def residToHof(coarse: Seq[KMeans.Centroid], q: Column,
+      cell: Column): Column = {
+    val centMap = map_from_arrays(
+      array(coarse.map(c => lit(c.cid)): _*),
+      array(coarse.map(c => array(c.cv.map(lit).toSeq: _*)): _*))
+    zip_with(q, element_at(centMap, cell),
+      (a, b) => floor(a - b).cast("double"))
+  }
 
   private val genCase: Gen[(Seq[Seq[Double]], Seq[(Seq[Double], Long)])] =
     for {
@@ -53,7 +67,7 @@ object FloorResidualProps extends Properties("FloorResidual") {
       val both = df.select(
           graft.expressions.FloorResidual(col("q"), col("cell"),
             cents.map(_.cid), cents.map(_.cv)).as("nat"),
-          IvfPq.residToHof(cents, col("q"), col("cell")).as("ref"))
+          residToHof(cents, col("q"), col("cell")).as("ref"))
         .collect()
       both.forall { r =>
         (r.isNullAt(0) && r.isNullAt(1)) ||

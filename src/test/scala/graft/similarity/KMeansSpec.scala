@@ -9,6 +9,26 @@ class KMeansSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
   import spark.implicits._
 
+  /** New centroids from an assignment: exact integer sums per
+    * (cluster, position), means taken in ONE double division each,
+    * empty clusters absent — the aggregate-path reference the
+    * [[KMeans.refinePass]] equality test checks against.
+    */
+  private def recompute(asg: org.apache.spark.sql.DataFrame)
+      : Seq[KMeans.Centroid] = {
+    import org.apache.spark.sql.functions._
+    val rows = asg
+      .select(col("cluster"), posexplode(col("q")).as(Seq("pos", "v")))
+      .groupBy("cluster", "pos")
+      .agg(sum("v").as("s"), count(lit(1)).as("n"))
+      .collect()
+    rows.groupBy(_.getLong(0)).toSeq.sortBy(_._1).map { case (cid, rs) =>
+      val cv = rs.sortBy(_.getInt(1)).map(r => r.getDouble(2) / r.getLong(3))
+        .toArray
+      KMeans.Centroid(cid, cv, KMeans.leftFoldSq(cv))
+    }
+  }
+
   /** Clean-room single-threaded Lloyd's with the operator's declared
     * policies (floor-quantize, smallest-id seeds, (dist, cid) argmin,
     * drop-empty), written as plain loops — the distributed result must
@@ -160,7 +180,7 @@ class KMeansSpec extends AnyFunSuite {
     // full-vector view vs the aggregate-path reference (recompute)
     val viaPass = KMeans.centroidsFromPass(
       KMeans.refinePass(prep, Seq(KMeans.viewOf(0, 0, full = true, cents))), 0)
-    val viaAgg = KMeans.recompute(KMeans.assign(prep, cents))
+    val viaAgg = recompute(KMeans.assign(prep, cents))
     assert(bits(viaPass) === bits(viaAgg))
 
     // slice views vs the aggregate reference (the pre-r17 ProductQuant

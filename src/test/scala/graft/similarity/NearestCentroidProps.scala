@@ -2,6 +2,7 @@ package graft.similarity
 
 import graft.SparkTestSession
 import graft.expressions.DotProduct
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
@@ -10,7 +11,7 @@ import org.scalacheck.Prop.forAll
   * codebook-object path ([[graft.expressions.NearestCentroid]], the
   * shipped one — constant plan size, large-k capable) against the
   * k-literal-subtree `least(struct(...))` reference
-  * ([[KMeans.bestStructLiteral]]). Random integer-valued (quantized-
+  * ([[bestStructLiteral]]). Random integer-valued (quantized-
   * space) codebooks and vectors, including duplicate centroids (the
   * tie-break case) and single-centroid books. EXACT equality of both
   * the distance double and the winning centroid id — the two paths
@@ -22,6 +23,21 @@ object NearestCentroidProps extends Properties("NearestCentroid") {
     p.withMinSuccessfulTests(12).withWorkers(1)
 
   private lazy val spark = SparkTestSession.spark
+
+  /** The k-literal-subtree formulation [[KMeans.bestStruct]] replaced:
+    * `least(struct(qn + cn − 2·dot(q, lit(c)), cid), ...)` —
+    * lexicographic struct ordering IS the (dist asc, cid asc) argmin
+    * with its tie-break.
+    */
+  def bestStructLiteral(cents: Seq[KMeans.Centroid], q: Column,
+      qn: Column): Column = {
+    val structs = cents.map { c =>
+      val dist = qn + lit(c.cn) -
+        lit(2.0) * DotProduct(q, array(c.cv.map(lit).toSeq: _*))
+      struct(dist.as("d"), lit(c.cid).as("c"))
+    }
+    if (structs.sizeIs == 1) structs.head else least(structs: _*)
+  }
 
   private val genCase: Gen[(Int, Seq[Seq[Double]], Seq[Seq[Double]])] = for {
     dim <- Gen.choose(1, 12)
@@ -46,7 +62,7 @@ object NearestCentroidProps extends Properties("NearestCentroid") {
           DotProduct(col("q"), col("q")).as("qn"))
       val both = df.select(
           KMeans.bestStruct(cents, col("q"), col("qn")).as("nc"),
-          KMeans.bestStructLiteral(cents, col("q"), col("qn")).as("lit"))
+          bestStructLiteral(cents, col("q"), col("qn")).as("lit"))
         .collect()
       both.forall { r =>
         val (nc, li) = (r.getStruct(0), r.getStruct(1))

@@ -73,4 +73,21 @@ class TrainJobsSpec extends AnyFunSuite {
     val cfg = KMeans.Config(k = 6, iters = 4)
     assert(jobsOf(KMeans.centroids(emb, "vec_id", "embedding", cfg)) === 4)
   }
+
+  /** The persisted RDD ids after `body` equal those before it. */
+  private def leavesNothingPersisted(body: => Unit): Unit = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    body
+    assert(spark.sparkContext.getPersistentRDDs.keySet === before)
+  }
+
+  test("KMeans.fit releases its training prep") {
+    leavesNothingPersisted(
+      KMeans.fit(emb, "vec_id", "embedding", KMeans.Config(k = 6)).count())
+  }
+
+  test("IvfPq.topK releases its training prep") {
+    leavesNothingPersisted(IvfPq.topK(emb, "vec_id", "embedding", 64,
+      _ < 4, 5, ivfCfg).count())
+  }
 }
