@@ -1754,9 +1754,9 @@ object Stress {
         nRows
       }
       timed("cowreplica") {
-        val q = streaming.TableReplica.replicaSink(
+        val q = streaming.TableSink.replicaSink(
           streaming.TableChangeFeed.readCdc(spark, rsrc),
-          rdst, Seq("k"))
+          rdst, Seq("k"), appId = "table-replica")
           .option("checkpointLocation", s"$scratch/rckpt").start()
         try q.processAllAvailable() finally q.stop()
         val s = CowTable.read(spark, rsrc)
@@ -1805,7 +1805,7 @@ object Stress {
         val waveTotal = wave1.count() + wave2.count()
         val q = streaming.TableCuration.curateSink(
           streaming.TableChangeFeed.readChanges(spark, craw),
-          ccur, "doc_id", "text",
+          ccur, "doc_id", "text", appId = "table-curation",
           indexPrefix = Some("gs_curidx"),
           quarantinePath = Some(cquar))
           .option("checkpointLocation", s"$scratch/cckpt").start()

@@ -1275,9 +1275,9 @@ object SimilarityQueries {
     * ([[IvfPq.writeIndex]] — model FROZEN from that epoch, the
     * production retrain discipline); the day's ingest appends to the
     * table and its change feed streams through
-    * [[graft.streaming.AnnIngestStream]], coding each commit's vectors
-    * with the frozen model into their cells' partitions. Queries then
-    * serve from the final index ([[IvfPq.topKIndexed]] — probed-cell
+    * [[IvfPq.appendToIndex]] per micro-batch, coding each commit's
+    * vectors with the frozen model into their cells' partitions.
+    * Queries then serve from the final index ([[IvfPq.topKIndexed]] — probed-cell
     * partition pruning). Because a row's codes depend only on the
     * frozen model and the row, append-then-serve ≡ coding the union up
     * front; the oracle replays the WHOLE pipeline with the fit
@@ -1317,9 +1317,10 @@ object SimilarityQueries {
     val feed = graft.streaming.TableChangeFeed
       .readChanges(spark, raw, startingVersion = 2L)
       .select("vec_id", "embedding")
-    val q = graft.streaming.AnnIngestStream
-      .maintain(feed, "vec_id", "embedding", Dim, "graft_feedann", model,
-        ivfPqCfg)()
+    val q = graft.streaming.MicroBatch.each(feed) { (_, batch) =>
+        IvfPq.appendToIndex(batch, "vec_id", "embedding", Dim,
+          "graft_feedann", model, ivfPqCfg)
+      }
       .option("checkpointLocation", ckpt).start()
     try { q.processAllAvailable() } finally q.stop()
     IvfPq.topKIndexed(spark, "graft_feedann",
@@ -1454,9 +1455,11 @@ object SimilarityQueries {
     val feed = graft.streaming.TableChangeFeed
       .readChanges(spark, raw, startingVersion = 2L)
       .select("vec_id", "embedding")
-    val q = graft.streaming.AnnIngestStream
-      .maintainTable(feed, "vec_id", "embedding", Dim, idx, model,
-        ivfPqCfg, appId = "gate-ann-tx")
+    val q = graft.streaming.MicroBatch.each(feed) { (batchId, batch) =>
+        IvfPqTable.append(batch.sparkSession, idx, batch, "vec_id",
+          "embedding", Dim, model, ivfPqCfg,
+          txn = Some(graft.tables.TxLog.Txn("gate-ann-tx", batchId)))
+      }
       .option("checkpointLocation", ckpt).start()
     try { q.processAllAvailable() } finally q.stop()
     IvfPqTable.topK(spark, idx,

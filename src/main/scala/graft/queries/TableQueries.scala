@@ -797,7 +797,8 @@ object TableQueries {
       .readChanges(spark, src, startingVersion = 2L)
       .select("user_id", "event_type", "value")
     val q = graft.streaming.TableSink
-      .aggSink(feed, agg, Seq("user_id", "event_type"), "value")
+      .aggSink(feed, agg, Seq("user_id", "event_type"), "value",
+        appId = "table-agg")
       .option("checkpointLocation", ckpt).start()
     try { q.processAllAvailable() } finally q.stop()
     graft.tables.AggTable.read(spark, agg)
@@ -1035,7 +1036,7 @@ object TableQueries {
   /** Table REPLICATION over the row-level change feed: the source
     * takes a create, a CDC merge (upserts + deletes + inserts), a
     * plain append, and CDC predicate-DML; [[graft.streaming
-    * .TableReplica.replicaSink]] folds [[graft.streaming
+    * .TableSink.replicaSink]] folds [[graft.streaming
     * .TableChangeFeed.readCdc]] into a second table, and the GATE
     * OUTPUT is the REPLICA read from disk — one hash pins feed
     * totality (every op representable), image correctness, and the
@@ -1067,9 +1068,9 @@ object TableQueries {
       col("o_orderkey") % 113 === 5, cdc = true)
     CowTable.updateWhere(spark, src, col("o_orderkey") % 131 === 7,
       Map("o_orderstatus" -> lit("W")), cdc = true)
-    val q = graft.streaming.TableReplica.replicaSink(
+    val q = graft.streaming.TableSink.replicaSink(
       graft.streaming.TableChangeFeed.readCdc(spark, src),
-      dst, Seq("o_orderkey"))
+      dst, Seq("o_orderkey"), appId = "table-replica")
       .option("checkpointLocation", ckpt).start()
     try { q.processAllAvailable() } finally q.stop()
     CowTable.read(spark, dst).orderBy("o_orderkey")
@@ -1132,11 +1133,11 @@ object TableQueries {
       col("o_orderkey") % 113 === 5, cdc = true)
     CowTable.updateWhere(spark, src, col("o_orderkey") % 131 === 7,
       Map("o_orderstatus" -> lit("W")), cdc = true)
-    val q = graft.streaming.TableReplica.replicaSink(
+    val q = graft.streaming.TableSink.replicaSink(
       graft.streaming.TableChangeFeed.readCdc(spark, src,
         where = Some("o_orderstatus <> 'U'"),
         whereKeys = Seq("o_orderkey")),
-      dst, Seq("o_orderkey"))
+      dst, Seq("o_orderkey"), appId = "table-replica")
       .option("checkpointLocation", ckpt).start()
     try { q.processAllAvailable() } finally q.stop()
     CowTable.read(spark, dst).orderBy("o_orderkey")
@@ -1201,7 +1202,7 @@ object TableQueries {
     val q = graft.streaming.TableHistory.scd2Sink(
       graft.streaming.TableChangeFeed.readCdc(spark, src,
         startingVersion = 2L),
-      hist, Seq("o_orderkey"))
+      hist, Seq("o_orderkey"), appId = "table-history")
       .option("checkpointLocation", ckpt).start()
     try { q.processAllAvailable() } finally q.stop()
     (1L to 3L).map { v =>
@@ -1320,7 +1321,8 @@ object TableQueries {
     val feed = graft.streaming.TableChangeFeed
       .readChanges(spark, raw, startingVersion = 1L)
     val q = graft.streaming.TableCuration
-      .curateSink(feed, cur, "doc_id", "text", indexPrefix = Some(idx))
+      .curateSink(feed, cur, "doc_id", "text", appId = "table-curation",
+        indexPrefix = Some(idx))
       .option("checkpointLocation", ckpt).start()
     try { q.processAllAvailable() } finally q.stop()
     CowTable.read(spark, cur).orderBy("doc_id")
@@ -1493,7 +1495,7 @@ object TableQueries {
     val feed = graft.streaming.TableChangeFeed
       .readChanges(spark, raw, startingVersion = 1L)
     val q = graft.streaming.TableCuration
-      .curateSink(feed, cur, "doc_id", "text",
+      .curateSink(feed, cur, "doc_id", "text", appId = "table-curation",
         quarantinePath = Some(quar))
       .option("checkpointLocation", ckpt).start()
     try { q.processAllAvailable() } finally q.stop()

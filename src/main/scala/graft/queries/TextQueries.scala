@@ -1055,9 +1055,11 @@ object TextQueries {
     val feed = graft.streaming.TableChangeFeed
       .readChanges(spark, raw, startingVersion = 2L)
       .select("doc_id", "text")
-    val q = graft.streaming.IndexIngestStream
-      .maintainTable(feed, "doc_id", "text", idx,
-        appId = "gate-feed-keyword")
+    val q = graft.streaming.MicroBatch.each(feed) { (batchId, batch) =>
+        graft.text.Bm25Table.fold(batch.sparkSession, idx, batch,
+          "doc_id", "text",
+          txn = Some(graft.tables.TxLog.Txn("gate-feed-keyword", batchId)))
+      }
       .option("checkpointLocation", ckpt).start()
     try { q.processAllAvailable() } finally q.stop()
     graft.text.Bm25Table.topDocs(spark, idx,

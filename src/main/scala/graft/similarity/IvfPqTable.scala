@@ -6,11 +6,11 @@ import org.apache.spark.sql.functions._
 
 /** The IVFADC index backed by a transactional [[CowTable]] — the
   * exactly-once form of [[IvfPq.writeIndex]]'s plain catalog table,
-  * closing the documented at-least-once hole of
-  * [[graft.streaming.AnnIngestStream]]: index appends are Txn-stamped
-  * per ingest batch, so a sink retry or checkpoint replay no-ops
-  * instead of duplicating coded rows (a duplicate displaces a real
-  * k-th neighbor). The index inherits the whole table surface for
+  * closing the at-least-once hole of [[IvfPq.appendToIndex]] run per
+  * micro-batch ([[graft.streaming.MicroBatch.each]]): index appends
+  * are Txn-stamped per ingest batch, so a sink retry or checkpoint
+  * replay no-ops instead of duplicating coded rows (a duplicate
+  * displaces a real k-th neighbor). The index inherits the whole table surface for
   * free — time travel (serve yesterday's index), DESCRIBE HISTORY of
   * every ingest batch, restore, vacuum, provenance.
   *

@@ -66,7 +66,7 @@ object BlockingMonitor {
   }
 
   /** One stream's running audit state: fold micro-batches, read the
-    * counters. Single-threaded driver use (foreachBatch's contract).
+    * counters. Single-threaded driver use (one micro-batch at a time).
     */
   final class Accumulator(idCol: String, textCol: String,
       sampleMax: Long, cfg: MinHashLSH.Config = MinHashLSH.Config()) {
@@ -75,8 +75,8 @@ object BlockingMonitor {
         "additive across batches; audit it in batch (BlockingEval)")
 
     private var state = BlockState(0L, 0L, 0L, 0L, 0L)
-    private var standingBands: Option[DataFrame] = None
-    private var standingSample: Option[DataFrame] = None
+    private val standingBands = MicroBatch.Standing.empty
+    private val standingSample = MicroBatch.Standing.empty
 
     def running: BlockState = state
 
@@ -94,7 +94,7 @@ object BlockingMonitor {
       val within = b.as("x").join(b.as("y"),
           bandKey("x", "y") && col("x.doc_id") < col("y.doc_id"))
         .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      val cross = standingBands.map { old =>
+      val cross = standingBands.current.map { old =>
         b.as("x").join(old.as("y"), bandKey("x", "y"))
           .select(least(col("x.doc_id"), col("y.doc_id")).as("doc_a"),
             greatest(col("x.doc_id"), col("y.doc_id")).as("doc_b"))
@@ -108,7 +108,7 @@ object BlockingMonitor {
         .join(side(batchSample, "ib", "sb").as("y"), col("ia") < col("ib"))
         .select(col("ia").as("doc_a"), col("ib").as("doc_b"),
           col("sa"), col("sb"))
-      val crossT = standingSample.map { old =>
+      val crossT = standingSample.current.map { old =>
         side(batchSample, "ia", "sa")
           .join(side(old, "ib", "sb"))
           .select(least(col("ia"), col("ib")).as("doc_a"),
@@ -128,23 +128,13 @@ object BlockingMonitor {
         hit.count(), candS.count())
       state = state.merge(delta)
 
-      // grow the standing frames; localCheckpoint cuts lineage so a
-      // long stream's plan does not deepen per batch. The PREVIOUS
-      // generation's checkpoint blocks release here (both standings
-      // start None, so every generation is this accumulator's own) —
-      // waiting for the ContextCleaner would accumulate corpus-sized
-      // storage between GC cycles (the ClusterMaintain advice, r15)
-      val newBands = standingBands.fold(b)(b.unionByName(_))
-        .localCheckpoint(eager = true)
-      val newSample = standingSample
-        .fold(batchSample)(batchSample.unionByName(_))
-        .localCheckpoint(eager = true)
+      // grow the standing frames (each advance checkpoints the new
+      // generation and releases the one before it)
+      standingBands.advance(
+        standingBands.current.fold(b)(b.unionByName(_)))
+      standingSample.advance(
+        standingSample.current.fold(batchSample)(batchSample.unionByName(_)))
       Seq(cand, truth, b, sh).foreach(_.unpersist(blocking = false))
-      val release = org.apache.spark.sql.graft.CheckpointBridge.release _
-      standingBands.foreach(release)
-      standingSample.foreach(release)
-      standingBands = Some(newBands)
-      standingSample = Some(newSample)
       state
     }
   }
@@ -152,19 +142,13 @@ object BlockingMonitor {
   /** Wire an ingest stream into the running audit: after each
     * micro-batch, `onBatch` receives the batch id and the running
     * counters ([[report]] renders them as the one-row audit frame).
-    * Replayed batch ids are skipped (foreachBatch is at-least-once),
-    * the [[QualityMonitor.monitor]] discipline.
+    * Replayed batch ids are skipped ([[MicroBatch.fold]]).
     */
   def monitor(stream: DataFrame, idCol: String, textCol: String,
       sampleMax: Long, cfg: MinHashLSH.Config = MinHashLSH.Config())(
       onBatch: (Long, BlockState) => Unit): DataStreamWriter[Row] = {
     val acc = new Accumulator(idCol, textCol, sampleMax, cfg)
-    var lastBatch = -1L
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      if (batchId > lastBatch && !batch.isEmpty) {
-        onBatch(batchId, acc.fold(batch))
-        lastBatch = batchId
-      }
-    }
+    MicroBatch.fold(stream, acc.running)((_, batch) => acc.fold(batch))(
+      onBatch)
   }
 }

@@ -41,8 +41,7 @@ object CadenceStream {
       .toMap
 
   def mergeStates(a: CadenceState, b: CadenceState): CadenceState =
-    (a.keySet ++ b.keySet).iterator
-      .map(k => k -> (a.getOrElse(k, 0L) + b.getOrElse(k, 0L))).toMap
+    MicroBatch.mergeKeyed(a, b)(_ + _)
 
   /** Exact dyadic EWMA per group from the folded daily state — the
     * streaming face of [[graft.operators.Ewma.dailyHalfLife]]: the
@@ -108,13 +107,10 @@ object CadenceStream {
   def monitor(updates: DataFrame, groupCol: String, tsCol: Column,
       period: Int, loPpm: Long, hiPpm: Long)(
       onBatch: (Long, Seq[(String, Long, Long, Long, String)],
-        CadenceState) => Unit): DataStreamWriter[Row] = {
-    var running: CadenceState = Map.empty
-    updates.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      if (!batch.isEmpty) {
-        running = mergeStates(running, state(batch, groupCol, tsCol))
+        CadenceState) => Unit): DataStreamWriter[Row] =
+    MicroBatch.fold(updates, Map.empty: CadenceState)((running, batch) =>
+        mergeStates(running, state(batch, groupCol, tsCol))) {
+      (batchId, running) =>
         onBatch(batchId, verdicts(running, period, loPpm, hiPpm), running)
-      }
     }
-  }
 }

@@ -54,12 +54,7 @@ object CovMonitor {
       .toMap
 
   def mergeStates(a: CovState, b: CovState): CovState =
-    (a.keySet ++ b.keySet).map { k =>
-      (a.get(k), b.get(k)) match {
-        case (Some(x), Some(y)) => k -> x.merge(y)
-        case (x, y) => k -> x.orElse(y).get
-      }
-    }.toMap
+    MicroBatch.mergeKeyed(a, b)(_ merge _)
 
   /** Pearson correlation of a cell from the diagonal states — the
     * monitoring statistic (driver-side doubles; the hash-exact surface
@@ -101,15 +96,10 @@ object CovMonitor {
   def monitor(updates: DataFrame, baseline: CovState, vecCol: String,
       maxShift: Double = 0.2)(
       onBatch: (Long, Seq[(Int, Int, Double, Double, String)],
-        CovState) => Unit): DataStreamWriter[Row] = {
-    var running = Map.empty[(Int, Int), CellState]
-    updates.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      if (!batch.isEmpty) {
-        running = mergeStates(running, state(batch, vecCol))
-        onBatch(batchId,
-          drift(running, baseline, maxShift).filter(_._5 == "DRIFT"),
-          running)
-      }
+        CovState) => Unit): DataStreamWriter[Row] =
+    MicroBatch.fold(updates, Map.empty: CovState)(
+        (running, batch) => mergeStates(running, state(batch, vecCol))) {
+      (batchId, running) => onBatch(batchId,
+        drift(running, baseline, maxShift).filter(_._5 == "DRIFT"), running)
     }
-  }
 }

@@ -21,7 +21,7 @@ import org.apache.spark.sql.streaming.OutputMode
   * auto-created from the first batch's schema (options `statsCols`,
   * comma-separated, and `partitionBy` control its layout); keyed
   * MERGE/aggregate maintenance stays with [[TableSink]]'s
-  * foreachBatch faces, which need key semantics no sink option can
+  * [[MicroBatch]] faces, which need key semantics no sink option can
   * express.
   *
   * '''Stamp identity''' (the shared-stamp hazard): `batchId`s are

@@ -53,12 +53,7 @@ object EmbedDriftStream {
 
   def mergeStates(a: Map[Long, LabelState],
       b: Map[Long, LabelState]): Map[Long, LabelState] =
-    (a.keySet ++ b.keySet).map { l =>
-      (a.get(l), b.get(l)) match {
-        case (Some(x), Some(y)) => l -> x.merge(y)
-        case (x, y) => l -> x.orElse(y).get
-      }
-    }.toMap
+    MicroBatch.mergeKeyed(a, b)(_ merge _)
 
   /** Left-fold cosine between two centroids — the exact
     * [[graft.expressions.DotProduct]] operand order, so the driver-side
@@ -99,13 +94,10 @@ object EmbedDriftStream {
   def monitor(updates: DataFrame, baseline: Map[Long, LabelState],
       labelCol: String, vecCol: String, minCos: Double = 0.95)(
       onBatch: (Long, Seq[(Long, String, Double)],
-        Map[Long, LabelState]) => Unit): DataStreamWriter[Row] = {
-    var running = Map.empty[Long, LabelState]
-    updates.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      if (!batch.isEmpty) {
-        running = mergeStates(running, state(batch, labelCol, vecCol))
+        Map[Long, LabelState]) => Unit): DataStreamWriter[Row] =
+    MicroBatch.fold(updates, Map.empty[Long, LabelState])((running, batch) =>
+        mergeStates(running, state(batch, labelCol, vecCol))) {
+      (batchId, running) =>
         onBatch(batchId, drift(running, baseline, minCos), running)
-      }
     }
-  }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.similarity.{GraphIngest, IVFIndex}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Streaming face of [[graft.similarity.GraphIngest]] — kNN-graph
@@ -11,9 +12,10 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * centroids), and joins the corpus holder so later batches compare
   * against it too.
   *
-  * foreachBatch is the right lift (the [[Scd2Stream]] reasoning): the
-  * semantics are batch-vs-accumulated-state, and per micro-batch that
-  * is EXACTLY the batch operator. Both holders re-materialize with
+  * [[MicroBatch.each]] is the right lift (the [[Scd2Stream]]
+  * reasoning): the semantics are batch-vs-accumulated-state, and per
+  * micro-batch that is EXACTLY the batch operator. Both holders are
+  * [[MicroBatch.Standing]] frames, re-materialized with
   * `localCheckpoint` to cut lineage — an unbounded stream would stack
   * one merge plan per batch into a single growing tree. In production
   * the holders are storage-backed tables (the graph bucketed by
@@ -25,40 +27,28 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   */
 object GraphIngestStream {
 
-  /** Mutable corpus + graph holder — read `graph` for the current
-    * top-k edges, `corpus` for the vectors it covers.
+  /** Corpus + graph holder — read `graph` for the current top-k
+    * edges, `corpus` for the vectors it covers. The caller's bootstrap
+    * frames seed it and are never released.
     */
   final class GraphHolder(initialCorpus: DataFrame, initialGraph: DataFrame) {
-    @volatile var corpus: DataFrame = initialCorpus
-    @volatile var graph: DataFrame = initialGraph
+    private[streaming] val corpusStanding = MicroBatch.Standing(initialCorpus)
+    private[streaming] val graphStanding = MicroBatch.Standing(initialGraph)
+    def corpus: DataFrame = corpusStanding.current.get
+    def graph: DataFrame = graphStanding.current.get
   }
 
   /** Wire an embedding stream into `holder` under frozen `cents`. */
   def maintain(vectors: DataFrame, holder: GraphHolder, idCol: String,
-      vecCol: String, k: Int, cents: DataFrame): DataStreamWriter[Row] = {
-    // previous-generation checkpoint blocks release once the next
-    // generation is (eagerly) materialized — only frames THIS
-    // maintainer created, never the caller's bootstrap frames
-    var ownedGraph: Option[DataFrame] = None
-    var ownedCorpus: Option[DataFrame] = None
-    val release = org.apache.spark.sql.graft.CheckpointBridge.release _
-    vectors.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      if (!batch.isEmpty) {
-        val g = GraphIngest
-          .merged(holder.corpus, batch, holder.graph, idCol, vecCol, k,
-            cents)
-          .localCheckpoint(true)
-        val c = holder.corpus
-          .unionByName(batch.select(holder.corpus.columns.map(
-            org.apache.spark.sql.functions.col): _*))
-          .localCheckpoint(true)
-        holder.graph = g
-        holder.corpus = c
-        ownedGraph.foreach(release); ownedGraph = Some(g)
-        ownedCorpus.foreach(release); ownedCorpus = Some(c)
-      }
+      vecCol: String, k: Int, cents: DataFrame): DataStreamWriter[Row] =
+    MicroBatch.each(vectors) { (_, batch) =>
+      val corpus = holder.corpus
+      holder.graphStanding.advance(GraphIngest.merged(corpus, batch,
+        holder.graph, idCol, vecCol, k, cents))
+      holder.corpusStanding.advance(corpus.unionByName(
+        batch.select(corpus.columns.map(col): _*)))
+      ()
     }
-  }
 
   /** Convenience: build the initial holder from a corpus frame — the
     * standing graph under the corpus's frozen stride centroids.

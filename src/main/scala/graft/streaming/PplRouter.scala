@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * FROZEN cut points, both trained offline by the batch faces
   * (`LmScore.model`, [[GroupedNtile.boundaries]]).
   *
-  * Unlike the foreachBatch lifts ([[IngestScreen]], [[NoveltyScreen]]),
+  * Unlike the [[MicroBatch]] lifts (a screen run per micro-batch),
   * this face needs NO batch boundary: scoring is a per-row projection
   * against the broadcast model and labeling is a broadcast join + a
   * bounded array scan ([[GroupedNtile.applyBoundaries]]) — a stateless

@@ -84,12 +84,7 @@ object ProfileMonitor {
 
   def mergeStates(a: Map[String, ColState], b: Map[String, ColState],
       k: Int = 64): Map[String, ColState] =
-    (a.keySet ++ b.keySet).map { c =>
-      (a.get(c), b.get(c)) match {
-        case (Some(x), Some(y)) => c -> x.merge(y, k)
-        case (x, y) => c -> x.orElse(y).get
-      }
-    }.toMap
+    MicroBatch.mergeKeyed(a, b)(_.merge(_, k))
 
   /** Per-column drift verdicts of `running` against `baseline`:
     * ADDED / REMOVED on column presence; DRIFT when the null RATE
@@ -127,25 +122,21 @@ object ProfileMonitor {
     * micro-batch, `onBatch` receives the batch id, the per-column
     * drift verdicts vs `baseline`, and the running states.
     *
-    * The running state lives in this driver closure and does NOT
-    * survive a query restart — a production deployment persists the
-    * (tiny, mergeable) states from `onBatch` and re-seeds a new
-    * monitor by merging them back in; mergeability is exactly what
-    * makes that re-seed lossless.
+    * Replayed batch ids are skipped ([[MicroBatch.fold]]). The running
+    * state lives in this driver closure and does NOT survive a JVM
+    * restart — a production deployment persists the (tiny, mergeable)
+    * states from `onBatch` and re-seeds a new monitor by merging them
+    * back in; mergeability is exactly what makes that re-seed
+    * lossless.
     */
   def monitor(updates: DataFrame, baseline: Map[String, ColState],
       cols: Seq[String] = Nil, k: Int = 64, tolNullRate: Double = 0.01,
       tolDistinctRatio: Double = 2.0)(
       onBatch: (Long, Seq[(String, String)], Map[String, ColState]) => Unit)
-      : DataStreamWriter[Row] = {
-    var running = Map.empty[String, ColState]
-    updates.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      if (!batch.isEmpty) {
-        running = mergeStates(running, profileState(batch, cols, k), k)
-        onBatch(batchId,
-          drift(running, baseline, k, tolNullRate, tolDistinctRatio),
-          running)
-      }
+      : DataStreamWriter[Row] =
+    MicroBatch.fold(updates, Map.empty[String, ColState])((running, batch) =>
+        mergeStates(running, profileState(batch, cols, k), k)) {
+      (batchId, running) => onBatch(batchId,
+        drift(running, baseline, k, tolNullRate, tolDistinctRatio), running)
     }
-  }
 }

@@ -20,21 +20,22 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * recompute contract as [[graft.operators.AggMerge]]. `Unique` is
   * REJECTED here: surplus counts do not add across batches (a key
   * seen once per batch is a violation only across them) — cross-batch
-  * uniqueness is standing-corpus screening, which is
-  * [[IngestScreen]]'s job against a [[graft.dedup.IncrementalDedup]]
-  * index.
+  * uniqueness is standing-corpus screening: run
+  * [[graft.dedup.IncrementalDedup.verdicts]] per micro-batch through
+  * [[MicroBatch.each]] against its standing index.
   *
   * Per micro-batch the distributed work is the batch engine itself
   * (one scan + a 1-row exchange per table, parent keys broadcast);
   * the driver folds one tiny (violations, total) pair per rule.
   * Replays of an already-folded batch id within a run are skipped
-  * (foreachBatch is at-least-once). The closure state does not
-  * survive a restart: to recover WITHOUT double counting, persist
-  * (batchId, running pairs) atomically per batch and re-seed from the
-  * LAST persisted snapshot — a replayed batch then either was already
-  * inside the snapshot (its id ≤ the snapshot's) or folds exactly
-  * once; merging two independently-accumulated snapshots of
-  * overlapping batch ranges is NOT lossless.
+  * ([[MicroBatch.fold]]: micro-batches are at-least-once). The closure
+  * state does not survive a JVM restart: to recover WITHOUT double
+  * counting, persist (batchId, running pairs) atomically per batch
+  * and re-seed from the LAST persisted snapshot — a replayed batch
+  * then either was already inside the snapshot (its id ≤ the
+  * snapshot's) or folds exactly once; merging two
+  * independently-accumulated snapshots of overlapping batch ranges is
+  * NOT lossless.
   */
 object QualityMonitor {
 
@@ -54,14 +55,16 @@ object QualityMonitor {
     case _ => true
   }
 
+  private val UniqueRejected =
+    "Unique is not additive across batches — screen each micro-batch " +
+      "against a standing index (IncrementalDedup.verdicts) instead"
+
   /** Per-rule counters of ONE frame (a micro-batch, or the whole
     * concatenation in the spec's identity check).
     */
   def batchState(df: DataFrame, table: String, rules: Seq[Rule],
       fks: Seq[StaticFk] = Nil): Map[String, RuleState] = {
-    require(rules.forall(mergeable),
-      "Unique is not additive across batches — screen against a " +
-        "standing index (IngestScreen) instead")
+    require(rules.forall(mergeable), UniqueRejected)
     val reports =
       (if (rules.nonEmpty) Seq(Quality.check(df, table, rules)) else Nil) ++
         fks.map(f => Quality.foreignKey(df, table, f.childCol, f.parent,
@@ -73,13 +76,7 @@ object QualityMonitor {
 
   def mergeStates(a: Map[String, RuleState],
       b: Map[String, RuleState]): Map[String, RuleState] =
-    (a.keySet ++ b.keySet).map { id =>
-      val s = (a.get(id), b.get(id)) match {
-        case (Some(x), Some(y)) => x.merge(y)
-        case (x, y) => x.orElse(y).get
-      }
-      id -> s
-    }.toMap
+    MicroBatch.mergeKeyed(a, b)(_ merge _)
 
   /** Wire an ingest stream into the running monitor: after each
     * micro-batch, `onBatch` receives the batch id and the running
@@ -88,18 +85,8 @@ object QualityMonitor {
   def monitor(stream: DataFrame, table: String, rules: Seq[Rule],
       fks: Seq[StaticFk] = Nil)(
       onBatch: (Long, Map[String, RuleState]) => Unit): DataStreamWriter[Row] = {
-    require(rules.forall(mergeable),
-      "Unique is not additive across batches — screen against a " +
-        "standing index (IngestScreen) instead")
-    var running = Map.empty[String, RuleState]
-    var lastBatch = -1L
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      // at-least-once: a replayed id must not fold twice
-      if (batchId > lastBatch && !batch.isEmpty) {
-        running = mergeStates(running, batchState(batch, table, rules, fks))
-        lastBatch = batchId
-        onBatch(batchId, running)
-      }
-    }
+    require(rules.forall(mergeable), UniqueRejected)
+    MicroBatch.fold(stream, Map.empty[String, RuleState])((running, batch) =>
+      mergeStates(running, batchState(batch, table, rules, fks)))(onBatch)
   }
 }

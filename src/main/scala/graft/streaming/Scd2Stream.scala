@@ -11,22 +11,26 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * a snapshot apply per micro-batch would close every key the batch
   * doesn't mention).
   *
-  * foreachBatch is the right lift (same reasoning as [[IngestScreen]]):
-  * the apply's semantics are batch-vs-accumulated-state, and per
-  * micro-batch that is EXACTLY the already-verified batch operator.
-  * The history is re-materialized per batch with `localCheckpoint` to
-  * cut lineage — an unbounded stream would otherwise stack one
-  * full-outer join per batch into a single growing plan. In production
-  * the holder is a storage-backed table — [[TableSink.mergeSink]] over
-  * a [[graft.tables.CowTable]] is that holder in-repo (exactly-once
-  * via log-stamped batches); this in-process holder object remains the
-  * lighter-weight harness for operator-level tests.
+  * [[MicroBatch.each]] is the right lift: the apply's semantics are
+  * batch-vs-accumulated-state, and per micro-batch that is EXACTLY the
+  * already-verified batch operator. The history is a
+  * [[MicroBatch.Standing]] frame, re-materialized per batch with
+  * `localCheckpoint` to cut lineage — an unbounded stream would
+  * otherwise stack one full-outer join per batch into a single growing
+  * plan. In production the holder is a storage-backed table —
+  * [[TableSink.mergeSink]] over a [[graft.tables.CowTable]] is that
+  * holder in-repo (exactly-once via log-stamped batches); this
+  * in-process holder object remains the lighter-weight harness for
+  * operator-level tests.
   */
 object Scd2Stream {
 
-  /** Mutable history holder — read `history` for the current state. */
+  /** History holder — read `history` for the current state. The
+    * caller's initial frame seeds it and is never released.
+    */
   final class HistoryHolder(initial: DataFrame) {
-    @volatile var history: DataFrame = initial
+    private[streaming] val standing = MicroBatch.Standing(initial)
+    def history: DataFrame = standing.current.get
   }
 
   /** Wire a CDC stream into `holder`. `batchTs` maps micro-batch id →
@@ -35,21 +39,10 @@ object Scd2Stream {
     * event-time versioning).
     */
   def maintain(deltas: DataFrame, holder: HistoryHolder, keys: Seq[String],
-      tombstoneCol: Option[String], batchTs: Long => Long): DataStreamWriter[Row] = {
-    // previous-generation checkpoint blocks release the moment the
-    // next generation is (eagerly) materialized — only frames THIS
-    // maintainer created are released, never the caller's initial one
-    var owned: Option[DataFrame] = None
-    deltas.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      if (!batch.isEmpty) {
-        val next = Scd2
-          .applyDelta(holder.history, batch, keys, batchTs(batchId),
-            tombstoneCol)
-          .localCheckpoint(true)
-        holder.history = next
-        owned.foreach(org.apache.spark.sql.graft.CheckpointBridge.release)
-        owned = Some(next)
-      }
+      tombstoneCol: Option[String], batchTs: Long => Long): DataStreamWriter[Row] =
+    MicroBatch.each(deltas) { (batchId, batch) =>
+      holder.standing.advance(Scd2.applyDelta(holder.history, batch, keys,
+        batchTs(batchId), tombstoneCol))
+      ()
     }
-  }
 }

@@ -19,7 +19,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * that scan is partition-pruned at 100 TB).
   *
   * The reference library is batch-only (SURVEY §2.9); this is the
-  * natural foreachBatch lift — no new diff semantics are introduced.
+  * natural [[MicroBatch]] lift — no new diff semantics are introduced.
   */
 object SnapshotDiff {
   // PRECONDITION: each micro-batch must carry at most ONE row per key —
@@ -38,13 +38,11 @@ object SnapshotDiff {
     */
   def againstSnapshot(updates: DataFrame, snapshot: DataFrame,
       pks: Seq[String])(onBatch: (Long, DiffResult) => Unit): DataStreamWriter[Row] =
-    updates.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      if (!batch.isEmpty) {
-        val touched = snapshot.join(batch.select(pks.map(col): _*).distinct(),
-          pks, "left_semi")
-        DataColDiff.computeDataframeDiff(touched, batch, pks)
-          .fold(mm => throw new IllegalArgumentException(mm.message),
-            res => onBatch(batchId, res))
-      }
+    MicroBatch.each(updates) { (batchId, batch) =>
+      val touched = snapshot.join(batch.select(pks.map(col): _*).distinct(),
+        pks, "left_semi")
+      DataColDiff.computeDataframeDiff(touched, batch, pks)
+        .fold(mm => throw new IllegalArgumentException(mm.message),
+          res => onBatch(batchId, res))
     }
 }

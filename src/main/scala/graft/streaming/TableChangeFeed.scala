@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * commit range (start, end] — commit-granular, replayable from any
   * retained version, and EXACTLY what the batch API answers (the spec
   * pins streamed ≡ concatenated `changesAt`). With this face a table
-  * drives its own downstream consumers (IngestScreen / AggTable /
+  * drives its own downstream consumers (TableCuration / AggTable /
   * ProfileMonitor) instead of being fed by an external stream beside
   * the writes.
   *
@@ -93,8 +93,8 @@ object TableChangeFeed {
     * (compact/optimize) correctly emit NOTHING. A row-changing commit
     * written WITHOUT `cdc = true` (or a restore) cannot be represented
     * and fails the stream loudly — silence there would desync every
-    * downstream replica. This is the feed [[TableReplica]] folds into
-    * an exact copy.
+    * downstream replica. This is the feed [[TableSink.replicaSink]]
+    * folds into an exact copy.
     *
     * '''`where` semantics''': with `where` alone, the feed is a plain
     * row filter — right for append-dominant consumers (metrics,

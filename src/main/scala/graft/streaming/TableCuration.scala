@@ -82,59 +82,57 @@ object TableCuration {
     */
   def curateSink(feed: DataFrame, curatedPath: String, idCol: String,
       textCol: String, cfg: MinHashLSH.Config = MinHashLSH.Config(),
-      appId: String = "table-curation",
+      appId: String,
       indexPrefix: Option[String] = None,
       quarantinePath: Option[String] = None): DataStreamWriter[Row] =
-    feed.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      if (!batch.isEmpty) {
-        val spark = batch.sparkSession
-        val vc = TableChangeFeed.VersionCol
-        val versions = batch.select(vc).distinct().collect()
-          .map(_.getLong(0)).sorted
-        versions.foreach { v =>
-          val applied = TxLog.snapshotPlanned(spark, curatedPath).meta
-            .txnVersion(appId).exists(_ >= v)
-          if (!applied) {
-            val docs = batch.filter(col(vc) === v)
-              .select(col(idCol), col(textCol))
-            val (rawVerdicts, scratch) = indexPrefix match {
-              case Some(p) => IncrementalDedup.verdictsScoped(
-                IncrementalDedup.readIndex(spark, p), docs, idCol,
-                textCol, cfg)
-              case None => IncrementalDedup.verdictsScopedCorpus(
-                CowTable.read(spark, curatedPath), docs, idCol,
-                textCol, cfg)
-            }
-            val verdicts = rawVerdicts.persist()
-            val keeps = docs.join(
-                verdicts.filter(col("keep") === 1)
-                  .select(col("doc_id").as(idCol)),
+    MicroBatch.each(feed) { (_, batch) =>
+      val spark = batch.sparkSession
+      val vc = TableChangeFeed.VersionCol
+      val versions = batch.select(vc).distinct().collect()
+        .map(_.getLong(0)).sorted
+      versions.foreach { v =>
+        val applied = TxLog.snapshotPlanned(spark, curatedPath).meta
+          .txnVersion(appId).exists(_ >= v)
+        if (!applied) {
+          val docs = batch.filter(col(vc) === v)
+            .select(col(idCol), col(textCol))
+          val (rawVerdicts, scratch) = indexPrefix match {
+            case Some(p) => IncrementalDedup.verdictsScoped(
+              IncrementalDedup.readIndex(spark, p), docs, idCol,
+              textCol, cfg)
+            case None => IncrementalDedup.verdictsScopedCorpus(
+              CowTable.read(spark, curatedPath), docs, idCol,
+              textCol, cfg)
+          }
+          val verdicts = rawVerdicts.persist()
+          val keeps = docs.join(
+              verdicts.filter(col("keep") === 1)
+                .select(col("doc_id").as(idCol)),
+              idCol)
+            .persist()
+          try {
+            quarantinePath.foreach { qp =>
+              val rejects = docs.join(
+                verdicts.filter(col("keep") === 0)
+                  .select(col("doc_id").as(idCol),
+                    col("exact_dup"), col("near_dup")),
                 idCol)
-              .persist()
-            try {
-              quarantinePath.foreach { qp =>
-                val rejects = docs.join(
-                  verdicts.filter(col("keep") === 0)
-                    .select(col("doc_id").as(idCol),
-                      col("exact_dup"), col("near_dup")),
-                  idCol)
-                if (TxLog.latestVersion(spark, qp) == 0)
-                  CowTable.create(spark, qp, rejects.limit(0), Seq(idCol))
-                CowTable.append(spark, qp, rejects,
-                  txn = Some(TxLog.Txn(appId, v)))
-              }
-              CowTable.append(spark, curatedPath, keeps,
+              if (TxLog.latestVersion(spark, qp) == 0)
+                CowTable.create(spark, qp, rejects.limit(0), Seq(idCol))
+              CowTable.append(spark, qp, rejects,
                 txn = Some(TxLog.Txn(appId, v)))
-              indexPrefix.foreach(p =>
-                IncrementalDedup.appendToIndex(keeps, idCol, textCol,
-                  cfg, p))
-            } finally {
-              // release exactly this version's caches — the screen's
-              // internal scans, the verdicts, the keeps
-              keeps.unpersist(blocking = false)
-              verdicts.unpersist(blocking = false)
-              scratch.foreach(_.unpersist(blocking = false))
             }
+            CowTable.append(spark, curatedPath, keeps,
+              txn = Some(TxLog.Txn(appId, v)))
+            indexPrefix.foreach(p =>
+              IncrementalDedup.appendToIndex(keeps, idCol, textCol,
+                cfg, p))
+          } finally {
+            // release exactly this version's caches — the screen's
+            // internal scans, the verdicts, the keeps
+            keeps.unpersist(blocking = false)
+            verdicts.unpersist(blocking = false)
+            scratch.foreach(_.unpersist(blocking = false))
           }
         }
       }

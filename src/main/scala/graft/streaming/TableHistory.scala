@@ -28,11 +28,12 @@ object TableHistory {
   /** Wire a [[TableChangeFeed.readCdc]] frame into an SCD2 history
     * table at `historyPath` (initialized by [[Scd2Table.init]] from
     * the source's version-1 snapshot at `asOf = 1`; stream from
-    * `startingVersion = 2`).
+    * `startingVersion = 2`). `appId` scopes the stamps as in
+    * [[TableSink.mergeSink]].
     */
   def scd2Sink(cdcFeed: DataFrame, historyPath: String, keys: Seq[String],
-      appId: String = "table-history"): DataStreamWriter[Row] =
-    cdcFeed.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+      appId: String): DataStreamWriter[Row] =
+    MicroBatch.each(cdcFeed) { (_, batch) =>
       val ct = CowTable.ChangeTypeCol
       val vc = TableChangeFeed.VersionCol
       val fx = batch.filter(col(ct) =!= "update_preimage")

@@ -68,12 +68,7 @@ object TrendStream {
       }.toMap
 
   def mergeStates(a: TrendState, b: TrendState): TrendState =
-    (a.keySet ++ b.keySet).map { k =>
-      (a.get(k), b.get(k)) match {
-        case (Some(x), Some(y)) => k -> x.merge(y)
-        case (x, y) => k -> x.orElse(y).get
-      }
-    }.toMap
+    MicroBatch.mergeKeyed(a, b)(_ merge _)
 
   /** Per-group verdicts: TRENDING_UP / TRENDING_DOWN when |slope|
     * exceeds `minAbsSlope` (y-fp units per x unit), FLAT below it,
@@ -100,14 +95,10 @@ object TrendStream {
   def monitor(updates: DataFrame, groupCol: String, xCol: Column,
       yCol: Column, minAbsSlope: Double)(
       onBatch: (Long, Seq[(String, Option[Double], String)],
-        TrendState) => Unit): DataStreamWriter[Row] = {
-    var running = Map.empty[String, GroupState]
-    updates.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      if (!batch.isEmpty) {
-        running = mergeStates(running,
-          state(batch, groupCol, xCol, yCol))
+        TrendState) => Unit): DataStreamWriter[Row] =
+    MicroBatch.fold(updates, Map.empty: TrendState)((running, batch) =>
+        mergeStates(running, state(batch, groupCol, xCol, yCol))) {
+      (batchId, running) =>
         onBatch(batchId, verdicts(running, minAbsSlope), running)
-      }
     }
-  }
 }

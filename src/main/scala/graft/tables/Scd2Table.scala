@@ -26,8 +26,9 @@ import org.apache.spark.sql.functions._
   * drop out — the merge ships only the churn. Batch timestamps must be
   * strictly increasing (the operator's contract); the optional `txn`
   * stamp makes replays no-ops, so this composes with
-  * [[graft.streaming.TableSink]]-style foreachBatch wiring for an
-  * exactly-once streaming SCD2 pipeline.
+  * [[graft.streaming.MicroBatch.each]] wiring (as in
+  * [[graft.streaming.TableHistory]]) for an exactly-once streaming
+  * SCD2 pipeline.
   */
 object Scd2Table {
 

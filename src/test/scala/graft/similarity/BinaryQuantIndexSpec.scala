@@ -73,9 +73,10 @@ class BinaryQuantIndexSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getSeq[Float](1)))
       val stream = MemoryStream[(Long, Seq[Float])](spark)
       var got = Map.empty[Long, Seq[Seq[Any]]]
-      val q = graft.streaming.HammingServe.serve(
-          stream.toDF().toDF("vec_id", "embedding"), table,
-          "vec_id", "embedding", 64, 128, 120, 10) { (bid, topk) =>
+      val q = graft.streaming.MicroBatch.each(
+          stream.toDF().toDF("vec_id", "embedding")) { (bid, b) =>
+        val topk = BinaryQuant.topKIndexed(spark, table, b,
+          "vec_id", "embedding", 64, 128, 120, 10)
         got += bid -> topk.orderBy("q_id", "rank").collect()
           .map(_.toSeq.toList).toSeq
       }.start()

@@ -5,9 +5,10 @@ import graft.operators.SymDeleteJoin
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Fuzzy-lookup streaming face (#30): per-micro-batch resolution
-  * against the persisted variant index equals the batch operator over
-  * each batch, and unmatched keys stay absent (the new-entity path).
+/** Fuzzy lookup on a stream: [[SymDeleteJoin.resolveIndexed]] run per
+  * micro-batch ([[MicroBatch.each]]) against the persisted variant
+  * index equals the batch operator over each batch, and unmatched keys
+  * stay absent (the new-entity path).
   */
 class FuzzyLookupStreamSpec extends AnyFunSuite {
 
@@ -24,10 +25,11 @@ class FuzzyLookupStreamSpec extends AnyFunSuite {
       val b2 = Seq((12L, "gamm"), (13L, "zzzzz"))
       val stream = MemoryStream[(Long, String)](spark)
       var got = Map.empty[Long, Set[Seq[Any]]]
-      val q = FuzzyLookupStream.screen(spark,
-          stream.toDF().toDF("lid", "lname"), "graft_flu_idx",
-          "lid", "lname", d = 1) { (id, matches) =>
-        got += id -> matches.collect().map(_.toSeq).toSet
+      val q = MicroBatch.each(stream.toDF().toDF("lid", "lname")) {
+        (id, b) =>
+          val matches = SymDeleteJoin.resolveIndexed(spark, "graft_flu_idx",
+            b, "lid", "lname", d = 1)
+          got += id -> matches.collect().map(_.toSeq).toSet
       }.start()
       try {
         Seq(b1, b2).foreach { b => stream.addData(b); q.processAllAvailable() }

@@ -54,10 +54,12 @@ class ScoringStreamSpec extends AnyFunSuite {
 
     val stream = MemoryStream[(Long, String, Int)](spark)
     var got = Map.empty[Long, Seq[(Long, Long, Int)]]
-    val q = LinkageScreen.screen(stream.toDF().toDF("id", "txt", "blk"),
-        reference, Seq("blk"), "id", "txt", "rid", "rtxt") { (bid, m) =>
-      got += bid -> m.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+    val q = MicroBatch.each(stream.toDF().toDF("id", "txt", "blk")) {
+      (bid, b) =>
+        val m = RecordLinkage.resolve(b, reference, Seq("blk"), "id", "txt",
+          "rid", "rtxt")
+        got += bid -> m.collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
     }.start()
     try {
       Seq(b1, b2).foreach { b => stream.addData(b); q.processAllAvailable() }

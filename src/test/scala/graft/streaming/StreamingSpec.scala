@@ -317,9 +317,10 @@ class StreamingSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val stream = MemoryStream[(Long, String)](spark)
     val seen = scala.collection.mutable.Map.empty[Long, Set[(Long, Int, Int, Int)]]
-    val q = IngestScreen.screen(
-        stream.toDF().toDF("doc_id", "text"), corpus, "doc_id", "text") {
-        (batchId, v) =>
+    val q = MicroBatch.each(stream.toDF().toDF("doc_id", "text")) {
+        (batchId, b) =>
+          val v = graft.dedup.IncrementalDedup
+            .verdicts(corpus, b, "doc_id", "text")
           seen += batchId -> v.collect()
             .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3)))
             .toSet
@@ -331,8 +332,9 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       stream.addData(b2)
       q.processAllAvailable()
-      // stream face ≡ batch operator per micro-batch (which is itself
-      // oracle-gated as dedup_incremental) — exact dup, fresh, near dup
+      // per micro-batch ≡ batch operator over the same rows (which is
+      // itself oracle-gated as dedup_incremental) — exact dup, fresh,
+      // near dup
       for ((batch, id) <- Seq(b1 -> 0L, b2 -> 1L)) {
         val expect = graft.dedup.IncrementalDedup
           .verdicts(corpus, batch.toDF("doc_id", "text"), "doc_id", "text")
@@ -471,9 +473,9 @@ class StreamingSpec extends AnyFunSuite {
     val stream = MemoryStream[(Long, String)](spark)
     val seen = scala.collection.mutable.Map
       .empty[Long, Set[(Long, Long, Long, Double)]]
-    val q = NoveltyScreen.screen(
-        stream.toDF().toDF("doc_id", "text"), idx, "doc_id", "text") {
-        (batchId, s) =>
+    val q = MicroBatch.each(stream.toDF().toDF("doc_id", "text")) {
+        (batchId, b) =>
+          val s = Novelty.screenAgainst(idx, b, "doc_id", "text")
           seen += batchId -> s.collect()
             .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
               r.getDouble(3)))
@@ -486,7 +488,7 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       stream.addData(b2)
       q.processAllAvailable()
-      // stream face ≡ the spec'd batch screen per micro-batch
+      // per micro-batch ≡ the spec'd batch screen over the same rows
       for ((batch, id) <- Seq(b1 -> 0L, b2 -> 1L)) {
         val expect = Novelty
           .screenAgainst(idx, batch.toDF("doc_id", "text"), "doc_id", "text")
@@ -515,10 +517,11 @@ class StreamingSpec extends AnyFunSuite {
         "ann_ingest_idx")
       val stream = MemoryStream[(Long, Seq[Float])](spark)
       var folds = 0L
-      val q = AnnIngestStream.maintain(
-          stream.toDF().toDF("vec_id", "embedding"),
-          "vec_id", "embedding", 64, "ann_ingest_idx", model) { _ =>
-          folds += 1
+      val q = MicroBatch.each(stream.toDF().toDF("vec_id", "embedding")) {
+          (_, b) =>
+            IvfPq.appendToIndex(b, "vec_id", "embedding", 64,
+              "ann_ingest_idx", model)
+            folds += 1
         }.start()
       try {
         val (b1, b2) = arrivals.splitAt(arrivals.size / 2)
@@ -563,11 +566,13 @@ class StreamingSpec extends AnyFunSuite {
       val stream = MemoryStream[(Long, Seq[Float])](spark)
       val seen = scala.collection.mutable.Map
         .empty[Long, Set[(Long, Int, Long, Double)]]
-      val q = GraphServe.serve(stream.toDF().toDF("vec_id", "embedding"),
-          "graph_srv", "vec_id", "embedding", 10) { (batchId, topk) =>
-          seen += batchId -> topk.collect()
-            .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-              r.getDouble(3))).toSet
+      val q = MicroBatch.each(stream.toDF().toDF("vec_id", "embedding")) {
+          (batchId, b) =>
+            val topk = GraphSearch.searchIndexed(spark, "graph_srv", b,
+              "vec_id", "embedding", 10)
+            seen += batchId -> topk.collect()
+              .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+                r.getDouble(3))).toSet
         }.start()
       try {
         val (b1, b2) = queryRows.splitAt(4)
@@ -601,11 +606,16 @@ class StreamingSpec extends AnyFunSuite {
       val stream = MemoryStream[(Long, Seq[Float])](spark)
       val seen = scala.collection.mutable.Map
         .empty[Long, Set[(Long, Int, Long, Double)]]
-      val q = AnnServe.serve(stream.toDF().toDF("vec_id", "embedding"),
-          "ann_serve_idx", "vec_id", "embedding", 64, 10) { (batchId, topk) =>
-          seen += batchId -> topk.collect()
-            .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-              r.getDouble(3))).toSet
+      // the codebooks are read once, before wiring: a frozen serving
+      // snapshot reused by every micro-batch
+      val model = IvfPq.readModel(spark, "ann_serve_idx")
+      val q = MicroBatch.each(stream.toDF().toDF("vec_id", "embedding")) {
+          (batchId, b) =>
+            val topk = IvfPq.topKIndexed(spark, "ann_serve_idx", b,
+              "vec_id", "embedding", 64, 10, model = Some(model))
+            seen += batchId -> topk.collect()
+              .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+                r.getDouble(3))).toSet
         }.start()
       try {
         val (b1, b2) = queryRows.splitAt(4)
@@ -613,7 +623,7 @@ class StreamingSpec extends AnyFunSuite {
         q.processAllAvailable()
         stream.addData(b2)
         q.processAllAvailable()
-        // stream face ≡ the spec'd batch serving path per micro-batch
+        // per micro-batch ≡ the spec'd batch serving path
         for ((batch, id) <- Seq(b1 -> 0L, b2 -> 1L)) {
           val expect = IvfPq.topKIndexed(spark, "ann_serve_idx",
               batch.toDF("vec_id", "embedding"), "vec_id", "embedding",
@@ -644,11 +654,12 @@ class StreamingSpec extends AnyFunSuite {
       val stream = MemoryStream[(Long, String)](spark)
       val seen = scala.collection.mutable.Map
         .empty[Long, Set[(Long, Int, Long, Double)]]
-      val q = KeywordServe.serve(stream.toDF().toDF("q_id", "term"),
-          "kw_serve_idx", 5) { (batchId, topk) =>
-          seen += batchId -> topk.collect()
-            .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-              r.getDouble(3))).toSet
+      val q = MicroBatch.each(stream.toDF().toDF("q_id", "term")) {
+          (batchId, b) =>
+            val topk = Bm25.topDocsIndexed(spark, "kw_serve_idx", b, 5)
+            seen += batchId -> topk.collect()
+              .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+                r.getDouble(3))).toSet
         }.start()
       try {
         val (b1, b2) = termRows.partition(_._1 < 2)
@@ -656,7 +667,7 @@ class StreamingSpec extends AnyFunSuite {
         q.processAllAvailable()
         stream.addData(b2)
         q.processAllAvailable()
-        // stream face ≡ the spec'd batch serving path per micro-batch
+        // per micro-batch ≡ the spec'd batch serving path
         for ((batch, id) <- Seq(b1 -> 0L, b2 -> 1L)) {
           val expect = Bm25.topDocsIndexed(spark, "kw_serve_idx",
               batch.toDF("q_id", "term"), 5)
@@ -694,9 +705,12 @@ class StreamingSpec extends AnyFunSuite {
         numBuckets = 8)
       val stream = MemoryStream[(Long, String)](spark)
       val folded = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val q = IndexIngestStream.maintain(
-          stream.toDF().toDF("doc_id", "text"), "doc_id", "text",
-          "kw_ingest_idx", numBuckets = 8)(folded += _).start()
+      val q = MicroBatch.each(stream.toDF().toDF("doc_id", "text")) {
+          (batchId, b) =>
+            Bm25.appendToIndex(b, "doc_id", "text", "kw_ingest_idx",
+              numBuckets = 8)
+            folded += batchId
+        }.start()
       try {
         val (b1, b2) = rest.splitAt(rest.length / 2)
         stream.addData(b1)

@@ -368,10 +368,10 @@ class TableChangeFeedSpec extends AnyFunSuite {
       // end-to-end: a replica over the SCOPED feed with no filter of
       // its own equals source.filter(where)
       val dst = dir.getAbsolutePath + "/scopedrep"
-      val q = TableReplica.replicaSink(
+      val q = TableSink.replicaSink(
         TableChangeFeed.readCdc(spark, t,
           where = Some("s = 'in'"), whereKeys = Seq("k")),
-        dst, Seq("k"))
+        dst, Seq("k"), appId = "table-replica")
         .option("checkpointLocation", dir.getAbsolutePath + "/ckrep")
         .start()
       try q.processAllAvailable() finally q.stop()
@@ -536,10 +536,10 @@ class TableChangeFeedSpec extends AnyFunSuite {
         someRows(20).map(r => (r._1, r._2, r._3)).distinct
           .groupBy(_._1).map(_._2.head).toSeq
           .toDF("k", "v", "s"), Seq("k"))
-      val q = TableReplica.replicaSink(
+      val q = TableSink.replicaSink(
         TableChangeFeed.readCdc(spark, t,
           where = Some("s = 'in'"), whereKeys = Seq("k")),
-        dst, Seq("k"))
+        dst, Seq("k"), appId = "table-replica")
         .option("checkpointLocation", ckpt).start()
       try {
         (1 to 6).foreach { _ =>

@@ -31,7 +31,8 @@ class TableCurationSpec extends AnyFunSuite {
 
   private def drain(raw: String, cur: String, ckpt: String): Unit = {
     val q = TableCuration.curateSink(
-      TableChangeFeed.readChanges(spark, raw), cur, "doc_id", "text")
+      TableChangeFeed.readChanges(spark, raw), cur, "doc_id", "text",
+      appId = "table-curation")
       .option("checkpointLocation", ckpt).start()
     try q.processAllAvailable() finally q.stop()
   }
@@ -112,7 +113,7 @@ class TableCurationSpec extends AnyFunSuite {
         CowTable.append(spark, raw, waves(1).toDF("doc_id", "text"))
         val q = TableCuration.curateSink(
           TableChangeFeed.readChanges(spark, raw), cur, "doc_id", "text",
-          indexPrefix = idx)
+          appId = "table-curation", indexPrefix = idx)
           .option("checkpointLocation", s"${dir.getAbsolutePath}/ck_$tag")
           .start()
         try q.processAllAvailable() finally q.stop()
@@ -196,7 +197,7 @@ class TableCurationSpec extends AnyFunSuite {
       val q = TableCuration.curateSink(
         TableChangeFeed.readChanges(spark, raw,
           maxVersionsPerTrigger = Some(1)),
-        cur, "doc_id", "text")
+        cur, "doc_id", "text", appId = "table-curation")
         .option("checkpointLocation", ckpt).start()
       try q.processAllAvailable() finally q.stop()
       assert(ids(cur) === Set(1L, 2L, 4L))

@@ -31,7 +31,7 @@ class TableHistorySpec extends AnyFunSuite {
   private def drain(src: String, hist: String, ckpt: String): Unit = {
     val q = TableHistory.scd2Sink(
       TableChangeFeed.readCdc(spark, src, startingVersion = 2L),
-      hist, Seq("k"))
+      hist, Seq("k"), appId = "table-history")
       .option("checkpointLocation", ckpt).start()
     try q.processAllAvailable() finally q.stop()
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[TableReplica]]: a CDC feed folded into an exact copy — replica ≡
+/** [[TableSink.replicaSink]]: a CDC feed folded into an exact copy — replica ≡
   * source after every drain, across every row-changing op, with
   * layout-only commits correctly invisible and replays no-ops.
   */
@@ -30,8 +30,9 @@ class TableReplicaSpec extends AnyFunSuite {
 
   private def drain(src: String, dst: String, ckpt: String,
       where: Option[String] = None): Unit = {
-    val q = TableReplica.replicaSink(
-      TableChangeFeed.readCdc(spark, src), dst, Seq("k"), where = where)
+    val q = TableSink.replicaSink(
+      TableChangeFeed.readCdc(spark, src), dst, Seq("k"),
+      appId = "table-replica", where = where)
       .option("checkpointLocation", ckpt).start()
     try q.processAllAvailable() finally q.stop()
   }
@@ -152,9 +153,9 @@ class TableReplicaSpec extends AnyFunSuite {
         Seq((1L, 10L, "a")).toDF("k", "v", "s"), Seq("k"))
       CowTable.merge(spark, src, Seq((1L, 11L, "x", false))
         .toDF("k", "v", "s", "del"), Seq("k"), Some("del")) // NO cdc
-      val q = TableReplica.replicaSink(
+      val q = TableSink.replicaSink(
         TableChangeFeed.readCdc(spark, src),
-        dir.getAbsolutePath + "/dst", Seq("k"))
+        dir.getAbsolutePath + "/dst", Seq("k"), appId = "table-replica")
         .option("checkpointLocation", dir.getAbsolutePath + "/ck").start()
       val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
         try q.processAllAvailable() finally q.stop()

@@ -115,8 +115,10 @@ class TableSinkSpec extends AnyFunSuite {
       CowTable.create(spark, t,
         Seq((1L, "a", 0L)).toDF("k", "v", "seq"), Seq("k"))
       val stream = MemoryStream[(Long, String, Long)](spark)
-      val q = TableSink.appendSink(
-          stream.toDF().toDF("k", "v", "seq"), t, appId = "app-spec")
+      val q = stream.toDF().toDF("k", "v", "seq").writeStream
+        .format(classOf[CowTableSinkProvider].getName)
+        .option("path", t).option("appId", "app-spec")
+        .option("checkpointLocation", t + "_ck")
         .start()
       try {
         stream.addData(Seq((5L, "e", 1L)))
@@ -127,6 +129,39 @@ class TableSinkSpec extends AnyFunSuite {
       CowTable.append(spark, t, Seq((5L, "DUP", 9L)).toDF("k", "v", "seq"),
         Some(TxLog.Txn("app-spec", 0L)))
       assert(contents(t) === Set(1L -> "a", 5L -> "e"))
+    }
+  }
+
+  test("two merge sinks on one table, distinct appIds: every batch lands") {
+    withTable { t =>
+      CowTable.create(spark, t,
+        Seq((1L, "a", 0L)).toDF("k", "v", "seq"), Seq("k"))
+      val s1 = MemoryStream[Cdc](spark)
+      val s2 = MemoryStream[Cdc](spark)
+      def sink(s: MemoryStream[Cdc], appId: String) = TableSink.mergeSink(
+          s.toDF().toDF("k", "v", "del", "seq"),
+          t, Seq("k"), Some("del"), Some("seq"), appId = appId)
+        .start()
+      val q1 = sink(s1, "feed-a")
+      val q2 = sink(s2, "feed-b")
+      try {
+        // both queries number their batches 0, 1: under one shared
+        // stamp namespace the second query's batches would be skipped
+        // as replays of the first's
+        s1.addData(Seq[Cdc]((2L, "a0", false, 1L)))
+        q1.processAllAvailable()
+        s2.addData(Seq[Cdc]((3L, "b0", false, 1L)))
+        q2.processAllAvailable()
+        s1.addData(Seq[Cdc]((1L, "a1", false, 2L)))
+        q1.processAllAvailable()
+        s2.addData(Seq[Cdc]((4L, "b1", false, 2L)))
+        q2.processAllAvailable()
+      } finally { q1.stop(); q2.stop() }
+      assert(contents(t) === Set(1L -> "a1", 2L -> "a0", 3L -> "b0",
+        4L -> "b1"))
+      val log = TxLog.snapshot(spark, t)
+      assert(log.txnVersion("feed-a") === Some(1L))
+      assert(log.txnVersion("feed-b") === Some(1L))
     }
   }
 
