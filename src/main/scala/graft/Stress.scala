@@ -1423,10 +1423,7 @@ object Stress {
       def bandPairs(docs: DataFrame, cfg: dedup.MinHashLSH.Config) = {
         val b = dedup.MinHashLSH.bands(dedup.MinHashLSH
           .docShingles(docs, "doc_id", "text", cfg).persist(), cfg)
-        b.as("a").join(b.as("b"),
-          col("a.band_id") === col("b.band_id") &&
-            col("a.band_val") === col("b.band_val") &&
-            col("a.doc_id") < col("b.doc_id"))
+        dedup.MinHashLSH.bandPairs(b, b, ordered = true)
       }
 
       // (a) small corpus, NO cap: the hot bucket is quadratic — count
@@ -1443,8 +1440,7 @@ object Stress {
       // collisions (~linear), and every planted twin still verifies
       val big = staged(corpus(50000))
       timed("hotband-cap") {
-        val cand = bandPairs(big, cfgCap)
-          .select(col("a.doc_id"), col("b.doc_id")).distinct().count()
+        val cand = bandPairs(big, cfgCap).distinct().count()
         require(cand < 20L * 50000L,
           s"cap failed to linearize the hot bucket: $cand candidates")
         val pairs = dedup.MinHashLSH

@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
   *     bodies; the batch side is small by definition, so AQE broadcasts
   *     it and the corpus never shuffles;
   *   - near screen: the batch's band rows join the corpus's band rows
-  *     on (band_id, band_val) — candidates come from hash-bucket
+  *     on (band_id, band_val) ([[MinHashLSH.bandPairs]], the join
+  *     every MinHash screen runs) — candidates come from hash-bucket
   *     collisions only (never batch × corpus), and verification joins
   *     the two shingle-set relations by doc id, costing O(candidates);
   *   - within-batch duplicates are deliberately out of scope here —
@@ -249,12 +250,8 @@ object IncrementalDedup {
     val exact = bPrep.select("doc_id", "h")
       .join(cPrep.select(col("h"), col("doc_id").as("c_id")), "h")
       .groupBy("doc_id").agg(min("c_id").as("exact_of"))
-    val cand = MinHashLSH.bands(bPrep, cfg).as("b")
-      .join(MinHashLSH.bands(cPrep, cfg).as("c"),
-        col("b.band_id") === col("c.band_id") &&
-          col("b.band_val") === col("c.band_val"))
-      .select(col("b.doc_id").as("b_id"), col("c.doc_id").as("c_id"))
-      .distinct()
+    val cand = MinHashLSH.bandPairs(MinHashLSH.bands(bPrep, cfg),
+      MinHashLSH.bands(cPrep, cfg), ordered = false, "b_id", "c_id").distinct()
     val near = cand
       .join(bPrep.select(col("doc_id").as("b_id"),
         col("shingles").as("sa")), "b_id")
@@ -306,12 +303,8 @@ object IncrementalDedup {
       .select("doc_id").distinct()
       .withColumn("is_exact", lit(1))
 
-    val cand = MinHashLSH.bands(bPrep, cfg).as("b")
-      .join(index.bands.as("c"),
-        col("b.band_id") === col("c.band_id") &&
-          col("b.band_val") === col("c.band_val"))
-      .select(col("b.doc_id").as("b_id"), col("c.doc_id").as("c_id"))
-      .distinct()
+    val cand = MinHashLSH.bandPairs(MinHashLSH.bands(bPrep, cfg),
+      index.bands, ordered = false, "b_id", "c_id").distinct()
     val near = cand
       .join(bPrep.select(col("doc_id").as("b_id"), col("shingles").as("sa")),
         "b_id")

@@ -162,14 +162,23 @@ object MinHashLSH {
     */
   def candidatePairs(shingled: DataFrame, cfg: Config = Config()): DataFrame = {
     val bandRel = bands(shingled, cfg)
-    val a = bandRel.as("a")
-    val b = bandRel.as("b")
-    a.join(b,
-        col("a.band_id") === col("b.band_id") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    bandPairs(bandRel, bandRel, ordered = true).distinct()
+  }
+
+  /** The band-key join every MinHash screen runs: the doc ids of `x`
+    * and `y` (named `a` and `b`) for each band in which their [[bands]]
+    * rows collide — a hash-bucket equi-join, never all-pairs. `ordered`
+    * keeps only a < b (the self-join form). A pair colliding in
+    * several bands repeats once per band.
+    */
+  private[graft] def bandPairs(x: DataFrame, y: DataFrame, ordered: Boolean,
+      a: String = "doc_a", b: String = "doc_b"): DataFrame = {
+    val key = col("x.band_id") === col("y.band_id") &&
+      col("x.band_val") === col("y.band_val")
+    x.as("x")
+      .join(y.as("y"),
+        if (ordered) key && col("x.doc_id") < col("y.doc_id") else key)
+      .select(col("x.doc_id").as(a), col("y.doc_id").as(b))
   }
 
   /** Near-duplicate pairs: LSH candidates verified by exact Jaccard over

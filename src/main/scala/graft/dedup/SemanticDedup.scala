@@ -77,13 +77,8 @@ object SemanticDedup {
       cents: Seq[graft.similarity.KMeans.Centroid],
       kmCfg: graft.similarity.KMeans.Config =
         graft.similarity.KMeans.Config()): DataFrame = {
-    val prep = vectors
-      .select(col(idCol).cast("long").as("vid"),
-        col(vecCol).cast("array<double>").as("v"))
-      .withColumn("nrm", norm2(col("v")))
-      .withColumn("q", transform(col("v"),
-        x => floor(x * lit(kmCfg.scale)).cast("double")))
-      .withColumn("qn", graft.expressions.DotProduct(col("q"), col("q")))
+    val prep = graft.similarity.KMeans.prepared(vectors, idCol, vecCol,
+      kmCfg.scale)
     val assigned = prep.select(col("vid"), col("v"), col("nrm"),
       graft.expressions.NearestCentroid(col("q"), col("qn"),
         cents.map(_.cid), cents.map(_.cn), cents.map(_.cv))
@@ -93,12 +88,9 @@ object SemanticDedup {
 
   private def prune(assignedRaw: DataFrame, threshold: Double): DataFrame = {
     val assigned = assignedRaw.persist(StorageLevel.MEMORY_AND_DISK)
-    val dropped = assigned.as("a")
-      .join(assigned.as("b"),
-        col("b.cell") === col("a.cell") && col("b.vid") < col("a.vid"))
-      .filter(cosineWithNorms(dot(col("a.v"), col("b.v")),
-        col("a.nrm"), col("b.nrm")) >= threshold)
-      .select(col("a.vid").as("vid")).distinct()
+    val dropped = cellPairs(assigned, assigned, _ < _)
+      .filter(col("cos_sim") >= threshold)
+      .select(col("src_id").as("vid")).distinct()
     assigned.join(dropped, Seq("vid"), "left_anti")
       .select(col("vid").as("vec_id"), col("cell"))
   }

@@ -1,5 +1,6 @@
 package graft.multimodal
 
+import graft.dedup.SimHash
 import graft.multimodal.MediaDecode.MediaRecord
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -12,10 +13,10 @@ import org.apache.spark.sql.functions._
   *
   * Pipeline: decode (the [[MediaDecode]] `mapPartitions` stage — a
   * JDK ImageIO raster read cannot be a Catalyst expression) →
-  * 64-bit aHash per image → byte-banded candidate join (the
-  * [[graft.dedup.SimHash]] shape: hamming ≤ 7 is GUARANTEED caught by
-  * the 8-band pigeonhole, no all-pairs comparison anywhere) →
-  * `bit_count(xor)` verify.
+  * 64-bit aHash per image → [[graft.dedup.SimHash.bytePairs]], the
+  * byte-banded candidate join and `bit_count(xor)` verify the text
+  * SimHash runs too (hamming ≤ 7 is GUARANTEED caught by the 8-band
+  * pigeonhole, no all-pairs comparison anywhere).
   *
   * Verification: golden ScalaTest (synthesized images — identical,
   * uniformly brightened, unrelated), like the other real-codec paths
@@ -185,59 +186,25 @@ object MediaDedup {
     * `minShared` near-duplicate frames (frame-pair hamming ≤
     * `maxHamming`) — re-encoded, re-cut, or watermarked copies whose
     * byte checksums (and often whole-payload hashes) all differ. The
-    * candidate join is the same byte-banded pigeonhole as
-    * [[nearDuplicatePairs]] (complete for hamming ≤ 7), KEYED ON THE
-    * HASH BYTES, so cost follows hash-bucket collisions, never
-    * |frames|². Output: (doc_a, doc_b, n_shared, min_hamming),
+    * frame pairs come from [[graft.dedup.SimHash.bytePairs]] over the
+    * 8 hash bytes, carrying `frame_idx` (complete for hamming ≤ 7),
+    * KEYED ON THE HASH BYTES, so cost follows hash-bucket collisions,
+    * never |frames|². Output: (doc_a, doc_b, n_shared, min_hamming),
     * doc_a < doc_b.
     */
   def videoNearDupPairs(frameHashes: DataFrame, maxHamming: Int = 3,
-      minShared: Int = 2): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 7,
-      "the 8-band pigeonhole guarantees completeness only for hamming <= 7")
-    def sr(v: org.apache.spark.sql.Column, s: org.apache.spark.sql.Column) =
-      call_function("shiftright", v, s)
-    val bytes = frameHashes
-      .select(col("doc_id"), col("frame_idx"), col("phash"),
-        explode(sequence(lit(0), lit(7))).as("byte_id"))
-      .withColumn("byte_val",
-        sr(col("phash"), col("byte_id") * 8).bitwiseAND(lit(255L)))
-    bytes.as("a").join(bytes.as("b"),
-        col("a.byte_id") === col("b.byte_id") &&
-          col("a.byte_val") === col("b.byte_val") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("a.frame_idx").as("fa"),
-        col("b.doc_id").as("doc_b"), col("b.frame_idx").as("fb"),
-        bit_count(col("a.phash").bitwiseXOR(col("b.phash"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
+      minShared: Int = 2): DataFrame =
+    SimHash.bytePairs(frameHashes, "phash", 8, maxHamming, "frame_idx")
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("n_shared"), min(col("hamming")).as("min_hamming"))
       .filter(col("n_shared") >= minShared)
-  }
 
   /** Near-duplicate pairs among hashed images: (doc_a, doc_b,
-    * hamming), doc_a < doc_b, hamming ≤ `maxHamming`. The candidate
-    * join is byte-banded — complete for `maxHamming` ≤ 7 by
-    * pigeonhole (8 bands, at most 7 differing bits can dirty at most
-    * 7 of them).
+    * hamming), doc_a < doc_b, hamming ≤ `maxHamming`, from
+    * [[graft.dedup.SimHash.bytePairs]] over the 8 hash bytes —
+    * complete for `maxHamming` ≤ 7 by pigeonhole (at most 7 differing
+    * bits can dirty at most 7 of the 8 bands).
     */
-  def nearDuplicatePairs(hashes: DataFrame, maxHamming: Int = 3): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 7,
-      "the 8-band pigeonhole guarantees completeness only for hamming <= 7")
-    def sr(v: org.apache.spark.sql.Column, s: org.apache.spark.sql.Column) =
-      call_function("shiftright", v, s)
-    val bytes = hashes.select(col("doc_id"), col("phash"),
-        explode(sequence(lit(0), lit(7))).as("byte_id"))
-      .withColumn("byte_val",
-        sr(col("phash"), col("byte_id") * 8).bitwiseAND(lit(255L)))
-    bytes.as("a").join(bytes.as("b"),
-        col("a.byte_id") === col("b.byte_id") &&
-          col("a.byte_val") === col("b.byte_val") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        bit_count(col("a.phash").bitwiseXOR(col("b.phash"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
+  def nearDuplicatePairs(hashes: DataFrame, maxHamming: Int = 3): DataFrame =
+    SimHash.bytePairs(hashes, "phash", 8, maxHamming)
 }

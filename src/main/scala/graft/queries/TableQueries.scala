@@ -1596,7 +1596,7 @@ object TableQueries {
     val q = graft.streaming.TableChangeFeed.readChanges(spark, src)
       .select("o_orderkey", "o_custkey")
       .writeStream
-      .format(classOf[graft.streaming.CowTableSinkProvider].getName)
+      .format("cowtable")
       .option("path", dst)
       .option("statsCols", "o_orderkey")
       .option("checkpointLocation", ckpt)

@@ -2,7 +2,6 @@ package graft.similarity
 
 import graft.similarity.Cosine._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Binary embedding quantization — a `bits`-bit SimHash fingerprint
@@ -80,32 +79,29 @@ object BinaryQuant {
       bit_count(a.getItem(w).bitwiseXOR(b.getItem(w))).cast("long")
     }.reduce(_ + _)
 
-  /** Hamming screen + exact-cosine re-rank over prepared frames:
-    * `coded` (vid, code), `normed` (vid, v, nrm), `qCoded`
-    * (q_id, qcode), `qNormed` (q_id, qv, qn). The shared core of the
-    * inline and the indexed search faces.
+  /** Hamming screen ([[Cosine.screened]]) + exact-cosine re-rank
+    * ([[Cosine.ranked]]) over prepared frames: `coded` (vid, code),
+    * `normed` (vid, v, nrm), `qCoded` (q_id, qcode), `qNormed`
+    * (q_id, qv, qn). Unlike the other quantized searches, floats join
+    * back for the survivors only. The shared core of the inline and
+    * the indexed search faces.
     */
   private def searchFrom(coded: DataFrame, normed: DataFrame,
       qCoded: DataFrame, qNormed: DataFrame, nWords: Int,
       candidates: Int, k: Int): DataFrame = {
     require(candidates >= k, "candidate pool must cover the final k")
-    val wH = Window.partitionBy("q_id").orderBy(asc("hamming"), asc("n_id"))
-    val cand = coded.join(qCoded, col("vid") =!= col("q_id"))
-      .select(col("q_id"), col("vid").as("n_id"),
-        hamming(col("qcode"), col("code"), nWords).as("hamming"))
-      .withColumn("hrank", row_number().over(wH))
-      .filter(col("hrank") <= candidates)
-      .drop("hrank")
+    val cand = screened(coded.join(qCoded, col("vid") =!= col("q_id"))
+        .select(col("q_id"), col("vid").as("n_id"),
+          hamming(col("qcode"), col("code"), nWords).as("hamming")),
+      "hamming", candidates)
     // floats re-enter for candidates only
-    val wC = Window.partitionBy("q_id").orderBy(desc("cos_sim"), asc("n_id"))
-    cand
-      .join(qNormed, Seq("q_id"))
-      .join(normed.withColumnRenamed("vid", "n_id"), Seq("n_id"))
-      .select(col("q_id"), col("n_id"), col("hamming"),
-        cosineWithNorms(dot(col("qv"), col("v")), col("qn"), col("nrm"))
-          .as("cos_sim"))
-      .withColumn("rank", row_number().over(wC))
-      .filter(col("rank") <= k)
+    ranked(cand
+        .join(qNormed, Seq("q_id"))
+        .join(normed.withColumnRenamed("vid", "n_id"), Seq("n_id"))
+        .select(col("q_id"), col("n_id"), col("hamming"),
+          cosineWithNorms(dot(col("qv"), col("v")), col("qn"), col("nrm"))
+            .as("cos_sim")),
+      "q_id", k)
       .select("q_id", "rank", "n_id", "hamming", "cos_sim")
   }
 

@@ -2,7 +2,6 @@ package graft.similarity
 
 import graft.similarity.Cosine._
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Exact top-k cosine neighbors by brute force — the correctness
@@ -30,13 +29,6 @@ object BruteForceKNN {
       .withColumn("nrm", norm2(col("v")))
     val q = prepared.filter(isQuery(col("vid")))
       .select(col("vid").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val pairs = prepared.join(q, col("vid") =!= col("q_id"))
-      .select(col("q_id"), col("vid").as("n_id"),
-        cosineWithNorms(dot(col("qv"), col("v")), col("qn"), col("nrm"))
-          .as("cos_sim"))
-    val w = Window.partitionBy("q_id").orderBy(desc("cos_sim"), asc("n_id"))
-    pairs.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "n_id", "cos_sim")
+    queryTopK(prepared.join(q, col("vid") =!= col("q_id")), k)
   }
 }

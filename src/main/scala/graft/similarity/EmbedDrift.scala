@@ -41,8 +41,7 @@ object EmbedDrift {
       vecCol: String): DataFrame =
     snapshot
       .select(col(labelCol).as("label"),
-        posexplode(transform(col(vecCol).cast("array<double>"),
-          x => floor(x * lit(Scale)).cast("double"))))
+        posexplode(KMeans.fixedPoint(col(vecCol), Scale)))
       .groupBy(col("label"), col("pos"))
       .agg(sum(col("col")).as("s"), count(lit(1)).as("cnt"))
 

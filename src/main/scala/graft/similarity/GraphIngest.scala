@@ -2,9 +2,7 @@ package graft.similarity
 
 import graft.similarity.Cosine._
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Incremental kNN-graph maintenance — the [[graft.dedup.IncrementalDedup]]
   * analogue for the graph family: fold a batch of NEW vectors into a
@@ -37,27 +35,23 @@ object GraphIngest {
   def merged(corpus: DataFrame, batch: DataFrame, standing: DataFrame,
       idCol: String, vecCol: String, k: Int, cents: DataFrame): DataFrame = {
     val asgC = IVFIndex.assignWithCentroids(corpus, idCol, vecCol, cents)
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val asgB = IVFIndex.assignWithCentroids(batch, idCol, vecCol, cents)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    def pairs(x: DataFrame, y: DataFrame): DataFrame =
-      x.as("a").join(y.as("b"),
-          col("b.cell") === col("a.cell") && col("b.vid") =!= col("a.vid"))
-        .select(col("a.vid").as("src_id"), col("b.vid").as("n_id"),
-          cosineWithNorms(dot(col("a.v"), col("b.v")),
-            col("a.nrm"), col("b.nrm")).as("cos_sim"))
-    // every pair a new vector participates in, both orientations —
-    // |batch|-proportional, never corpus×corpus
-    val inserts = pairs(asgC, asgB)
-      .unionByName(pairs(asgB, asgC))
-      .unionByName(pairs(asgB, asgB))
-    standing.select(col("src_id"), col("n_id"), col("cos_sim"))
-      .unionByName(inserts)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("src_id")
-          .orderBy(col("cos_sim").desc, col("n_id"))))
-      .filter(col("rank") <= k)
-      .select("src_id", "rank", "n_id", "cos_sim")
+    // every pair a new vector participates in — |batch|-proportional,
+    // never corpus×corpus. ONE corpus×batch join emits both
+    // orientations: the cosine is symmetric bit-for-bit (the dot folds
+    // a[i]·b[i] in index order, and sqrt·sqrt commutes), so the
+    // reversed row equals a batch×corpus join's, and the corpus is
+    // read once, with nothing to persist
+    val cross = cellPairs(asgC, asgB, _ =!= _)
+      .select(explode(array(
+        struct(col("src_id"), col("n_id"), col("cos_sim")),
+        struct(col("n_id").as("src_id"), col("src_id").as("n_id"),
+          col("cos_sim")))).as("p"))
+      .select("p.*")
+    topK(standing.select(col("src_id"), col("n_id"), col("cos_sim"))
+        .unionByName(cross)
+        .unionByName(cellPairs(asgB, asgB, _ =!= _)),
+      "src_id", k)
   }
 
   /** Frozen stride-quantizer centroid frame of `corpus` — the

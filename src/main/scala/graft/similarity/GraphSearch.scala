@@ -17,9 +17,10 @@ import org.apache.spark.sql.functions._
   *
   * Semantics chosen for oracle replay (and hence for determinism on
   * ANY cluster): a FIXED number of hops (not convergence-tested — the
-  * plan is static), frontier selection by (cos_sim DESC, n_id ASC) — a
-  * total order — and no visited-set exclusion (a candidate rescored on
-  * a later hop recomputes the identical double, so the final DISTINCT
+  * plan is static), frontier selection and the final ranking by
+  * [[Cosine.ranked]]'s (cos_sim DESC, n_id ASC) — a total order — and
+  * no visited-set exclusion (a candidate rescored on a later hop
+  * recomputes the identical double, so the final DISTINCT
   * collapses it; exclusion semantics would need per-query mutable
   * state, which is exactly what a declarative plan can't express and
   * an oracle can't replay). The DuckDB oracle unrolls the same hops
@@ -109,12 +110,10 @@ object GraphSearch {
           cosineWithNorms(dot(col("qv"), col("v")), col("qn"), col("nrm"))
             .as("cos_sim"))
 
-    val wf = Window.partitionBy("q_id").orderBy(desc("cos_sim"), asc("n_id"))
     var frontier = scored(entries)
     var seen = frontier
     for (_ <- 1 to cfg.hops) {
-      val beam = frontier.withColumn("rn", row_number().over(wf))
-        .filter(col("rn") <= cfg.beamWidth)
+      val beam = ranked(frontier, "q_id", cfg.beamWidth)
         .select(col("q_id"), col("n_id"))
       val cands = broadcast(beam)
         .join(und, col("n_id") === col("a"))
@@ -126,10 +125,7 @@ object GraphSearch {
     }
     // a candidate reached on several hops carries the identical double
     // each time — DISTINCT collapses it before the final ranking
-    seen.distinct()
-      .withColumn("rank", row_number().over(wf))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "n_id", "cos_sim")
+    topK(seen.distinct(), "q_id", k)
   }
 
   /** The self-contained form: build the coarse assignment from the

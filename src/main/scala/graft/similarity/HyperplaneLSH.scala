@@ -63,15 +63,8 @@ object HyperplaneLSH {
     val q = prepared.filter(isQuery(col("vid")))
       .select(col("vid").as("q_id"), col("v").as("qv"),
         col("nrm").as("qn"), col("bucket").as("qb"))
-    val pairs = prepared.join(q,
-        col("bucket") === col("qb") && col("vid") =!= col("q_id"))
-      .select(col("q_id"), col("vid").as("n_id"),
-        cosineWithNorms(dot(col("qv"), col("v")), col("qn"), col("nrm"))
-          .as("cos_sim"))
-    val w = Window.partitionBy("q_id").orderBy(desc("cos_sim"), asc("n_id"))
-    pairs.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "n_id", "cos_sim")
+    queryTopK(prepared.join(q,
+      col("bucket") === col("qb") && col("vid") =!= col("q_id")), k)
   }
 
   /** Multi-probe variant (Lv et al., VLDB 2007, transposed to
@@ -113,14 +106,7 @@ object HyperplaneLSH {
     val probes = q.select(col("q_id"), col("qv"), col("qn"),
         col("qb").as("pb"))
       .unionByName(flips)
-    val pairs = prepared.join(probes,
-        col("bucket") === col("pb") && col("vid") =!= col("q_id"))
-      .select(col("q_id"), col("vid").as("n_id"),
-        cosineWithNorms(dot(col("qv"), col("v")), col("qn"), col("nrm"))
-          .as("cos_sim"))
-    val w = Window.partitionBy("q_id").orderBy(desc("cos_sim"), asc("n_id"))
-    pairs.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "n_id", "cos_sim")
+    queryTopK(prepared.join(probes,
+      col("bucket") === col("pb") && col("vid") =!= col("q_id")), k)
   }
 }

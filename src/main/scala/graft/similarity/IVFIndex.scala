@@ -124,14 +124,7 @@ object IVFIndex {
       .withColumn("rn", row_number().over(wq))
       .filter(col("rn") <= nProbe)
       .select(col("q_id"), col("qv"), col("qn"), col("c_id").as("cell"))
-    val pairs = probes.join(assigned, "cell")
-      .filter(col("vid") =!= col("q_id"))
-      .select(col("q_id"), col("vid").as("n_id"),
-        cosineWithNorms(dot(col("qv"), col("v")), col("qn"), col("nrm"))
-          .as("cos_sim"))
-    val w = Window.partitionBy("q_id").orderBy(desc("cos_sim"), asc("n_id"))
-    pairs.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "n_id", "cos_sim")
+    queryTopK(probes.join(assigned, "cell").filter(col("vid") =!= col("q_id")),
+      k)
   }
 }

@@ -4,7 +4,6 @@ import graft.expressions.{CentroidDistMap, DotProduct, FloorResidual}
 import graft.similarity.Cosine._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, MapData, SQLOrderingUtil}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
@@ -132,13 +131,7 @@ object IvfPq {
   /** (vid, v, nrm, q, qn): the quantized prep every stage scans. */
   private[similarity] def prepare(vectors: DataFrame, idCol: String, vecCol: String,
       cfg: Config): DataFrame =
-    vectors
-      .select(col(idCol).cast("long").as("vid"),
-        col(vecCol).cast("array<double>").as("v"))
-      .withColumn("nrm", norm2(col("v")))
-      .withColumn("q", transform(col("v"),
-        x => floor(x * lit(cfg.pq.kmCfg.scale)).cast("double")))
-      .withColumn("qn", DotProduct(col("q"), col("q")))
+    KMeans.prepared(vectors, idCol, vecCol, cfg.pq.kmCfg.scale)
 
   // floored residual to a cell's centroid — floor re-enters the
   // fixed-point domain (doc comment above) so the residual PQ
@@ -341,30 +334,19 @@ object IvfPq {
       CentroidDistMap.table(q, qn, ids, norms, flat, dim)
   }
 
-  /** ADC screen over probed cells + exact-cosine re-rank — the search
-    * tail shared by the train-and-search and the served-index paths.
+  /** ADC screen over probed cells ([[ProductQuant.adc]]) +
+    * [[Cosine.screenRerank]] — the search tail shared by the
+    * train-and-search and the served-index paths.
     */
   private[similarity] def search(codedDocs: DataFrame, probeSet: DataFrame, k: Int,
       cfg: Config): DataFrame = {
     // ADC over probed cells only: broadcast HASH join on the cell id —
     // the corpus never meets a query outside its probed cells
-    val dist = (0 until cfg.pq.m)
-      .map(s => element_at(col(s"lut$s"), col(s"c$s")))
-      .reduceLeft(_ + _)
-    val screened = codedDocs.join(broadcast(probeSet), "cell")
+    val cands = codedDocs.join(broadcast(probeSet), "cell")
       .filter(col("vid") =!= col("q_id"))
       .select(col("q_id"), col("vid").as("n_id"), col("pv"), col("pn"),
-        col("v"), col("nrm"), dist.as("dist_pq"))
-    val ws = Window.partitionBy("q_id").orderBy(asc("dist_pq"), asc("n_id"))
-    val cands = screened.withColumn("srank", row_number().over(ws))
-      .filter(col("srank") <= cfg.pq.screenK)
-      .select(col("q_id"), col("n_id"), col("dist_pq"),
-        cosineWithNorms(dot(col("pv"), col("v")), col("pn"), col("nrm"))
-          .as("cos_sim"))
-    val w = Window.partitionBy("q_id").orderBy(desc("cos_sim"), asc("n_id"))
-    cands.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "n_id", "cos_sim", "dist_pq")
+        col("v"), col("nrm"), ProductQuant.adc(cfg.pq.m).as("dist_pq"))
+    screenRerank(cands, "dist_pq", cfg.pq.screenK, k)
   }
 
   /** Top-k neighbors per query: probe `nProbe` coarse cells, ADC-screen

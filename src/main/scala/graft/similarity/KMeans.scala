@@ -86,13 +86,35 @@ object KMeans {
     acc
   }
 
-  /** Quantized frame: (vid, q: array<double> of integers, qn: double). */
-  private[similarity] def quantize(vectors: DataFrame, idCol: String, vecCol: String,
-      cfg: Config): DataFrame =
+  /** The fixed-point format every trainer and quantized scorer reads:
+    * each component of `v` as `floor(x · scale)`, held as an
+    * integer-valued double.
+    */
+  private[graft] def fixedPoint(v: Column, scale: Double): Column =
+    transform(v.cast("array<double>"),
+      x => floor(x * lit(scale)).cast("double"))
+
+  /** Quantized frame: (vid, carry…, q: array<double> of integers,
+    * qn: double).
+    */
+  private[similarity] def quantize(vectors: DataFrame, idCol: String,
+      vecCol: String, cfg: Config, carry: Column*): DataFrame =
+    vectors
+      .select(col(idCol).cast("long").as("vid") +: carry :+
+        fixedPoint(col(vecCol), cfg.scale).as("q"): _*)
+      .withColumn("qn", DotProduct(col("q"), col("q")))
+
+  /** (vid, v, nrm, q, qn): `v` as array<double> with its squared norm,
+    * and its [[fixedPoint]] form `q` with `q`'s — the prep the
+    * quantized scorers scan.
+    */
+  private[graft] def prepared(vectors: DataFrame, idCol: String,
+      vecCol: String, scale: Double): DataFrame =
     vectors
       .select(col(idCol).cast("long").as("vid"),
-        transform(col(vecCol).cast("array<double>"),
-          x => floor(x * lit(cfg.scale)).cast("double")).as("q"))
+        col(vecCol).cast("array<double>").as("v"))
+      .withColumn("nrm", DotProduct(col("v"), col("v")))
+      .withColumn("q", fixedPoint(col("v"), scale))
       .withColumn("qn", DotProduct(col("q"), col("q")))
 
   /** The k smallest-id (vid, quantized vector) rows — one TakeOrdered

@@ -2,7 +2,6 @@ package graft.similarity
 
 import graft.similarity.Cosine._
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -22,11 +21,12 @@ import org.apache.spark.storage.StorageLevel
   * cells are never compared — the same stated recall trade-off as
   * SemDeDup, and exactly what NN-descent's iterative refinement is for.
   *
-  * The per-source top-k is a rank window ordered by (cos_sim DESC, n_id)
-  * — a total order, so results are partitioning-invariant. Spark plans
-  * it as WindowGroupLimit: each map task keeps only its local top-k per
-  * source BEFORE the shuffle, so the exchange carries at most k rows per
-  * vector, not the full Σ|cell|² candidate set.
+  * The pairs are [[Cosine.cellPairs]] and the per-source top-k is
+  * [[Cosine.topK]] (cos_sim DESC, n_id — a total order, so results are
+  * partitioning-invariant). Spark plans it as WindowGroupLimit: each
+  * map task keeps only its local top-k per source BEFORE the shuffle,
+  * so the exchange carries at most k rows per vector, not the full
+  * Σ|cell|² candidate set.
   */
 object KnnGraph {
 
@@ -69,16 +69,6 @@ object KnnGraph {
 
   private def rankCellPairs(assignedRaw: DataFrame, k: Int): DataFrame = {
     val assigned = assignedRaw.persist(StorageLevel.MEMORY_AND_DISK)
-    assigned.as("a")
-      .join(assigned.as("b"),
-        col("b.cell") === col("a.cell") && col("b.vid") =!= col("a.vid"))
-      .select(col("a.vid").as("src_id"), col("b.vid").as("n_id"),
-        cosineWithNorms(dot(col("a.v"), col("b.v")),
-          col("a.nrm"), col("b.nrm")).as("cos_sim"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("src_id")
-          .orderBy(col("cos_sim").desc, col("n_id"))))
-      .filter(col("rank") <= k)
-      .select("src_id", "rank", "n_id", "cos_sim")
+    topK(cellPairs(assigned, assigned, _ =!= _), "src_id", k)
   }
 }

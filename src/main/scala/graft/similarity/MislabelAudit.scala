@@ -35,12 +35,8 @@ object MislabelAudit {
     */
   def audit(vectors: DataFrame, idCol: String, vecCol: String,
       labelCol: String, cfg: KMeans.Config = KMeans.Config()): DataFrame = {
-    val prep = vectors
-      .select(col(idCol).cast("long").as("vid"),
-        col(labelCol).cast("long").as("lbl"),
-        transform(col(vecCol).cast("array<double>"),
-          x => floor(x * lit(cfg.scale)).cast("double")).as("q"))
-      .withColumn("qn", DotProduct(col("q"), col("q")))
+    val prep = KMeans.quantize(vectors, idCol, vecCol, cfg,
+      col(labelCol).cast("long").as("lbl"))
     // one (label, pos) aggregate; |labels|·dim rows to the driver
     val cents = prep
       .select(col("lbl"), posexplode(col("q")).as(Seq("pos", "x")))

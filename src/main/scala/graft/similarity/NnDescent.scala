@@ -3,7 +3,6 @@ package graft.similarity
 import graft.similarity.Cosine._
 import graft.text.TextFeatures
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -30,8 +29,8 @@ import org.apache.spark.storage.StorageLevel
   * vertex; seeds are a self-join on the hash bucket with E[bucket
   * size] = N/`seedBuckets` (grow `seedBuckets` ∝ N to keep it
   * bounded, same rule as IVF cell count); re-scoring joins candidates
-  * to the vector table twice on ids; the final top-k is the
-  * (cos DESC, n_id) rank window [[KnnGraph]] uses — WindowGroupLimit
+  * to the vector table twice on ids; the final top-k is
+  * [[Cosine.topK]], the ranking [[KnnGraph]] uses — WindowGroupLimit
   * keeps ≤ k rows per source per partition ahead of the shuffle.
   * Nothing is all-pairs, nothing collects to the driver.
   */
@@ -66,18 +65,14 @@ object NnDescent {
         col("s2.sb") === col("s1.sb") && col("s2.vid") =!= col("s1.vid"))
       .select(col("s1.vid").as("a"), col("s2.vid").as("b"))
     val candidates = undirected.union(twoHop).union(seeds).distinct()
-    candidates
-      .join(prep, col("a") === col("vid"))
-      .select(col("a"), col("b"), col("v").as("av"), col("nrm").as("an"))
-      .join(prep, col("b") === col("vid"))
-      .select(col("a").as("src_id"), col("b").as("n_id"),
-        cosineWithNorms(dot(col("av"), col("v")),
-          col("an"), col("nrm")).as("cos_sim"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("src_id")
-          .orderBy(col("cos_sim").desc, col("n_id"))))
-      .filter(col("rank") <= k)
-      .select("src_id", "rank", "n_id", "cos_sim")
+    topK(candidates
+        .join(prep, col("a") === col("vid"))
+        .select(col("a"), col("b"), col("v").as("av"), col("nrm").as("an"))
+        .join(prep, col("b") === col("vid"))
+        .select(col("a").as("src_id"), col("b").as("n_id"),
+          cosineWithNorms(dot(col("av"), col("v")),
+            col("an"), col("nrm")).as("cos_sim")),
+      "src_id", k)
   }
 
   /** [[KnnGraph.build]] followed by one [[refineOver]] round. */

@@ -3,7 +3,6 @@ package graft.similarity
 import graft.expressions.DotProduct
 import graft.similarity.Cosine._
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Product-quantization (PQ) nearest-neighbor search: the standard
@@ -23,9 +22,9 @@ import org.apache.spark.sql.functions._
   * (`map(cid → dist)` per subspace, built from the same trained
   * centroids), so scoring a candidate is `m` map lookups and an add
   * chain — no vector arithmetic per pair at all. The top `screenK`
-  * survivors re-rank by EXACT float cosine (the [[ScalarQuant]]
-  * discipline: reported similarities carry no quantization error, only
-  * recall can move).
+  * survivors re-rank by EXACT float cosine ([[Cosine.screenRerank]],
+  * the [[ScalarQuant]] discipline: reported similarities carry no
+  * quantization error, only recall can move).
   *
   * Determinism: training inherits [[KMeans]]'s fixed-point exactness
   * per subspace (quantize-then-slice ≡ slice-then-quantize — floor is
@@ -59,17 +58,12 @@ object ProductQuant {
     */
   def train(vectors: DataFrame, idCol: String, vecCol: String, dim: Int,
       cfg: Config = Config()): Seq[Seq[KMeans.Centroid]] = {
-    val scale = cfg.kmCfg.scale
-    val prep = vectors
-      .select(col(idCol).cast("long").as("vid"),
-        transform(col(vecCol).cast("array<double>"),
-          x => floor(x * lit(scale)).cast("double")).as("q"))
-      .persist()
+    val prep = KMeans.quantize(vectors, idCol, vecCol, cfg.kmCfg).persist()
     try trainPrepared(prep, dim, cfg)
     finally prep.unpersist(blocking = false)
   }
 
-  /** [[train]] over an existing (vid, q: quantized array<double>)
+  /** [[train]] over an existing (vid, q: quantized array<double>, …)
     * frame — lets [[topK]] share one persisted prep with the search.
     */
   private[similarity] def trainPrepared(prep: DataFrame, dim: Int,
@@ -100,18 +94,12 @@ object ProductQuant {
       isQuery: Column => Column, k: Int, cfg: Config = Config()): DataFrame = {
     require(cfg.screenK >= k, "screenK must be >= k")
     val sub = dim / cfg.m
-    val scale = cfg.kmCfg.scale
 
     // ONE persisted quantized frame feeds both the trainer's iteration
     // scans and the search's code/LUT projections (the trainPrepared
     // doc-comment contract).
-    val prep = vectors
-      .select(col(idCol).cast("long").as("vid"),
-        col(vecCol).cast("array<double>").as("v"))
-      .withColumn("nrm", norm2(col("v")))
-      .withColumn("q", transform(col("v"),
-        x => floor(x * lit(scale)).cast("double")))
-      .persist()
+    val prep = KMeans.prepared(vectors, idCol, vecCol, cfg.kmCfg.scale)
+      .drop("qn").persist()
     val books = trainPrepared(prep, dim, cfg)
     def qs(s: Int): Column = slice(col("q"), s * sub + 1, sub)
     def qns(s: Int): Column = DotProduct(qs(s), qs(s))
@@ -135,22 +123,16 @@ object ProductQuant {
               .as(s"lut$s")
           }: _*)
 
-    // ADC: m map lookups + a left-assoc add chain per candidate
-    val dist = (0 until cfg.m)
-      .map(s => element_at(col(s"lut$s"), col(s"c$s")))
-      .reduceLeft(_ + _)
-    val screened = coded.join(broadcast(luts), col("vid") =!= col("q_id"))
+    val cands = coded.join(broadcast(luts), col("vid") =!= col("q_id"))
       .select(col("q_id"), col("vid").as("n_id"), col("pv"), col("pn"),
-        col("v"), col("nrm"), dist.as("dist_pq"))
-    val ws = Window.partitionBy("q_id").orderBy(asc("dist_pq"), asc("n_id"))
-    val cands = screened.withColumn("srank", row_number().over(ws))
-      .filter(col("srank") <= cfg.screenK)
-      .select(col("q_id"), col("n_id"), col("dist_pq"),
-        cosineWithNorms(dot(col("pv"), col("v")), col("pn"), col("nrm"))
-          .as("cos_sim"))
-    val w = Window.partitionBy("q_id").orderBy(desc("cos_sim"), asc("n_id"))
-    cands.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "n_id", "cos_sim", "dist_pq")
+        col("v"), col("nrm"), adc(cfg.m).as("dist_pq"))
+    screenRerank(cands, "dist_pq", cfg.screenK, k)
   }
+
+  /** The asymmetric distance of a coded candidate to a query: `m` LUT
+    * lookups (`lut_s[c_s]`) summed left to right over the subspaces.
+    */
+  private[similarity] def adc(m: Int): Column =
+    (0 until m).map(s => element_at(col(s"lut$s"), col(s"c$s")))
+      .reduceLeft(_ + _)
 }

@@ -3,7 +3,6 @@ package graft.similarity
 import graft.expressions.DotProduct
 import graft.similarity.Cosine._
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Int8 scalar-quantized nearest-neighbor screen with exact re-ranking —
@@ -18,8 +17,10 @@ import org.apache.spark.sql.functions._
   * production scale, runs over a corpus representation 4× narrower than
   * float32 (the scan is bandwidth-bound; int8 codes are also what a GPU
   * or SIMD kernel would consume). The top `screenK` survivors per query
-  * are re-ranked by EXACT float cosine, so reported similarities carry
-  * no quantization error — only recall can differ from brute force.
+  * are re-ranked by EXACT float cosine ([[Cosine.screenRerank]], the
+  * tail [[ProductQuant]] and [[IvfPq]] share), so reported similarities
+  * carry no quantization error — only recall can differ from brute
+  * force.
   *
   * Distances use the `|q|² + |d|² − 2·q·d` expansion: norms are computed
   * once per vector, the cross term is one codegen'd [[DotProduct]], and
@@ -71,21 +72,12 @@ object ScalarQuant {
     val queries = quantized.filter(isQuery(col("vid")))
       .select(col("vid").as("q_id"), col("v").as("pv"), col("nrm").as("pn"),
         col("qv").as("pqv"), col("qn2").as("pqn2"))
-    val screened = quantized.join(broadcast(queries), col("vid") =!= col("q_id"))
+    val cands = quantized.join(broadcast(queries), col("vid") =!= col("q_id"))
       .select(col("q_id"), col("vid").as("n_id"), col("pv"), col("pn"),
         col("v"), col("nrm"),
         (col("pqn2") + col("qn2") -
           lit(2.0) * DotProduct(col("pqv"), col("qv"))).cast("long")
           .as("dist_q"))
-    val ws = Window.partitionBy("q_id").orderBy(asc("dist_q"), asc("n_id"))
-    val cands = screened.withColumn("srank", row_number().over(ws))
-      .filter(col("srank") <= cfg.screenK)
-      .select(col("q_id"), col("n_id"), col("dist_q"),
-        cosineWithNorms(dot(col("pv"), col("v")), col("pn"), col("nrm"))
-          .as("cos_sim"))
-    val w = Window.partitionBy("q_id").orderBy(desc("cos_sim"), asc("n_id"))
-    cands.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "n_id", "cos_sim", "dist_q")
+    screenRerank(cands, "dist_q", cfg.screenK, k)
   }
 }

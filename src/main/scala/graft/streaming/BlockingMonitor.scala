@@ -22,8 +22,9 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * `BlockingMonitorSpec`). Per batch:
   *
   *   - Δcand = band collisions WITHIN the batch ∪ batch × standing
-  *     band index (the [[graft.dedup.IncrementalDedup]] screen shape:
-  *     the standing side never re-shingles);
+  *     band index, both from [[graft.dedup.MinHashLSH.bandPairs]] (the
+  *     [[graft.dedup.IncrementalDedup]] screen shape: the standing side
+  *     never re-shingles);
   *   - Δtruth/Δhit/Δcand_s analogously, against the standing SAMPLE
   *     shingle sets only (brute force stays bounded by `sampleMax`,
   *     exactly like the batch audit).
@@ -88,16 +89,11 @@ object BlockingMonitor {
     def fold(batch: DataFrame): BlockState = {
       val sh = MinHashLSH.docShingles(batch, idCol, textCol, cfg).persist()
       val b = MinHashLSH.bands(sh, cfg).persist()
-      val bandKey = (x: String, y: String) =>
-        col(s"$x.band_id") === col(s"$y.band_id") &&
-          col(s"$x.band_val") === col(s"$y.band_val")
-      val within = b.as("x").join(b.as("y"),
-          bandKey("x", "y") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+      val within = MinHashLSH.bandPairs(b, b, ordered = true)
       val cross = standingBands.current.map { old =>
-        b.as("x").join(old.as("y"), bandKey("x", "y"))
-          .select(least(col("x.doc_id"), col("y.doc_id")).as("doc_a"),
-            greatest(col("x.doc_id"), col("y.doc_id")).as("doc_b"))
+        MinHashLSH.bandPairs(b, old, ordered = false)
+          .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
+            greatest(col("doc_a"), col("doc_b")).as("doc_b"))
       }
       val cand = cross.fold(within)(within.unionByName(_)).distinct().persist()
 

@@ -133,7 +133,7 @@ object TableChangeFeed {
       whereKeys: Seq[String] = Seq.empty): DataFrame = {
     val snap = TxLog.snapshotPlanned(spark, path).meta
     val r0 = spark.readStream
-      .format(classOf[TableChangeFeedProvider].getName)
+      .format("cowtable-changes")
       .option("path", path)
       .option("startingVersion", startingVersion.toString)
       .option("schemaDDL", snap.schemaDDL)

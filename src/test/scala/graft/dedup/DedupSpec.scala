@@ -59,6 +59,45 @@ class DedupSpec extends AnyFunSuite {
     assert(sh.map(t => (t._1, t._2)).toSet.subsetOf(exact))
   }
 
+  /** (doc_a, doc_b, hamming) rows of one case each (the cases share
+    * bits, so cross-case pairs exist too), as tuples.
+    */
+  private def hammingPairs(df: org.apache.spark.sql.DataFrame) =
+    df.select("doc_a", "doc_b", "hamming").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+      .filter(p => p._1 / 2 == p._2 / 2).toSet
+
+  /** Pairs of (doc_id, hash) rows: docs 2k and 2k+1 are case k. */
+  private def hashPairs(name: String, cases: Seq[(Long, Long)]) = {
+    import spark.implicits._
+    cases.zipWithIndex.flatMap { case ((a, b), i) =>
+      Seq((2L * i, a), (2L * i + 1, b))
+    }.toDF("doc_id", name)
+  }
+
+  test("byte-band join is complete to 7 bits on 64-bit hashes, sign bit included") {
+    val h = 0x0123456789abcdefL
+    val sevenBytes = (0 until 7).map(j => 1L << (9 * j)).reduce(_ | _)
+    val eightBytes = sevenBytes | (1L << 63)
+    val hashes = hashPairs("phash", Seq(
+      h -> (h | (1L << 63)),             // only bit 63: a negative hash
+      (h | (1L << 63)) -> ((h | (1L << 63)) ^ sevenBytes), // 7 bytes
+      h -> (h ^ eightBytes)))            // 8 bits, one per byte: too far
+    assert(hammingPairs(SimHash.bytePairs(hashes, "phash", 8, 7)) ===
+      Set((0L, 1L, 1), (2L, 3L, 7)))
+  }
+
+  test("simhash byte-band join is complete to 3 bits on 32-bit signatures") {
+    val h = 0x12345678L
+    val threeBytes = (0 until 3).map(j => 1L << (9 * j)).reduce(_ | _)
+    val sigs = hashPairs("simhash", Seq(
+      h -> (h | (1L << 31)),             // only the top bit
+      (h | (1L << 31)) -> ((h | (1L << 31)) ^ threeBytes), // 3 bytes
+      h -> (h ^ threeBytes ^ (1L << 31)))) // 4 bits, one per byte
+    assert(hammingPairs(SimHash.nearDuplicatePairs(sigs, 3)) ===
+      Set((0L, 1L, 1), (2L, 3L, 3)))
+  }
+
   test("containment flags a quoted-whole doc that resemblance misses") {
     import spark.implicits._
     // B quotes ALL of A inside much more of its own content: every

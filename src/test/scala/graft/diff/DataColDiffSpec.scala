@@ -176,30 +176,8 @@ class DataColDiffSpec extends AnyFunSuite {
   }
 
   test("summary: one SQL execution; stats is local and outlives the cache") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
-      SparkListenerJobStart}
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-    import org.apache.spark.sql.graft.ListenerBridge
     import spark.implicits._
-    val sc = spark.sparkContext
-    final class Counter extends SparkListener {
-      @volatile var jobs = 0
-      @volatile var rootExecutions = 0
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs += 1
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart
-            if s.rootExecutionId.forall(_ == s.executionId) =>
-          rootExecutions += 1
-        case _ =>
-      }
-    }
-    def counted[T](body: => T): (T, Counter) = {
-      ListenerBridge.drain(sc)
-      val c = new Counter
-      sc.addSparkListener(c)
-      try { val r = body; ListenerBridge.drain(sc); (r, c) }
-      finally sc.removeSparkListener(c)
-    }
+    def counted[T](body: => T) = graft.JobCount.of(spark)(body)
     val s1 = Seq((1L, "a", "x"), (2L, "b", "y"), (3L, "c", "z")).toDF("id", "u", "v")
     val s2 = Seq((1L, "a", "x"), (2L, "B", "Y"), (4L, "d", "w")).toDF("id", "u", "v")
     val (res, onDiff) = counted(DataColDiff.computeDataframeDiff(s1, s2, Seq("id"))

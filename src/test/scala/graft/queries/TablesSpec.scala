@@ -1,10 +1,8 @@
 package graft.queries
 
-import graft.SparkTestSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.{JobCount, SparkTestSession}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ListenerBridge
 import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -96,20 +94,11 @@ class TablesSpec extends AnyFunSuite {
   test("Tables.load starts no Spark job") {
     withDir { dir =>
       val names = writeLayouts(dir)
-      val sc = spark.sparkContext
-      @volatile var jobs = 0
-      val counter = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = jobs += 1
-      }
-      ListenerBridge.drain(sc)
-      sc.addSparkListener(counter)
-      try {
+      assert(JobCount.jobs(spark) {
         sfTables.foreach(Tables.load(spark, sf, _))
         names.foreach(Tables.load(spark, dir, _))
         Tables.loadEvents(spark, sf)
-        ListenerBridge.drain(sc)
-      } finally sc.removeSparkListener(counter)
-      assert(jobs === 0)
+      } === 0)
     }
   }
 

@@ -1,9 +1,7 @@
 package graft.similarity
 
-import graft.SparkTestSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.{JobCount, SparkTestSession}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.graft.ListenerBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Serving a query batch builds its probe set on the driver and
@@ -28,20 +26,7 @@ class IvfPqServeJobsSpec extends AnyFunSuite {
         Array.tabulate(dim)(d => math.sin(i * 31 + d * 7))))
       .toDF("vec_id", "embedding")
 
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    @volatile var jobs = 0
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs += 1
-    }
-    ListenerBridge.drain(sc)
-    sc.addSparkListener(counter)
-    try {
-      body
-      ListenerBridge.drain(sc)
-    } finally sc.removeSparkListener(counter)
-    jobs
-  }
+  private def jobsOf(body: => Unit): Int = JobCount.jobs(spark)(body)
 
   private def persisted: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet

@@ -1,10 +1,8 @@
 package graft.similarity
 
-import graft.SparkTestSession
+import graft.{JobCount, SparkTestSession}
 import graft.queries.Tables
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ListenerBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Lloyd's training launches one seed collect plus one RDD pass per
@@ -18,20 +16,7 @@ class TrainJobsSpec extends AnyFunSuite {
   private lazy val emb =
     Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
 
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    @volatile var jobs = 0
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs += 1
-    }
-    ListenerBridge.drain(sc)
-    sc.addSparkListener(counter)
-    try {
-      body
-      ListenerBridge.drain(sc)
-    } finally sc.removeSparkListener(counter)
-    jobs
-  }
+  private def jobsOf(body: => Unit): Int = JobCount.jobs(spark)(body)
 
   /** IvfPq's persisted prep, materialized before counting. */
   private def withPrep(cfg: IvfPq.Config)(body: org.apache.spark.sql.DataFrame => Unit): Unit = {

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkTestSession
 import graft.tables.{CowTable, TxLog}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -35,6 +36,25 @@ class CowTableSinkSpec extends AnyFunSuite {
       .option("checkpointLocation", ckpt)
     val q = appId.fold(w)(a => w.option("appId", a)).start()
     try q.processAllAvailable() finally q.stop()
+  }
+
+  test("format(\"cowtable\") finds the sink by its registered short name") {
+    withDir { dir =>
+      val dst = dir.getAbsolutePath + "/dst"
+      val in = MemoryStream[(Long, Long, String)](spark)
+      val q = in.toDF().toDF("k", "v", "s").writeStream
+        .format("cowtable")
+        .option("path", dst)
+        .option("checkpointLocation", dir.getAbsolutePath + "/ck")
+        .start()
+      try {
+        in.addData((1L, 10L, "a"), (2L, 20L, "b")); q.processAllAvailable()
+        in.addData((3L, 30L, "c")); q.processAllAvailable()
+      } finally q.stop()
+      assert(CowTable.read(spark, dst).orderBy("k").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq ===
+        Seq((1L, 10L, "a"), (2L, 20L, "b"), (3L, 30L, "c")))
+    }
   }
 
   test("table-to-table pipe: all rows land, replays no-op, waves flow") {

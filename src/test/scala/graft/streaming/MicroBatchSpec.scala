@@ -162,6 +162,7 @@ class MicroBatchSpec extends AnyFunSuite {
       2, cents).localCheckpoint(true)
     val boot = checkpointRdds() -- before
     assert(boot.size >= 3)
+    val persistedAtBoot = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val holder = new GraphIngestStream.GraphHolder(corpus, graph)
     val stream = MemoryStream[(Long, Seq[Float])](spark)
     val q = GraphIngestStream.maintain(
@@ -178,6 +179,10 @@ class MicroBatchSpec extends AnyFunSuite {
     assert(boot.subsetOf(live), "the caller's bootstrap frames were released")
     assert((live -- boot).size === 2,
       s"expected one live graph + one live corpus generation, found ${live -- boot}")
+    // the merges cached nothing: the only RDDs persisted since the
+    // bootstrap are those two generations
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet --
+      persistedAtBoot === live -- boot)
     assert(holder.corpus.count() === 7L)
     Seq(holder.graph, holder.corpus).foreach(CheckpointBridge.release)
     assert(checkpointRdds() -- before === boot)

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.SparkTestSession
 import graft.tables.{CowTable, TxLog}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -41,6 +42,33 @@ class TableChangeFeedSpec extends AnyFunSuite {
         into.synchronized { into ++= rows(b) }; ()
       }.start()
     try q.processAllAvailable() finally q.stop()
+  }
+
+  test("format(\"cowtable-changes\") finds the source by its registered short name") {
+    withDir { dir =>
+      val t = dir.getAbsolutePath + "/t"
+      val in = MemoryStream[(Long, Long, String)](spark)
+      val w = in.toDF().toDF("k", "v", "s").writeStream
+        .format(classOf[CowTableSinkProvider].getName)
+        .option("path", t)
+        .option("checkpointLocation", dir.getAbsolutePath + "/ck0")
+        .start()
+      try {
+        in.addData((1L, 10L, "a"), (2L, 20L, "b")); w.processAllAvailable()
+        in.addData((3L, 30L, "c")); w.processAllAvailable()
+      } finally w.stop()
+      val got = scala.collection.mutable.Set
+        .empty[(Long, Long, String, Long, String)]
+      drain(spark.readStream.format("cowtable-changes").option("path", t)
+        .load(), dir.getAbsolutePath + "/ck1", got)
+      val want = scala.collection.mutable.Set
+        .empty[(Long, Long, String, Long, String)]
+      drain(TableChangeFeed.readChanges(spark, t),
+        dir.getAbsolutePath + "/ck2", want)
+      assert(got.map(r => (r._1, r._2, r._3)) ===
+        Set((1L, 10L, "a"), (2L, 20L, "b"), (3L, 30L, "c")))
+      assert(got === want)
+    }
   }
 
   test("streamed feed == concatenated changesAt across commits") {
